@@ -31,13 +31,15 @@ so  rows_in = dropped_quality + dropped_contaminated + dropped_exact_dup
 Plan shape: the expensive extraction subtree feeding ``curate`` is
 referenced on BOTH sides of the near-dup prune (survivors → minhash →
 drops, then drops joined back).  Spark has no cross-branch subplan reuse
-(PLANS.md), so by default the flagged frame is materialized once
-(``materialize="local_checkpoint"``) before the branch — extraction runs
-exactly once per curation (plan-shape-tested: zero MapInArrow in the
-final DAG, the single extraction pass lives in the checkpoint job).  In
-production the equivalent is curating from the committed sink table
-(pipeline/sink.py); pass ``materialize="none"`` when the input is already
-a materialized table.
+(PLANS.md), so by default the flagged frame is pinned once
+(``materialize="disk"``) before the branch — extraction runs exactly
+once per curation (plan-shape-tested under ``"local_checkpoint"``: zero
+MapInArrow in the final DAG, the single extraction pass lives in the
+checkpoint job).  ``materialize`` is the only pin knob: the branching
+rewrite stages' input pins follow it (``curate``).  In production the
+equivalent is curating from the committed sink table (pipeline/sink.py);
+pass ``materialize="none"`` when the input is already a materialized
+table.
 
 At 100 TB: the wide ops are one fingerprint window (or groupBy), the
 minhash bucket shuffle, and the pair anti-join — all keyed, all
@@ -615,12 +617,31 @@ def _row_key(key_cols: tuple[str, ...]):
     return F.concat_ws("\x1f", *[F.col(c).cast("string") for c in key_cols])
 
 
-def _stage_pin(df: DataFrame, mode: str) -> tuple[DataFrame, list[DataFrame]]:
-    """Materialize a branching stage's input per ``mode``:
+_MATERIALIZE_MODES = ("disk", "local_checkpoint", "persist", "none")
 
-    - ``"disk"`` — ``persist(DISK_ONLY)``: fault-tolerant (lineage kept,
-      lost blocks recompute), release via the returned pins handle.  The
-      cluster-safe default.
+# surviving docs above which minhash_carry="auto" picks the rehash plan
+# (measured crossover, BENCH round 5: the rehash plan's fixed costs —
+# extra python pass + candidate joins — lose ~1.3-2.6 s at 5k docs,
+# while the arrays plan's bucket exchange carries bands × the shingle
+# volume, ~50 GB of spill at 1M docs × 13 bands)
+CARRY_THRESHOLD = 100_000
+
+
+def _stage_pin(
+    df: DataFrame, mode: str | None
+) -> tuple[DataFrame, list[DataFrame]]:
+    """Pin ``df`` per ``mode`` (a ``materialize`` mode, or None = no
+    pin); returns (frame, release pins):
+
+    - ``"disk"`` — lazy ``persist(DISK_ONLY)``: fault-tolerant (lineage
+      kept, lost blocks recompute), released via the returned pins.  The
+      cluster-safe default.  DISK_ONLY because the pinned frames carry
+      the full text: a deserialized on-heap copy of a large corpus is
+      GBs of objects (measured: a 2.7 GB-text corpus OOMs an 8 GB local
+      heap under MEMORY_AND_DISK unrolling, and reads back from disk in
+      seconds).
+    - ``"persist"`` — lazy ``persist(MEMORY_AND_DISK)`` (small corpora /
+      interactive), released like ``"disk"``.
     - ``"local_checkpoint"`` — eager ``localCheckpoint()``: additionally
       TRUNCATES lineage, which is what bounds the composed chain's PLAN
       SIZE — each branching stage references its input ~3×, so with
@@ -631,10 +652,15 @@ def _stage_pin(df: DataFrame, mode: str) -> tuple[DataFrame, list[DataFrame]]:
       query).  Single-JVM / local-mode semantics: an executor loss makes
       the frame unrecoverable (the _RoundPinner "local" trade).  No
       release handle — localCheckpoint storage is reclaimed by the
-      ContextCleaner once the frame is collected."""
-    if mode == "local_checkpoint":
-        from pyspark import StorageLevel
+      ContextCleaner once the frame is collected.
+    - ``None`` / ``"none"`` — unchanged."""
+    if mode not in (None, *_MATERIALIZE_MODES):
+        raise ValueError(f"unknown materialize mode: {mode!r}")
+    if mode is None or mode == "none":
+        return df, []
+    from pyspark import StorageLevel
 
+    if mode == "local_checkpoint":
         # DISK_ONLY storage: the default localCheckpoint level holds
         # deserialized rows on-heap, and a bench/session running many
         # operators accumulates those blocks until the ContextCleaner
@@ -643,9 +669,10 @@ def _stage_pin(df: DataFrame, mode: str) -> tuple[DataFrame, list[DataFrame]]:
         return df.localCheckpoint(
             eager=True, storageLevel=StorageLevel.DISK_ONLY
         ), []
-    from pyspark import StorageLevel
-
-    pinned = df.persist(StorageLevel.DISK_ONLY)
+    pinned = df.persist(
+        StorageLevel.DISK_ONLY if mode == "disk"
+        else StorageLevel.MEMORY_AND_DISK
+    )
     return pinned, [pinned]
 
 
@@ -755,7 +782,6 @@ def curate_near_dups(
     policy: str = "clusters",
     cluster_opts: dict | None = None,
     minhash_carry: str = "auto",
-    carry_threshold: int = 100_000,
     minhash_banding: tuple[int, int] | None = None,
     minhash_k: int = 5,
 ) -> DataFrame:
@@ -771,12 +797,10 @@ def curate_near_dups(
 
     ``minhash_carry`` selects the minhash exchange plan ("arrays" |
     "rehash" | "auto"; see ``minhash_near_dups``).  "auto" (default)
-    counts the survivors once — an ACTION at call time, cheap against
-    the materialized flagged pin but note it evaluates the upstream
-    plan under ``materialize="none"`` — and picks "rehash" above
-    ``carry_threshold`` docs (the measured crossover: the rehash plan's
-    fixed costs lose ~1-3 s at toy scale, the arrays plan's exchange
-    spills ~50 GB at 1M docs × 13 bands).
+    counts the survivors once — an ACTION at call time, folded into the
+    disk/persist pin's materializing action, its own scan otherwise
+    (note it evaluates the upstream plan under ``materialize="none"``)
+    — and picks "rehash" above ``CARRY_THRESHOLD`` docs.
 
     ``policy`` selects which side of a verified near-dup relation drops:
 
@@ -798,24 +822,18 @@ def curate_near_dups(
       maximal retention over canonical keep-one.
 
     ``materialize`` controls how ``flagged`` is pinned before the two
-    plan branches reference it (module doc, "Plan shape"):
+    plan branches reference it (module doc, "Plan shape"; the modes are
+    ``_stage_pin``'s):
     - "disk" (default): eager persist at ``StorageLevel.DISK_ONLY`` —
-      rows serialized to executor-local disk, near-zero heap.  The right
-      level for this frame: it carries the full extracted text, so a
-      deserialized on-heap copy of a large corpus is GBs of objects
-      (measured: a 2.7 GB-text corpus OOMs an 8 GB local heap under
-      MEMORY_AND_DISK unrolling, and reads back from disk in seconds).
+      rows serialized to executor-local disk, near-zero heap.
     - "local_checkpoint": eager localCheckpoint at DISK_ONLY storage —
       additionally truncates lineage (the plan-shape proof uses this:
-      the upstream stages vanish from the final DAG) with no on-heap
-      block accumulation (r9: the default deserialized level measurably
-      slowed later queries of long bench sessions).
+      the upstream stages vanish from the final DAG) and registers no
+      pin to release.
     - "persist": MEMORY_AND_DISK cache (small corpora / interactive).
     - "none": lazy; only correct when ``flagged`` is already a
       materialized table (e.g. the written flags table — then the double
       branch costs two pruned columnar scans, no recomputation)."""
-    if materialize not in ("disk", "local_checkpoint", "persist", "none"):
-        raise ValueError(f"unknown materialize mode: {materialize!r}")
     if policy not in ("clusters", "pairwise"):
         raise ValueError(f"unknown near-dup policy: {policy!r}")
     if minhash_carry not in ("auto", "arrays", "rehash"):
@@ -841,22 +859,11 @@ def curate_near_dups(
     df = flagged.withColumn("_row_key", _row_key(key_cols))
     surv_count = None
     survivor_cond = F.col("quality_ok") & F.col("exact_keep")
-    if materialize == "local_checkpoint":
-        from pyspark import StorageLevel
-
-        # DISK_ONLY storage (r9): truncation without on-heap deserialized
-        # blocks — see _stage_pin
-        df = df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    elif materialize in ("disk", "persist"):
-        from pyspark import StorageLevel
-
-        df = df.persist(
-            StorageLevel.DISK_ONLY if materialize == "disk"
-            else StorageLevel.MEMORY_AND_DISK
-        )
-        # one action materializes the pin; when auto-carry needs the
-        # survivor count, fold it into the SAME pass instead of scanning
-        # the freshly-pinned text a second time
+    df, pins = _stage_pin(df, materialize)
+    if pins:
+        # one action materializes the disk/persist pin; when auto-carry
+        # needs the survivor count, fold it into the SAME pass instead
+        # of scanning the freshly-pinned text a second time
         if minhash_carry == "auto":
             surv_count = df.agg(
                 F.sum(survivor_cond.cast("long"))
@@ -871,15 +878,11 @@ def curate_near_dups(
     )
     carry = minhash_carry
     if carry == "auto":
-        # size-dependent crossover (measured, BENCH round 5): the rehash
-        # plan's fixed costs (extra python pass + candidate joins) lose
-        # ~1.3-2.6 s at 5k docs, while the arrays plan's bucket exchange
-        # carries bands × the shingle volume — ~50 GB of spill at 1M
-        # docs.  The count rides the materialization action above when
-        # there is one; otherwise (checkpoint/none) it is its own scan.
+        # the count rides the materialization action above when there
+        # is one; otherwise (checkpoint/none) it is its own scan
         if surv_count is None:
             surv_count = survivors.count()
-        carry = "rehash" if surv_count > carry_threshold else "arrays"
+        carry = "rehash" if surv_count > CARRY_THRESHOLD else "arrays"
     banding = (
         {"n_hashes": minhash_banding[0], "bands": minhash_banding[1]}
         if minhash_banding
@@ -902,7 +905,6 @@ def curate_near_dups(
             .distinct()
             .withColumn("near_dup_drop", F.lit(True))
         )
-    pinned = df if materialize in ("disk", "persist") else None
     # the rehash minhash plan pins its candidate frames internally —
     # forward those handles so release_curated drops them too
     mh_pins = list(getattr(pairs, "_clrs_pinned", []) or [])
@@ -917,7 +919,7 @@ def curate_near_dups(
     # until unpersisted — hand the caller the release handle (long-lived
     # sessions curating several corpora should call release_curated on the
     # EXACT frame returned here, once done with the result — see pins.py)
-    return attach_pins(out, pinned, *mh_pins)
+    return attach_pins(out, *pins, *mh_pins)
 
 
 # the generic release helper (pins.py) under the curation-specific name
@@ -928,8 +930,7 @@ def line_dedup_rewrite(
     extracted: DataFrame,
     text_col: str = "extracted_text",
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    pin_lines: bool = False,
-    pin_mode: str = "disk",
+    pin: str | None = None,
 ) -> tuple[DataFrame, list[DataFrame]]:
     """The ``curate(line_dedup=True)`` pre-stage as a standalone step
     (also used by scripts/corpus_pipeline.py's decomposed sink path):
@@ -937,23 +938,23 @@ def line_dedup_rewrite(
     rewritten from the surviving lines, ``line_dedup_n_lines`` /
     ``line_dedup_n_kept`` audit columns added via a 1:1 skew-free join
     on the unique row key.  Returns (rewritten frame, pins) — pins
-    non-empty only under ``pin_lines=True``.
+    non-empty only under ``pin="disk"``.
 
-    ``pin_lines=True`` materializes the KEYED INPUT frame (DISK_ONLY),
-    not just line_dedup's exploded lines: this stage references the
-    input in three plan branches (the line stage's winners aggregation
-    and probe, plus the audit join's left side), and for a
-    nondeterministic upstream every branch must read the same bytes —
-    pinning only the exploded lines would leave the audit join's probe
-    side re-evaluating the raw upstream (round-7 review finding)."""
+    ``pin`` (None | "disk" | "local_checkpoint"; ``_stage_pin``)
+    materializes the KEYED INPUT frame, not just line_dedup's exploded
+    lines: this stage references the input in three plan branches (the
+    line stage's winners aggregation and probe, plus the audit join's
+    left side), and for a nondeterministic upstream every branch must
+    read the same bytes — pinning only the exploded lines would leave
+    the audit join's probe side re-evaluating the raw upstream (round-7
+    review finding)."""
     from cl_readability_spark.functions.dedup import line_dedup as _ld
 
-    keyed = extracted.withColumn("_ld_key", _row_key(key_cols))
-    pins: list[DataFrame] = []
-    if pin_lines:
-        keyed, pins = _stage_pin(keyed, pin_mode)
-    # the line stage's own self-branch now reads the pinned frame, so
-    # its internal pin_lines is unnecessary
+    keyed, pins = _stage_pin(
+        extracted.withColumn("_ld_key", _row_key(key_cols)), pin
+    )
+    # the line stage's own self-branch reads the (pinned) keyed frame,
+    # so its operator-level pin is never needed here
     deduped = _ld(keyed, id_col="_ld_key", text_col=text_col)
     out = (
         keyed.drop(text_col)
@@ -977,8 +978,7 @@ def substring_dedup_rewrite(
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     k: int = 50,
     keep: str = "none",
-    pin_tokens: bool = False,
-    pin_mode: str = "disk",
+    pin: str | None = None,
 ) -> tuple[DataFrame, list[DataFrame]]:
     """The ``curate(substring_dedup_k=)`` pre-stage as a standalone
     step: ExactSubstr duplicated-run removal (``functions.dedup.
@@ -987,19 +987,17 @@ def substring_dedup_rewrite(
     is whitespace-normalized — single spaces — per the operator
     contract), ``substr_dedup_n_tokens`` / ``substr_dedup_n_kept``
     audit columns added via a 1:1 skew-free join on the unique row key.
-    Returns (rewritten frame, pins) — pins non-empty only under
-    ``pin_tokens=True``, which materializes the KEYED INPUT frame
-    (DISK_ONLY): this stage references the input in three plan branches
-    (the operator's gram aggregation and probe, plus the audit join's
-    left side), the same exposure `line_dedup_rewrite` pins."""
+    Returns (rewritten frame, pins) — ``pin`` materializes the KEYED
+    INPUT frame as in ``line_dedup_rewrite``: this stage references the
+    input in three plan branches (the operator's gram aggregation and
+    probe, plus the audit join's left side), the same exposure."""
     from cl_readability_spark.functions.dedup import (
         substring_dedup as _sd,
     )
 
-    keyed = extracted.withColumn("_sd_key", _row_key(key_cols))
-    pins: list[DataFrame] = []
-    if pin_tokens:
-        keyed, pins = _stage_pin(keyed, pin_mode)
+    keyed, pins = _stage_pin(
+        extracted.withColumn("_sd_key", _row_key(key_cols)), pin
+    )
     deduped = _sd(keyed, id_col="_sd_key", text_col=text_col, k=k, keep=keep)
     out = (
         keyed.drop(text_col)
@@ -1044,9 +1042,8 @@ def url_dedup_gate(
     extracted: DataFrame,
     url_col: str = "url",
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    pin_input: bool = False,
+    pin: str | None = None,
     url_opts: dict | None = None,
-    pin_mode: str = "disk",
 ) -> tuple[DataFrame, list[DataFrame]]:
     """The ``curate(url_col=)`` stage as a standalone step: URL-level
     dedup (``functions.urls.url_dedup``) keyed by the composite row
@@ -1056,8 +1053,8 @@ def url_dedup_gate(
     of duplication).  Returns (frame, pins) — the operator references
     its input in two plan branches (the winners aggregation and the
     join probe), so a nondeterministic upstream should be sink-staged
-    or pass ``pin_input=True`` (pins the input DISK_ONLY; standard
-    ``pins.release_pinned`` handles).  ``url_opts`` forwards
+    or pinned via ``pin`` (``line_dedup_rewrite``; "disk" pins ride the
+    standard ``pins.release_pinned`` handles).  ``url_opts`` forwards
     canonicalization kwargs (e.g. ``extra_tracking_params``).
 
     Winner consistency with the content stages: ``url_dedup`` picks
@@ -1069,9 +1066,7 @@ def url_dedup_gate(
     the URL winner in favor of a doomed loser."""
     from cl_readability_spark.functions.urls import url_dedup
 
-    pins: list[DataFrame] = []
-    if pin_input:
-        extracted, pins = _stage_pin(extracted, pin_mode)
+    extracted, pins = _stage_pin(extracted, pin)
     out = url_dedup(
         extracted,
         url_col=url_col,
@@ -1087,8 +1082,7 @@ def gopher_repetition_gate(
     extracted: DataFrame,
     text_col: str = "extracted_text",
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    pin_input: bool = False,
-    pin_mode: str = "disk",
+    pin: str | None = None,
 ) -> tuple[DataFrame, list[DataFrame]]:
     """The ``curate(gopher_repetition=True)`` stage as a standalone
     step: the Gopher repetition battery (``gopher_repetition_flags``)
@@ -1098,12 +1092,10 @@ def gopher_repetition_gate(
     (frame, pins) — the same three-branch self-reference exposure as
     ``line_dedup_rewrite`` (the battery's gram aggregation + probe,
     plus this join's left side), so a nondeterministic upstream should
-    be sink-staged or pass ``pin_input=True`` (pins the KEYED input
-    DISK_ONLY; standard ``pins.release_pinned`` handles)."""
-    keyed = extracted.withColumn("_gr_key", _row_key(key_cols))
-    pins: list[DataFrame] = []
-    if pin_input:
-        keyed, pins = _stage_pin(keyed, pin_mode)
+    be sink-staged or pinned via ``pin`` (the KEYED input)."""
+    keyed, pins = _stage_pin(
+        extracted.withColumn("_gr_key", _row_key(key_cols)), pin
+    )
     rep = gopher_repetition_flags(keyed, id_col="_gr_key", text_col=text_col)
     out = keyed.join(
         rep.select("_gr_key", "repetition_ok"), "_gr_key"
@@ -1127,22 +1119,15 @@ def curate(
     decontam_n: int = 13,
     decontam_seed: int = 42,
     minhash_carry: str = "auto",
-    carry_threshold: int = 100_000,
     minhash_banding: tuple[int, int] | None = None,
     line_dedup: bool = False,
-    line_dedup_pin: bool = False,
     substring_dedup_k: int | None = None,
     substring_dedup_keep: str = "none",
-    substring_dedup_pin: bool = False,
     c4: bool = False,
     c4_opts: dict | None = None,
     gopher_repetition: bool = False,
-    gopher_repetition_pin: bool = False,
     minhash_k: int = 5,
-    pin_stages: bool | str = "auto",
-    stage_pin_mode: str = "disk",
     url_col: str | None = None,
-    url_pin: bool = False,
     url_opts: dict | None = None,
 ) -> DataFrame:
     """Adds the curation flags to ``extracted`` (see module doc); filter on
@@ -1150,7 +1135,8 @@ def curate(
     Composition of [``line_dedup`` →] ``curate_flags`` →
     ``curate_near_dups``; see ``curate_near_dups`` for the
     ``materialize`` modes (the pin covers the whole extract+flags
-    subtree here), the near-dup drop ``policy``, and ``minhash_banding``
+    subtree here; the stage pins follow it — last paragraph), the
+    near-dup drop ``policy``, and ``minhash_banding``
     (optional pinned LSH sizing); ``benchmark_hashes``
     (``decontam.benchmark_ngram_hashes``) enables the decontamination
     gate — pass the SAME ``decontam_n``/``decontam_seed`` the hash set
@@ -1171,11 +1157,10 @@ def curate(
     a self-branch, plus the 1:1 audit join back): free over a
     sink-staged/scan input — the recommended composition, as in
     scripts/corpus_pipeline.py — while a NONDETERMINISTIC upstream
-    should either be sink-staged first or set ``line_dedup_pin=True``,
-    which materializes the keyed INPUT frame DISK_ONLY so all three
-    line-stage branches read the same bytes (the handle is attached to
-    the returned frame alongside the curation pins — ``release_curated``
-    drops them all).
+    should either be sink-staged first or curated under
+    ``materialize="local_checkpoint"``, which materializes every
+    branching stage's keyed INPUT frame so all its branches read the
+    same bytes.
 
     ``substring_dedup_k`` (an int, e.g. 50) additionally runs
     ExactSubstr duplicated-run removal (Lee et al. 2021;
@@ -1189,8 +1174,7 @@ def curate(
     the paper's anti-memorization stance), so the husks fall to the
     QUALITY gate like the line-stage note above; pass
     ``substring_dedup_keep="first"`` for keep-one curation.  Same
-    self-branch caveat as the line stage: sink-stage a
-    nondeterministic upstream or set ``substring_dedup_pin=True``.
+    self-branch caveat as the line stage.
 
     ``c4=True`` runs the C4 FILTER battery (Raffel et al. 2020 §2.2;
     ``c4_rewrite``) after the line stage and BEFORE the substring stage
@@ -1209,7 +1193,7 @@ def curate(
     stands AFTER the rewrite stages — gates judge what would actually
     ship — joining ``repetition_ok`` 1:1 on the row key and ANDing it
     into the quality gate the same way.  Same nondeterministic-upstream
-    caveat (``gopher_repetition_pin=True`` pins the keyed input).
+    caveat.
 
     ``url_col`` (a column name, e.g. ``"url"``) runs URL-level dedup
     (``url_dedup_gate``; ``functions.urls.url_dedup``) as the FIRST
@@ -1224,8 +1208,8 @@ def curate(
     lexicographic ``min(struct(key_cols...))`` ordering as
     ``line_dedup``, so composing both never line-empties a URL winner
     in favor of its doomed loser (see ``url_dedup_gate``).  Same
-    nondeterministic-upstream caveat: ``url_pin=True`` pins the input.
-    ``url_opts`` forwards canonicalization kwargs.
+    nondeterministic-upstream caveat.  ``url_opts`` forwards
+    canonicalization kwargs.
 
     With everything on, the stage order is: url_dedup → line_dedup →
     c4 → substring_dedup → gopher_repetition → quality/decontam/exact
@@ -1238,63 +1222,54 @@ def curate(
     where duplicates vary token ORDER — template-permuted boilerplate —
     which contiguous shingles undercount).
 
-    ``pin_stages`` governs the MID-CHAIN input pins when several
-    branching rewrite stages compose in one call.  Each branching stage
-    (line_dedup, substring_dedup, gopher_repetition) evaluates its
-    input in ~3 plan branches; when that input is itself the OUTPUT of
-    an earlier branching stage (joins, not a scan), every branch
-    re-runs the whole upstream chain — at deployment scale that is a
-    repeated multi-shuffle pass, not a repeated parquet read.  The
-    default ``"auto"`` therefore pins (DISK_ONLY) a branching stage's
-    input iff an earlier branching rewrite stage already ran in this
-    call; ``True`` pins every branching stage's input (including the
-    first — for nondeterministic caller frames); ``False`` pins only
-    where the per-stage ``*_pin`` flag asks.  Per-stage flags always
-    force a pin regardless of ``pin_stages``.  Value-neutral (pins
-    change execution, never results); all pins ride the returned
-    frame's registry handles (``release_curated``).
+    Stage pins follow ``materialize`` — the one pin knob.  Each
+    branching stage (url_dedup, line_dedup, substring_dedup,
+    gopher_repetition) evaluates its input in 2-3 plan branches; when
+    that input is itself the OUTPUT of an earlier branching stage
+    (joins, not a scan), every branch re-runs the whole upstream chain —
+    at deployment scale a repeated multi-shuffle pass, not a repeated
+    parquet read.  So:
 
-    ``stage_pin_mode`` selects HOW a firing stage pin materializes
-    (``_stage_pin``): ``"disk"`` (default — fault-tolerant persist,
-    released via the handles) or ``"local_checkpoint"`` (eager
-    localCheckpoint, additionally TRUNCATING lineage so the composed
-    chain's plan size stays linear in stage count instead of ~3^k —
-    the single-JVM / bench shape; see ``_stage_pin`` for the measured
-    rationale and the fault-tolerance trade)."""
+    - ``"local_checkpoint"`` localCheckpoints EVERY branching stage's
+      input (the first included — safe for nondeterministic caller
+      frames), TRUNCATING lineage so the composed chain's plan size
+      stays linear in stage count instead of ~3^k — the single-JVM /
+      bench shape; it registers no pins (see ``_stage_pin`` for the
+      measured rationale and the fault-tolerance trade).
+    - every other mode pins (DISK_ONLY) a branching stage's input only
+      when an earlier branching stage produced it — never the first
+      stage's caller-supplied input.  These pins ride the returned
+      frame's registry handles (``release_curated``).
 
-    if stage_pin_mode not in ("disk", "local_checkpoint"):
-        raise ValueError(
-            f"stage_pin_mode must be disk|local_checkpoint, got "
-            f"{stage_pin_mode!r}"
-        )
+    Value-neutral either way: pins change execution, never results."""
+    if materialize not in _MATERIALIZE_MODES:
+        # validated BEFORE the first stage pin, which may be eager
+        raise ValueError(f"unknown materialize mode: {materialize!r}")
 
-    def _pin(explicit: bool, derived: bool) -> bool:
-        if explicit or pin_stages is True:
-            return True
-        return pin_stages == "auto" and derived
+    def _pin(derived: bool) -> str | None:
+        if materialize == "local_checkpoint":
+            return materialize
+        return "disk" if derived else None
 
     # has a BRANCHING rewrite stage already run in this call? (c4 is a
     # single-branch projection — cheap to re-evaluate over a scan, and
     # any earlier branching stage below it already got pinned)
     derived = False
-    ld_pins: list[DataFrame] = []
+    stage_pins: list[DataFrame] = []
     extra_gates: list[str] = []
     if url_col is not None:
-        extracted, url_pins = url_dedup_gate(
-            extracted, url_col, key_cols,
-            pin_input=_pin(url_pin, derived),
+        extracted, pins = url_dedup_gate(
+            extracted, url_col, key_cols, pin=_pin(derived),
             url_opts=url_opts,
-            pin_mode=stage_pin_mode,
         )
-        ld_pins.extend(url_pins)
+        stage_pins.extend(pins)
         extra_gates.append("url_keep")
         derived = True
     if line_dedup:
-        extracted, ld_pins = line_dedup_rewrite(
-            extracted, text_col, key_cols,
-            pin_lines=_pin(line_dedup_pin, derived),
-            pin_mode=stage_pin_mode,
+        extracted, pins = line_dedup_rewrite(
+            extracted, text_col, key_cols, pin=_pin(derived)
         )
+        stage_pins.extend(pins)
         derived = True
     if c4:
         # BETWEEN the line stage and the substring stage on purpose: the
@@ -1308,24 +1283,21 @@ def curate(
         extracted = c4_rewrite(extracted, text_col, c4_opts)
         extra_gates.append("c4_keep")
     if substring_dedup_k is not None:
-        extracted, sd_pins = substring_dedup_rewrite(
+        extracted, pins = substring_dedup_rewrite(
             extracted,
             text_col,
             key_cols,
             k=substring_dedup_k,
             keep=substring_dedup_keep,
-            pin_tokens=_pin(substring_dedup_pin, derived),
-            pin_mode=stage_pin_mode,
+            pin=_pin(derived),
         )
-        ld_pins.extend(sd_pins)
+        stage_pins.extend(pins)
         derived = True
     if gopher_repetition:
-        extracted, gr_pins = gopher_repetition_gate(
-            extracted, text_col, key_cols,
-            pin_input=_pin(gopher_repetition_pin, derived),
-            pin_mode=stage_pin_mode,
+        extracted, pins = gopher_repetition_gate(
+            extracted, text_col, key_cols, pin=_pin(derived)
         )
-        ld_pins.extend(gr_pins)
+        stage_pins.extend(pins)
         extra_gates.append("repetition_ok")
     flagged = curate_flags(
         extracted, text_col, key_cols, min_chars, max_chars,
@@ -1334,11 +1306,10 @@ def curate(
     )
     out = curate_near_dups(
         flagged, text_col, key_cols, jaccard_threshold, materialize,
-        policy, cluster_opts, minhash_carry, carry_threshold,
-        minhash_banding, minhash_k,
+        policy, cluster_opts, minhash_carry, minhash_banding, minhash_k,
     )
-    if ld_pins:
-        out = attach_pins(out, *ld_pins)
+    if stage_pins:
+        out = attach_pins(out, *stage_pins)
     return out
 
 

@@ -32,7 +32,10 @@ the probe reads only plan TEXT and file METADATA:
   relation) follows the session's shuffle parallelism — leave it;
 - a pure scan chain's effective parallelism is bounded by its files'
   parquet ROW-GROUP count (a row group cannot split), read from the
-  footers driver-side — no Spark job either way.
+  footers driver-side — no Spark job either way.  Only local (``file:``
+  or scheme-less) files are probed: pyarrow cannot open ``s3a://`` /
+  ``hdfs://`` URIs, and counting each such file as one split would
+  over-fire the floor, so any other scheme leaves the frame unchanged.
 """
 
 from __future__ import annotations
@@ -47,6 +50,9 @@ from pyspark.sql import DataFrame
 # "BroadcastExchange ..." — only the former set the downstream
 # parallelism to the session's shuffle width
 _SHUFFLE_RE = re.compile(r"(?<!Broadcast)Exchange\s")
+
+# a URI scheme prefix ("s3a:", "hdfs:", "file:")
+_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
 
 #: cap on per-probe parquet footer reads; once this many row groups are
 #: confirmed the input is parallel enough for any sane local target
@@ -102,6 +108,10 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if not files:
         # in-memory source (createDataFrame/range): sliced by
         # defaultParallelism already
+        return df
+    if any(_SCHEME_RE.match(f) and not f.startswith("file:") for f in files):
+        # remote storage: the footers are unreadable here, so the
+        # parallelism is unknown — leave the frame as it is
         return df
     if _scan_row_groups(files, min_partitions) >= min_partitions:
         return df

@@ -59,7 +59,7 @@ def attach_pins(df: DataFrame, *pinned: DataFrame) -> DataFrame:
     # pins after curate_near_dups attached the materialize/minhash ones)
     # must not orphan the earlier handles (round-7 review finding: the
     # old overwrite made release_pinned(out) leak the DISK_ONLY
-    # materialize pin whenever line_dedup_pin stacked on top)
+    # materialize pin whenever a stage pin stacked on top)
     existing = list(getattr(df, "_clrs_pinned", []) or [])
     known_here = {id(p) for p in existing}
     pins = existing + [p for p in pins if id(p) not in known_here]

@@ -952,9 +952,7 @@ FROM embeddings a JOIN embeddings b
 # times the driver runs the query.  WeakKeyDictionary keyed by the
 # session OBJECT, same aliasing rationale as the pins registry
 # (pins.py module doc).  Pinned in tests/test_streaming_multimodal.py.
-# Generalized as _rotate_pin — curation_line_planted uses it too (its
-# materialize="disk" pin makes the composed line+doc chain evaluate the
-# line stage once instead of once per plan branch).
+# Generalized as _rotate_pin — semdedup_planted uses it too.
 _LAST_PINNED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
@@ -1482,24 +1480,21 @@ def q_curation_line_planted(spark, sf_dir):
         .otherwise(rot(0))
     )
     corpus = docs.select("doc_id", text.alias("text"))
-    # materialize="disk" so the composed line+doc chain evaluates the
-    # line stage ONCE (with "none" every near-dup branch recomputes the
-    # line_dedup join chain: measured 10.1 s vs ~4 s at sf0.01); the
-    # harness-lifecycle pin is bounded by the _rotate_pin rotation.
-    # carry="arrays" as in curation_planted (toy corpus, no build action)
-    _rotate_pin(spark, "curation_line_planted")
-    # pin_stages=True + local_checkpoint mode (r9): every branching
-    # stage's input materializes WITH lineage truncation, bounding the
-    # composed chain's plan size (see curation._stage_pin) — the twin
-    # corpus is an expression tree that would otherwise replicate into
-    # every downstream branch's analysis.
+    # materialize="local_checkpoint" so the composed line+doc chain
+    # evaluates the line stage ONCE (with "none" every near-dup branch
+    # recomputes the line_dedup join chain: measured 10.1 s vs ~4 s at
+    # sf0.01).  The mode also checkpoints every branching stage's input
+    # WITH lineage truncation, bounding the composed chain's plan size
+    # (see curation._stage_pin) — the twin corpus is an expression tree
+    # that would otherwise replicate into every downstream branch's
+    # analysis — and registers no pin, so repeated harness evaluations
+    # leave nothing to release.  carry="arrays" as in curation_planted
+    # (toy corpus, no build action).
     curated = curate(
         corpus, text_col="text", key_cols=("doc_id",), policy="clusters",
         materialize="local_checkpoint", minhash_carry="arrays",
-        line_dedup=True, pin_stages=True,
-        stage_pin_mode="local_checkpoint",
+        line_dedup=True,
     )
-    _rotate_pin(spark, "curation_line_planted", curated)
     return curated.select(
         "doc_id",
         F.col("quality_ok").cast("int").alias("quality_ok"),
@@ -1668,11 +1663,9 @@ def q_curation_full_planted(spark, sf_dir):
         .otherwise(r9)
     )
     corpus = docs.select("doc_id", text.alias("text"))
-    # materialize="disk"/pin rotation + carry="arrays" as the other
-    # curation twins (toy corpus, no build action)
-    _rotate_pin(spark, "curation_full_planted")
-    # pin_stages=True + local_checkpoint mode (r9): plan-size bound for
-    # the 5-stage composition — see the curation_line twin note.
+    # materialize="local_checkpoint" + carry="arrays" as the other
+    # curation twins: plan-size bound for the 5-stage composition, no
+    # pins to release — see the curation_line twin note.
     curated = curate(
         corpus, text_col="text", key_cols=("doc_id",), policy="clusters",
         materialize="local_checkpoint", minhash_carry="arrays",
@@ -1680,10 +1673,8 @@ def q_curation_full_planted(spark, sf_dir):
         line_dedup=True,
         c4=True, c4_opts={"min_sentences": 2, "badwords": ("badwordx",)},
         substring_dedup_k=8, substring_dedup_keep="none",
-        gopher_repetition=True, minhash_k=1, pin_stages=True,
-        stage_pin_mode="local_checkpoint",
+        gopher_repetition=True, minhash_k=1,
     )
-    _rotate_pin(spark, "curation_full_planted", curated)
     return curated.select(
         "doc_id",
         F.col("quality_ok").cast("int").alias("quality_ok"),
@@ -3898,14 +3889,13 @@ def q_curation_url_planted(spark, sf_dir):
         )
         .otherwise(F.lit(None).cast("string"))
     )
-    # pin_stages=True + local_checkpoint mode (r9): plan-size bound +
-    # no-release materialization — see the curation_line twin note.
+    # materialize="local_checkpoint": plan-size bound + no-release
+    # materialization — see the curation_line twin note.
     curated = curate(
         corpus.withColumn("url", url),
         text_col="text", key_cols=("doc_id",), policy="clusters",
         materialize="local_checkpoint", minhash_carry="arrays",
-        url_col="url", pin_stages=True,
-        stage_pin_mode="local_checkpoint",
+        url_col="url",
     )
     return curated.select(
         "doc_id",

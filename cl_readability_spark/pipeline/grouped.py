@@ -1,8 +1,9 @@
 """Grouped-map operators (applyInPandas) — per-conversation batch ops.
 
-Completes the UDF surface (SURVEY §2.8): scalar pandas UDF, mapInArrow,
-mapInPandas (multimodal), applyInPandasWithState (streaming sessions), and
-here the grouped-map form: each conversation arrives as one pandas frame.
+Completes the UDF surface (SURVEY §2.8): scalar pandas UDF (the readerable
+gate), mapInArrow (extraction), mapInPandas (multimodal),
+applyInPandasWithState (streaming sessions), and here the grouped-map form:
+each conversation arrives as one pandas frame.
 
 Scale note: groupBy(conv_id) shuffles on the conversation key — the one
 operator family where per-conv salting is NOT applicable (the group must be

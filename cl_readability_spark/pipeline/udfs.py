@@ -7,9 +7,8 @@ lightweight DOM per row — this is the algorithm itself, not per-row
 batches with explicit types.  Measured on this runtime, mapInArrow is ~11×
 faster end-to-end than the equivalent struct-returning scalar pandas UDF
 (0.7 s vs 7.4 s for 5k docs at 32 cores — the struct scalar-UDF return path
-in Spark 4.1 is a slow path), so the job uses mapInArrow; a scalar pandas
-UDF variant is kept for ad-hoc column-level use.  All regexes and config are
-bound once per worker at module import / closure creation."""
+in Spark 4.1 is a slow path), so the job uses mapInArrow.  All regexes and
+config are bound once per worker at module import / closure creation."""
 
 from __future__ import annotations
 
@@ -127,43 +126,6 @@ def make_arrow_extractor(config: ExtractorConfig = DEFAULT_CONFIG):
     return extract_batches
 
 
-def make_extract_udf(config: ExtractorConfig = DEFAULT_CONFIG):
-    """Build the extraction pandas UDF with ``config`` captured by closure
-    (the broadcast-equivalent of the reference's dynamic variables)."""
-
-    @pandas_udf(EXTRACT_RESULT_TYPE)
-    def extract_turns(text: pd.Series) -> pd.DataFrame:
-        out = {name: [] for name in EXTRACT_RESULT_TYPE.fieldNames()}
-        for html in text:
-            r = extract(
-                html if isinstance(html, str) else "",
-                config=config,
-                include_html=False,
-            )
-            out["extracted_text"].append(r.extracted_text)
-            out["content_spans"].append(
-                [{"start": s, "end": e} for s, e in r.content_spans]
-                if r.content_spans
-                else []
-            )
-            out["status"].append(r.status)
-            out["title"].append(r.title)
-            out["byline"].append(r.byline)
-            out["excerpt"].append(r.excerpt)
-            out["site_name"].append(r.site_name)
-            out["published_time"].append(r.published_time)
-            out["lang"].append(r.lang)
-            out["text_length"].append(r.text_length)
-            out["candidates_scored"].append(r.candidates_scored)
-            out["retries"].append(r.retries)
-            out["chars_in"].append(r.chars_in)
-            out["chars_kept"].append(r.chars_kept)
-            out["error"].append(r.error)
-        return pd.DataFrame(out)
-
-    return extract_turns
-
-
 def make_readerable_udf(config: ExtractorConfig = DEFAULT_CONFIG):
     @pandas_udf(BooleanType())
     def readerable(text: pd.Series) -> pd.Series:
@@ -173,7 +135,3 @@ def make_readerable_udf(config: ExtractorConfig = DEFAULT_CONFIG):
 
     return readerable
 
-
-# default-config instances for direct import
-extract_turns_udf = make_extract_udf()
-is_readerable_udf = make_readerable_udf()

@@ -336,7 +336,7 @@ def test_pin_registry_recovers_lost_handles(spark, planted):
 
     release_all_pins(spark)  # clean slate
     # default minhash_carry="auto" picks the arrays plan on this toy
-    # corpus (below carry_threshold) → one pin, the flagged frame
+    # corpus (below CARRY_THRESHOLD) → one pin, the flagged frame
     curated = curate(planted, jaccard_threshold=0.7, policy="pairwise")
     assert pins_outstanding(spark) == 1
     derived = curated.filter(F.col("kept"))     # handle lost here
@@ -408,13 +408,7 @@ def test_curate_line_dedup_flag(spark):
     """curate(line_dedup=True) runs the same composition as the script-
     level pattern above but operator-level: text_col rewritten from the
     surviving lines, line_dedup_n_lines/_kept audit columns added, husks
-    absorbed by the quality gate, and line_dedup_pin=True forwards the
-    exploded-lines DISK_ONLY pin through the standard release handle."""
-    from cl_readability_spark.functions.pins import (
-        pins_outstanding,
-        release_pinned,
-    )
-
+    absorbed by the quality gate."""
     boiler = "subscribe to our newsletter for the latest updates and offers"
     rows = [
         (0, 0, GOOD + "\n" + boiler),
@@ -426,7 +420,7 @@ def test_curate_line_dedup_flag(spark):
     )
     curated = curate(
         df, min_stopword_bp=0, materialize="none", minhash_carry="arrays",
-        line_dedup=True, line_dedup_pin=True,
+        line_dedup=True,
     )
     flags = {r.conv_id: r for r in curated.collect()}
     assert flags[0].kept and flags[0].line_dedup_n_kept == 2
@@ -435,10 +429,6 @@ def test_curate_line_dedup_flag(spark):
     # extracted_text was REWRITTEN from the surviving lines
     assert flags[1].extracted_text == ""
     assert flags[0].extracted_text == GOOD + "\n" + boiler
-    # the forwarded line-stage pin is on the returned frame's handle
-    assert pins_outstanding(spark) >= 1
-    assert release_pinned(curated) >= 1
-    assert pins_outstanding(spark) == 0
 
 
 def test_gopher_flags_operator(spark):
@@ -624,12 +614,12 @@ def test_gopher_repetition_flags_plan_has_no_lambda_hofs(spark):
     assert all("_id" in k for k in keys), keys
 
 
-def test_curate_line_dedup_pin_stacking_releases_all(spark):
-    """Round-7 review regression: curate() attaches the line-stage pin
-    ON TOP of the pins curate_near_dups already attached (materialize
-    pin and/or minhash rehash pins) — attach_pins must MERGE, not
-    overwrite, or release_curated(out) leaks the DISK_ONLY extract+flags
-    pin for the session's lifetime."""
+def test_curate_stage_pin_stacking_releases_all(spark):
+    """Round-7 review regression: curate() attaches the stage pins ON
+    TOP of the pins curate_near_dups already attached (materialize pin
+    and/or minhash rehash pins) — attach_pins must MERGE, not overwrite,
+    or release_curated(out) leaks the DISK_ONLY extract+flags pin for
+    the session's lifetime."""
     from cl_readability_spark.functions.pins import (
         pins_outstanding,
         release_all_pins,
@@ -643,10 +633,11 @@ def test_curate_line_dedup_pin_stacking_releases_all(spark):
     )
     curated = curate(
         df, min_stopword_bp=0, materialize="disk", minhash_carry="arrays",
-        line_dedup=True, line_dedup_pin=True,
+        line_dedup=True, gopher_repetition=True,
     )
     assert curated.count() == 6
-    # both the keyed line-stage pin AND the materialize pin are live
+    # the gopher stage's input (the line stage's output) pin AND the
+    # materialize pin are live
     assert pins_outstanding(spark) == 2
     assert release_pinned(curated) == 2
     assert pins_outstanding(spark) == 0
@@ -861,15 +852,10 @@ def test_curate_substring_dedup_stage(spark):
     normalized rebuild), substr_dedup audit columns added, a doc that is
     entirely a duplicated run becomes a husk absorbed by the QUALITY
     gate (keep='none' empties every copy — the paper-faithful default),
-    the flag composes with the manual substring_dedup_rewrite + curate
-    chain, and substring_dedup_pin=True forwards the keyed-input pin
-    through the standard release handle."""
+    and the flag composes with the manual substring_dedup_rewrite +
+    curate chain."""
     from cl_readability_spark.functions.curation import (
         substring_dedup_rewrite,
-    )
-    from cl_readability_spark.functions.pins import (
-        pins_outstanding,
-        release_pinned,
     )
 
     # two DIFFERENT non-repeating quality bodies (GOOD repeats one
@@ -895,7 +881,7 @@ def test_curate_substring_dedup_stage(spark):
     )
     curated = curate(
         df, min_stopword_bp=0, materialize="none", minhash_carry="arrays",
-        substring_dedup_k=8, substring_dedup_pin=True,
+        substring_dedup_k=8,
     )
     flags = {r.conv_id: r for r in curated.collect()}
     assert flags[0].kept and flags[0].extracted_text == good0
@@ -905,9 +891,6 @@ def test_curate_substring_dedup_stage(spark):
     assert flags[0].substr_dedup_n_tokens == n0
     assert flags[0].substr_dedup_n_kept == n0 - 8
     assert flags[2].substr_dedup_n_kept == 0
-    assert pins_outstanding(spark) >= 1
-    assert release_pinned(curated) >= 1
-    assert pins_outstanding(spark) == 0
 
     # the flag is exactly the manual pre-stage composition
     staged, pins = substring_dedup_rewrite(df, k=8)
@@ -1080,12 +1063,14 @@ def test_curate_c4_and_gopher_repetition_stages(spark):
     assert out[3].substr_dedup_n_kept == 27
 
 
-def test_curate_pin_stages_auto_pins_midchain_inputs(spark, planted):
-    """pin_stages="auto" (the default): composing >=2 branching rewrite
-    stages pins each LATER branching stage's input (the mid-chain frames
-    whose re-evaluation repeats upstream joins), never the first stage's
-    caller-supplied input; pin_stages=False reverts to explicit flags
-    only; values are identical either way (pins are value-neutral)."""
+def test_curate_stage_pins_follow_materialize(spark, planted):
+    """Stage pins follow ``materialize``: under the default disk mode,
+    composing >=2 branching rewrite stages pins each LATER branching
+    stage's input (the mid-chain frames whose re-evaluation repeats
+    upstream joins), never the first stage's caller-supplied input;
+    under "local_checkpoint" every stage input is checkpointed and no
+    pin is registered; values are identical either way (pins are
+    value-neutral)."""
     from cl_readability_spark.functions.curation import release_curated
     from cl_readability_spark.functions.pins import pins_outstanding
 
@@ -1094,30 +1079,22 @@ def test_curate_pin_stages_auto_pins_midchain_inputs(spark, planted):
         jaccard_threshold=0.7, policy="pairwise", line_dedup=True,
         substring_dedup_k=8, gopher_repetition=True,
     )
-    auto = curate(planted, **kw)
-    auto_rows = sorted(
-        (r.conv_id, r.turn_idx, r.kept) for r in auto.collect()
+    disk = curate(planted, **kw)
+    disk_rows = sorted(
+        (r.conv_id, r.turn_idx, r.kept) for r in disk.collect()
     )
     # materialize pin (flagged) + substring input + gopher input = 3;
-    # the line stage's input (caller frame) must NOT be auto-pinned
+    # the line stage's input (caller frame) must NOT be pinned
     assert pins_outstanding(spark) - base == 3
-    release_curated(auto)
+    release_curated(disk)
     assert pins_outstanding(spark) == base
 
-    off = curate(planted, pin_stages=False, **kw)
-    off_rows = sorted(
-        (r.conv_id, r.turn_idx, r.kept) for r in off.collect()
+    ckpt = curate(planted, materialize="local_checkpoint", **kw)
+    ckpt_rows = sorted(
+        (r.conv_id, r.turn_idx, r.kept) for r in ckpt.collect()
     )
-    assert pins_outstanding(spark) - base == 1  # materialize pin only
-    release_curated(off)
-    assert off_rows == auto_rows
-
-    # pin_stages=True additionally pins the FIRST branching stage's input
-    allpin = curate(planted, pin_stages=True, **kw)
-    allpin.count()
-    assert pins_outstanding(spark) - base == 4
-    release_curated(allpin)
     assert pins_outstanding(spark) == base
+    assert ckpt_rows == disk_rows
 
 
 def test_curate_url_stage(spark):

@@ -50,3 +50,14 @@ def test_probe_is_action_free(spark, tmp_path):
     ensure_parallelism(df)
     ensure_parallelism(base.select("id"))
     assert acc.value == 0
+
+
+@pytest.mark.parametrize("scheme", ["s3a://bucket", "hdfs://nn:8020"])
+def test_noop_for_remote_inputs(spark, tmp_path, scheme):
+    """Footers of non-``file:`` inputs cannot be probed; the floor must
+    treat them as unknown instead of counting each file as one split."""
+    path = str(tmp_path / "remote.parquet")
+    spark.range(100).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path).select("id")
+    df.inputFiles = lambda: [f"{scheme}/warehouse/part-00000.parquet"]
+    assert ensure_parallelism(df) is df
