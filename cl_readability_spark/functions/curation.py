@@ -35,7 +35,7 @@ drops, then drops joined back).  Spark has no cross-branch subplan reuse
 (``materialize="disk"``) before the branch — extraction runs exactly
 once per curation (plan-shape-tested under ``"local_checkpoint"``: zero
 MapInArrow in the final DAG, the single extraction pass lives in the
-checkpoint job).  ``materialize`` is the only pin knob: the branching
+survivor-count job that materializes the checkpoint).  ``materialize`` is the only pin knob: the branching
 rewrite stages' input pins follow it (``curate``).  In production the
 equivalent is curating from the committed sink table (pipeline/sink.py);
 pass ``materialize="none"`` when the input is already a materialized
@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from cl_readability_spark.functions.dedup import dup_clusters, minhash_near_dups
+from cl_readability_spark.functions.incremental import content_fingerprint
 from cl_readability_spark.functions.pins import attach_pins, release_pinned
 from cl_readability_spark.functions.sqltwins import (
     C4_JS_LINE_RE,
@@ -349,7 +350,6 @@ def gopher_repetition_flags(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    pin_input: bool = False,
 ) -> DataFrame:
     """The Gopher REPETITION rules (Rae et al. 2021 §A1.1 Table A1 —
     the other half of the MassiveText quality filter next to
@@ -397,9 +397,8 @@ def gopher_repetition_flags(
     The gram aggregates are joined back onto the per-doc base — the
     input subtree is referenced in several plan branches, so run this
     over a scan/sink-staged frame (deterministic, re-evaluates
-    identically) or pass ``pin_input=True`` to materialize the tokenized
-    base DISK_ONLY (standard ``pins.release_pinned`` handle on the
-    returned frame) — the PLANS.md materialize-before-self-join rule."""
+    identically) or a pinned one (``gopher_repetition_gate`` pins its
+    keyed input) — the PLANS.md materialize-before-self-join rule."""
     from pyspark.sql.window import Window
 
     text = F.coalesce(F.col(text_col), F.lit(""))
@@ -439,10 +438,6 @@ def gopher_repetition_flags(
     base = base.withColumn(
         "word_chars", F.length(F.concat_ws("", F.col("_words"))).cast("long")
     )
-    if pin_input:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.DISK_ONLY)
 
     # --- n-gram stats: one explode + one lead-window pass ---
     w_pos = base.select(
@@ -608,8 +603,6 @@ def gopher_repetition_flags(
     out = joined.withColumn("repetition_ok", ~exceed).withColumnRenamed(
         "_id", id_col
     )
-    if pin_input:
-        out = attach_pins(out, base)
     return out
 
 
@@ -619,16 +612,17 @@ def _row_key(key_cols: tuple[str, ...]):
 
 _MATERIALIZE_MODES = ("disk", "local_checkpoint", "persist", "none")
 
-# surviving docs above which minhash_carry="auto" picks the rehash plan
-# (measured crossover, BENCH round 5: the rehash plan's fixed costs —
-# extra python pass + candidate joins — lose ~1.3-2.6 s at 5k docs,
-# while the arrays plan's bucket exchange carries bands × the shingle
-# volume, ~50 GB of spill at 1M docs × 13 bands)
+# surviving docs above which curate_near_dups picks the rehash minhash
+# plan over the arrays plan (measured crossover, BENCH round 5: the
+# rehash plan's fixed costs — extra python pass + candidate joins —
+# lose ~1.3-2.6 s at 5k docs, while the arrays plan's bucket exchange
+# carries bands × the shingle volume, ~50 GB of spill at 1M docs × 13
+# bands)
 CARRY_THRESHOLD = 100_000
 
 
 def _stage_pin(
-    df: DataFrame, mode: str | None
+    df: DataFrame, mode: str | None, eager: bool = True
 ) -> tuple[DataFrame, list[DataFrame]]:
     """Pin ``df`` per ``mode`` (a ``materialize`` mode, or None = no
     pin); returns (frame, release pins):
@@ -642,7 +636,8 @@ def _stage_pin(
       seconds).
     - ``"persist"`` — lazy ``persist(MEMORY_AND_DISK)`` (small corpora /
       interactive), released like ``"disk"``.
-    - ``"local_checkpoint"`` — eager ``localCheckpoint()``: additionally
+    - ``"local_checkpoint"`` — ``localCheckpoint()``, eager unless
+      ``eager=False`` leaves it to the caller's first action: additionally
       TRUNCATES lineage, which is what bounds the composed chain's PLAN
       SIZE — each branching stage references its input ~3×, so with
       lineage kept the final logical tree replicates the whole upstream
@@ -667,7 +662,7 @@ def _stage_pin(
         # catches up — measured as a late-session slowdown.  Disk blocks
         # keep the lineage truncation without the heap pressure.
         return df.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
+            eager=eager, storageLevel=StorageLevel.DISK_ONLY
         ), []
     pinned = df.persist(
         StorageLevel.DISK_ONLY if mode == "disk"
@@ -758,11 +753,7 @@ def curate_flags(
         ).drop("n_contaminated_grams")
     else:
         df = df.withColumn("contaminated", F.lit(False))
-    fingerprint = F.md5(
-        F.regexp_replace(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                         "[^a-z0-9]", "")
-    )
-    w = Window.partitionBy(fingerprint).orderBy(
+    w = Window.partitionBy(content_fingerprint(text_col)).orderBy(
         F.col("quality_ok").desc(), F.col("contaminated"), F.col("_row_key")
     )
     return df.withColumn(
@@ -781,26 +772,23 @@ def curate_near_dups(
     materialize: str = "disk",
     policy: str = "clusters",
     cluster_opts: dict | None = None,
-    minhash_carry: str = "auto",
-    minhash_banding: tuple[int, int] | None = None,
     minhash_k: int = 5,
 ) -> DataFrame:
     """Stage 2 of curation — adds ``near_dup_drop`` (MinHash near-dup
     prune over the quality+exact survivors) and ``kept`` to a frame that
     already carries the stage-1 flags.  ``minhash_k`` is the shingle
-    width in words forwarded to ``minhash_near_dups`` (see ``curate``).
+    width in words forwarded to ``minhash_near_dups`` (see ``curate``);
+    the LSH banding is recall-sized from ``jaccard_threshold``
+    (``minhash_params``).
 
-    ``minhash_banding`` optionally pins the LSH sizing as ``(n_hashes,
-    bands)`` — deployment control for pipelines that trade boundary
-    recall for signature time (and the bench A/B knob); default None =
-    recall-sized banding from the threshold (``minhash_params``).
-
-    ``minhash_carry`` selects the minhash exchange plan ("arrays" |
-    "rehash" | "auto"; see ``minhash_near_dups``).  "auto" (default)
-    counts the survivors once — an ACTION at call time, folded into the
-    disk/persist pin's materializing action, its own scan otherwise
-    (note it evaluates the upstream plan under ``materialize="none"``)
-    — and picks "rehash" above ``CARRY_THRESHOLD`` docs.
+    The minhash exchange plan is picked here, from the survivor count:
+    "rehash" above ``CARRY_THRESHOLD`` docs, "arrays" below (see
+    ``minhash_near_dups``).  The count is an ACTION at call time, and
+    it is the one action that materializes the pin — the disk/persist
+    cache, or the ``"local_checkpoint"`` checkpoint, taken lazily for
+    this — so a pinned mode evaluates ``flagged`` once and pays no
+    extra job for the choice.  Under ``materialize="none"`` the count
+    is its own scan of ``flagged``.
 
     ``policy`` selects which side of a verified near-dup relation drops:
 
@@ -824,73 +812,36 @@ def curate_near_dups(
     ``materialize`` controls how ``flagged`` is pinned before the two
     plan branches reference it (module doc, "Plan shape"; the modes are
     ``_stage_pin``'s):
-    - "disk" (default): eager persist at ``StorageLevel.DISK_ONLY`` —
-      rows serialized to executor-local disk, near-zero heap.
-    - "local_checkpoint": eager localCheckpoint at DISK_ONLY storage —
-      additionally truncates lineage (the plan-shape proof uses this:
-      the upstream stages vanish from the final DAG) and registers no
-      pin to release.
+    - "disk" (default): persist at ``StorageLevel.DISK_ONLY``,
+      materialized by the survivor count — rows serialized to
+      executor-local disk, near-zero heap.
+    - "local_checkpoint": localCheckpoint at DISK_ONLY storage,
+      materialized by the survivor count — additionally truncates
+      lineage (the plan-shape proof uses this: the upstream stages
+      vanish from the final DAG) and registers no pin to release.
     - "persist": MEMORY_AND_DISK cache (small corpora / interactive).
     - "none": lazy; only correct when ``flagged`` is already a
       materialized table (e.g. the written flags table — then the double
       branch costs two pruned columnar scans, no recomputation)."""
     if policy not in ("clusters", "pairwise"):
         raise ValueError(f"unknown near-dup policy: {policy!r}")
-    if minhash_carry not in ("auto", "arrays", "rehash"):
-        # validated BEFORE the materialization action below — a typo'd
-        # carry must not cost a full corpus pass and an orphaned pin
-        raise ValueError(
-            f"minhash_carry must be auto/arrays/rehash, got {minhash_carry!r}"
-        )
-    if minhash_banding is not None and (
-        minhash_banding[0] < 1
-        or minhash_banding[1] < 1
-        or minhash_banding[0] % minhash_banding[1]
-    ):
-        # surfaced here, BEFORE the materialization action below — raised
-        # only at the minhash call, an invalid banding would orphan the
-        # pin.  n_hashes < 1 is rejected too: (0, 1) would pass the
-        # divisibility test yet degenerate to empty signatures — a
-        # single-bucket LSH with an all-pairs candidate blowup (ADVICE r6)
-        raise ValueError(
-            f"minhash_banding needs n_hashes >= 1 ({minhash_banding[0]}) "
-            f"divisible by bands >= 1 ({minhash_banding[1]})"
-        )
     df = flagged.withColumn("_row_key", _row_key(key_cols))
-    surv_count = None
     survivor_cond = F.col("quality_ok") & F.col("exact_keep")
-    df, pins = _stage_pin(df, materialize)
-    if pins:
-        # one action materializes the disk/persist pin; when auto-carry
-        # needs the survivor count, fold it into the SAME pass instead
-        # of scanning the freshly-pinned text a second time
-        if minhash_carry == "auto":
-            surv_count = df.agg(
-                F.sum(survivor_cond.cast("long"))
-            ).first()[0] or 0
-        else:
-            df.count()
+    df, pins = _stage_pin(df, materialize, eager=False)
+    # the survivor count is the action that materializes the pin (the
+    # disk/persist cache or the lazy checkpoint): a JVM-side count of
+    # the internal rows — one job, where a DataFrame count under AQE
+    # adds a shuffle job, and no row conversion
+    surv_count = df.filter(survivor_cond)._jdf.queryExecution().toRdd().count()
 
     # near-dup pairs over the surviving candidates only (quality+exact
     # gates shrink the minhash input before its bucket shuffle)
     survivors = df.filter(survivor_cond).select(
         F.col("_row_key").alias("doc_id"), F.col(text_col).alias("text")
     )
-    carry = minhash_carry
-    if carry == "auto":
-        # the count rides the materialization action above when there
-        # is one; otherwise (checkpoint/none) it is its own scan
-        if surv_count is None:
-            surv_count = survivors.count()
-        carry = "rehash" if surv_count > CARRY_THRESHOLD else "arrays"
-    banding = (
-        {"n_hashes": minhash_banding[0], "bands": minhash_banding[1]}
-        if minhash_banding
-        else {}
-    )
     pairs = minhash_near_dups(
         survivors, k=minhash_k, jaccard_threshold=jaccard_threshold,
-        carry=carry, **banding
+        carry="rehash" if surv_count > CARRY_THRESHOLD else "arrays",
     )
     if policy == "clusters":
         clusters = dup_clusters(pairs, **(cluster_opts or {}))
@@ -1118,8 +1069,6 @@ def curate(
     benchmark_hashes=None,  # list[int] | numpy int64 array
     decontam_n: int = 13,
     decontam_seed: int = 42,
-    minhash_carry: str = "auto",
-    minhash_banding: tuple[int, int] | None = None,
     line_dedup: bool = False,
     substring_dedup_k: int | None = None,
     substring_dedup_keep: str = "none",
@@ -1136,8 +1085,8 @@ def curate(
     ``curate_near_dups``; see ``curate_near_dups`` for the
     ``materialize`` modes (the pin covers the whole extract+flags
     subtree here; the stage pins follow it — last paragraph), the
-    near-dup drop ``policy``, and ``minhash_banding``
-    (optional pinned LSH sizing); ``benchmark_hashes``
+    near-dup drop ``policy``, and the minhash plan it picks from the
+    survivor count; ``benchmark_hashes``
     (``decontam.benchmark_ngram_hashes``) enables the decontamination
     gate — pass the SAME ``decontam_n``/``decontam_seed`` the hash set
     was computed with.
@@ -1306,7 +1255,7 @@ def curate(
     )
     out = curate_near_dups(
         flagged, text_col, key_cols, jaccard_threshold, materialize,
-        policy, cluster_opts, minhash_carry, minhash_banding, minhash_k,
+        policy, cluster_opts, minhash_k,
     )
     if stage_pins:
         out = attach_pins(out, *stage_pins)

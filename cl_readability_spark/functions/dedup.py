@@ -390,9 +390,7 @@ def minhash_near_dups(
     bands: int | None = None,
     jaccard_threshold: float = 0.6,
     max_bucket: int = 64,
-    auto_params: bool | None = None,
     carry: str = "arrays",
-    carry_rows: int | None = None,
 ) -> DataFrame:
     """Full pipeline: fused shingle+minhash Arrow stage → LSH buckets →
     candidate pairs → exact Jaccard verification on the hashed shingle
@@ -413,24 +411,21 @@ def minhash_near_dups(
     back onto candidate pairs re-runs the hashing stage per branch —
     measured in round 2).  ``carry="rehash"`` is the safe formulation of
     candidates-only hashing (explicit DISK_ONLY pins break the
-    re-evaluation).  ``carry="auto"`` picks rehash above 100k docs using
-    a CALLER-SUPPLIED ``carry_rows`` row count — it never runs a Spark
-    action: counting ``df`` at plan-construction time would evaluate the
-    caller's entire upstream plan (e.g. extraction) once just to pick a
-    code path, and again for the real job unless the input were pinned.
-    ``curate()`` supplies the count it already has from materializing its
-    pinned corpus.
+    re-evaluation).  Building either plan runs no Spark action: the
+    caller picks the plan — ``curate()`` picks it from the survivor count
+    its pin's materializing action already takes (``CARRY_THRESHOLD``).
 
     RECALL/SIZING: by default (n_hashes/bands unset) the banding is
     sized from the LSH recall curve for ``jaccard_threshold``
     (``minhash_params``, recall ≥ 0.95 at the boundary) — the round-4
     fixed default of 32 hashes × 8 bands recalled ≥ 0.998 at J ≥ 0.85
     but only ~0.67 at J = 0.6 and ~0.40 at J = 0.5, a silent cliff for
-    callers lowering the threshold; the auto default costs ~15-30%
-    extra signature time at sf0.1 (measured, round 5) and removes it.
+    callers lowering the threshold; the recall-sized default costs
+    ~15-30% extra signature time at sf0.1 (measured, round 5) and
+    removes it.
     Passing ``n_hashes``/``bands`` explicitly pins the banding (both
-    must be given); ``auto_params=False`` restores the historical
-    32×8 when nothing is passed.
+    must be given; ``n_hashes=32, bands=8`` is the historical fixed
+    banding).
 
     EXCHANGE VOLUME (``carry``, round 5): the default single-pass plan
     ("arrays") carries each doc's full hashed-shingle array on EVERY
@@ -443,25 +438,15 @@ def minhash_near_dups(
     CANDIDATE docs alone (a semi-join; candidates ≪ corpus on real
     data) before the exact-Jaccard join — the python stage runs twice
     but the exchange shrinks by the shingle-array factor.  Use
-    "rehash" for large corpora (``curate()`` does); "arrays" stays the
-    zero-join fast path for bench/toy scale.  Identical output,
-    pytest-pinned."""
-    if carry not in ("arrays", "rehash", "auto"):
-        raise ValueError(f"carry must be arrays|rehash|auto, got {carry!r}")
+    "rehash" for large corpora (``curate()`` does above
+    ``CARRY_THRESHOLD`` survivors); "arrays" stays the zero-join fast
+    path for bench/toy scale.  Identical output, pytest-pinned."""
+    if carry not in ("arrays", "rehash"):
+        raise ValueError(f"carry must be arrays|rehash, got {carry!r}")
     if n_hashes is None and bands is None:
-        if auto_params is None or auto_params:
-            n_hashes, bands = minhash_params(jaccard_threshold)
-        else:
-            n_hashes, bands = 32, 8
+        n_hashes, bands = minhash_params(jaccard_threshold)
     elif n_hashes is None or bands is None:
         raise ValueError("pass both n_hashes and bands, or neither")
-    elif auto_params:
-        # conflicting instructions — refusing beats silently discarding
-        # the explicitly-pinned banding
-        raise ValueError(
-            "auto_params=True conflicts with explicit n_hashes/bands; "
-            "pass one or the other"
-        )
     if bands < 1 or n_hashes < 1:
         # bands=0 would ZeroDivisionError deep in the band builder and
         # n_hashes=0 degenerates to empty signatures (single-bucket LSH,
@@ -472,21 +457,6 @@ def minhash_near_dups(
     if n_hashes % bands:
         raise ValueError(
             f"n_hashes ({n_hashes}) must be divisible by bands ({bands})"
-        )
-    if carry == "auto":
-        if carry_rows is None:
-            raise ValueError(
-                "carry='auto' needs carry_rows=<known row count> — deriving "
-                "it here would run a Spark action at plan-construction time, "
-                "evaluating the caller's upstream plan; pass the count you "
-                "already have (curate() does) or pick carry explicitly "
-                "('arrays' for toy/bench corpora, 'rehash' above ~100k docs)"
-            )
-        carry = "rehash" if carry_rows > 100_000 else "arrays"
-    elif carry_rows is not None:
-        # refusing beats silently ignoring the caller's count
-        raise ValueError(
-            f"carry_rows only applies to carry='auto' (got carry={carry!r})"
         )
     rows_per_band = n_hashes // bands
 

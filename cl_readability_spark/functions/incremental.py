@@ -18,10 +18,10 @@ carries the bucket spec (Spark's built-in catalog supports bucketed
 
 Two catalog kinds share the machinery:
 
-- EXACT: one row per normalized-content fingerprint —
-  ``md5(regexp_replace(lower(text), '[^a-z0-9]', ''))``, the same
-  normalization ``curate()``'s exact gate uses — bucketed by
-  ``fingerprint``.  Probe = LEFT ANTI (or flag) join.
+- EXACT: one row per normalized-content fingerprint
+  (``content_fingerprint`` — the one definition ``curate()``'s exact
+  gate, the ingest loop and the streaming exact dedup share) —
+  bucketed by ``fingerprint``.  Probe = LEFT ANTI (or flag) join.
 - MINHASH: the LSH band rows of ``functions.dedup.band_signature_stage``
   (k-word shingles → n-hash minhash → banded 64-bit slice hashes),
   folded to ONE join column ``band_key = xxhash64(band_idx, band_sig)``
@@ -53,8 +53,13 @@ _EXACT_META_COLS = ("kind", "n_buckets")
 _MINHASH_META_COLS = ("kind", "n_buckets", "k", "n_hashes", "bands", "seed")
 
 
-def _normalized_fingerprint(text_col: str):
-    # the curate() exact-gate normalization (functions/curation.py)
+def content_fingerprint(text_col: str):
+    """Column: the exact-dedup fingerprint of ``text_col`` —
+    ``md5(regexp_replace(lower(coalesce(text, '')), '[^a-z0-9]', ''))``.
+    Every exact-dedup site (``curate()``'s exact gate, the exact
+    catalog, the ingest loop, streaming exact dedup) uses this one
+    definition: a catalog written under one normalization and probed
+    under another would silently match nothing."""
     return F.md5(
         F.regexp_replace(
             F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[^a-z0-9]", ""
@@ -96,7 +101,7 @@ def write_exact_catalog(
     spark = df.sparkSession
     cat = (
         df.select(
-            _normalized_fingerprint(text_col).alias("fingerprint"),
+            content_fingerprint(text_col).alias("fingerprint"),
             F.col(id_col).alias("keep_id"),
         )
         .groupBy("fingerprint")
@@ -140,7 +145,7 @@ def incremental_exact_dedup(
 
     _read_meta(new_df.sparkSession, table, "exact")
     keyed = new_df.withColumn(
-        "fingerprint", _normalized_fingerprint(text_col)
+        "fingerprint", content_fingerprint(text_col)
     )
     if with_batch_keep:
         w = Window.partitionBy("fingerprint").orderBy(F.col(id_col).asc())

@@ -24,9 +24,10 @@ adds is by construction small.
 The probe must be ACTION-FREE: ``df.rdd.getNumPartitions()`` is not —
 under AQE, materializing the RDD finalizes the adaptive plan, which
 EXECUTES every upstream shuffle stage at plan-construction time (the
-minhash carry="auto" lesson; pinned by
-tests/test_dedup.py::test_minhash_carry_auto_is_action_free...).  So
-the probe reads only plan TEXT and file METADATA:
+lesson of the round-5 minhash plan builder, which counted its input;
+pinned by
+tests/test_dedup.py::test_minhash_plan_construction_is_action_free).
+So the probe reads only plan TEXT and file METADATA:
 
 - a plan that already contains a shuffle exchange (or reads a cached
   relation) follows the session's shuffle parallelism — leave it;

@@ -353,7 +353,8 @@ def classifier_quality(
     both classes so only the scoring pass reads the full corpus).
     ``prior_logodds`` is the caller-supplied log(P(pos)/P(neg)) offset
     — a NUMBER, not a computed frame: deriving it here would cost two
-    plan-time count() actions (the carry="auto" lesson, PLANS.md).
+    plan-time count() actions (the lesson of the round-5 minhash plan
+    builder, which counted its input; PLANS.md).
     Distillation recipe (DCLM-style rule→model): fit positives =
     ``gopher_flags(...).filter("gopher_ok")`` samples, negatives = the
     rejected samples — pinned in tests/test_selection.py.

@@ -37,65 +37,17 @@ def cosine_sim(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-# Above roughly this many PROBED rows the interpreted lambda-HOF cosine
-# (Catalyst runs zip_with/aggregate per row, no codegen) costs more than
-# an Arrow batch round-trip — flip score_arrow=True on the top-k entry
-# points past it (caller-supplied, like curate()'s carry_rows: deciding
-# automatically would need a count action at plan-construction time).
-# Measured at 1M×64d, local[32] (BENCH/BASELINE.md "cosine scorer A/B"):
-# full-scan 1M rows Arrow is 1.33× faster; a 250k-row probe set is 0.87×
-# (the Arrow serialization floor dominates) — crossover ~500k at dim 64.
-ARROW_SCORE_GUIDANCE_ROWS = 500_000
-
-
-def _arrow_query_scorer(query_vec: list[float]):
-    """Fused numpy batch cosine against ONE broadcast query vector —
-    the Arrow fast path for the top-k scorers (the minhash_stage /
-    embedding_near_dups `_cos_x10k` precedent).  Rounds HALF_UP to 6dp
-    like the JVM path's F.round(..., 6); the two paths agree except on
-    exact half-ulp boundaries (measure-zero for real dot products —
-    equivalence pinned on real vectors in tests/test_similarity.py).
-    Zero-norm rows score NaN, as IEEE division does on the JVM path."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    qv = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-    qn = float(np.sqrt((qv * qv).sum()))
-
-    @pandas_udf("double")
-    def _score(v):
-        if v.empty:
-            return pd.Series([], dtype="float64")
-        m = np.stack([np.asarray(x, dtype=np.float64) for x in v.values])
-        denom = np.sqrt((m * m).sum(axis=1)) * qn
-        with np.errstate(invalid="ignore", divide="ignore"):
-            sims = (m @ qv) / denom
-        rounded = np.trunc(np.abs(sims) * 1e6 + 0.5) * np.sign(sims) / 1e6
-        return pd.Series(rounded)
-
-    return _score
-
-
-def _query_scores(df, query_vec, k, id_col, vec_col, score_arrow):
+def _query_scores(df, query_vec, k, id_col, vec_col):
     """Shared scoring tail of the three top-k entry points: per-row
-    cosine vs the one query, 6dp, TakeOrderedAndProject.  The default
-    JVM expression path keeps the engine-exact semantics the oracle
-    twins hash; ``score_arrow=True`` swaps in the fused numpy scorer
-    (``_arrow_query_scorer``) — flip it when the PROBED row count is
-    large (``ARROW_SCORE_GUIDANCE_ROWS``): the lambda-HOF cosine is
-    interpreted per row and dominates wall time on big probe sets
-    (1M-scale A/B in BENCH/BASELINE.md)."""
+    cosine vs the one query, 6dp, TakeOrderedAndProject — JVM
+    expressions, the engine-exact semantics the oracle twins hash."""
     from cl_readability_spark.functions.parallelism import ensure_parallelism
 
-    # the per-row cosine (interpreted HOF or numpy) is CPU-bound: floor
-    # the parallelism so a byte-sized scan cannot serialize the scoring
+    # the per-row cosine (an interpreted HOF) is CPU-bound: floor the
+    # parallelism so a byte-sized scan cannot serialize the scoring
     df = ensure_parallelism(df)
-    if score_arrow:
-        sim = _arrow_query_scorer(query_vec)(F.col(vec_col))
-    else:
-        q = F.array(*[F.lit(float(x)) for x in query_vec])
-        sim = F.round(cosine_sim(F.col(vec_col), q), 6)
+    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    sim = F.round(cosine_sim(F.col(vec_col), q), 6)
     return (
         df.select(id_col, sim.alias("cosine_sim"))
         .orderBy(F.desc("cosine_sim"), F.asc(id_col))
@@ -109,11 +61,8 @@ def brute_force_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    score_arrow: bool = False,
 ) -> DataFrame:
-    return _query_scores(
-        embeddings, query_vec, k, id_col, vec_col, score_arrow
-    )
+    return _query_scores(embeddings, query_vec, k, id_col, vec_col)
 
 
 def _hyperplane(dim: int, plane_idx: int, seed: int) -> list[float]:
@@ -669,7 +618,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids=None,
-    score_arrow: bool = False,
 ) -> DataFrame:
     """IVF ANN top-k: score only vectors in the ``n_probe`` cells whose
     centroid direction is most aligned with the query (the standard
@@ -699,7 +647,7 @@ def ivf_topk(
     probe_cells = [int(i) for i in np.argsort(-scores)[:n_probe]]
     return _query_scores(
         assigned.filter(F.col("ivf_cell").isin(probe_cells)),
-        q, k, id_col, vec_col, score_arrow,
+        q, k, id_col, vec_col,
     )
 
 
@@ -712,11 +660,9 @@ def lsh_bucketed_topk(
     multiprobe_bits: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    score_arrow: bool = False,
 ) -> DataFrame:
     """ANN: score only vectors whose hyperplane signature is within
-    ``multiprobe_bits`` Hamming distance of the query's signature.
-    ``score_arrow`` — see ``_query_scores``."""
+    ``multiprobe_bits`` Hamming distance of the query's signature."""
     dim = len(query_vec)
     sig_df = hyperplane_signature(embeddings, dim, n_planes, seed, vec_col)
     qsig = _sig_of(query_vec, n_planes, seed)
@@ -730,7 +676,7 @@ def lsh_bucketed_topk(
                 probe_sigs.add(qsig ^ (1 << i) ^ (1 << j))
     return _query_scores(
         sig_df.filter(F.col("lsh_sig").isin(*[int(s) for s in probe_sigs])),
-        query_vec, k, id_col, vec_col, score_arrow,
+        query_vec, k, id_col, vec_col,
     )
 
 def semantic_dedup(

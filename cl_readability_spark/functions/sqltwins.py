@@ -1343,23 +1343,18 @@ def _curation_planted_curated(spark, sf_dir):
     from cl_readability_spark.functions.curation import curate
 
     corpus = _curation_planted_corpus(spark, sf_dir)
-    # materialize="none": this corpus is pure JVM expressions over the
-    # documents scan (no Arrow extraction upstream), so the branch
-    # re-evaluation the pin exists to prevent costs two cheap window
-    # passes — while the default DISK_ONLY pin would leak executor
-    # storage per bench/oracle invocation (nobody releases the handle
-    # in those harnesses).  minhash_carry="arrays" for the same reason:
-    # auto would run a count action at build time and the rehash plan
-    # pins candidate frames the harnesses never release; the corpus is
-    # 5k toy docs, squarely on the arrays side of the crossover.
-    # materialize="local_checkpoint" (r9): truncates the flagged frame's
-    # lineage before the near-dup branches WITHOUT the DISK_ONLY pin the
-    # old "none" mode avoided (localCheckpoint storage is reclaimed by
-    # the ContextCleaner — nothing for the harnesses to release), and
-    # cuts the double re-evaluation "none" paid per branch.
+    # materialize="local_checkpoint": truncates the flagged frame's
+    # lineage before the near-dup branches, so they do not each
+    # re-evaluate the corpus, and registers no pin — the default
+    # DISK_ONLY pin would leak executor storage per bench/oracle
+    # invocation (nobody releases the handle in those harnesses), while
+    # localCheckpoint storage is reclaimed by the ContextCleaner.  The
+    # minhash plan choice costs no extra job: the survivor count curate
+    # takes is the job that materializes the checkpoint, and the 5k toy
+    # docs land on the arrays side of the crossover (no candidate pins).
     return curate(
         corpus, text_col="text", key_cols=("doc_id",), policy="clusters",
-        materialize="local_checkpoint", minhash_carry="arrays",
+        materialize="local_checkpoint",
     )
 
 
@@ -1488,12 +1483,10 @@ def q_curation_line_planted(spark, sf_dir):
     # (see curation._stage_pin) — the twin corpus is an expression tree
     # that would otherwise replicate into every downstream branch's
     # analysis — and registers no pin, so repeated harness evaluations
-    # leave nothing to release.  carry="arrays" as in curation_planted
-    # (toy corpus, no build action).
+    # leave nothing to release.
     curated = curate(
         corpus, text_col="text", key_cols=("doc_id",), policy="clusters",
-        materialize="local_checkpoint", minhash_carry="arrays",
-        line_dedup=True,
+        materialize="local_checkpoint", line_dedup=True,
     )
     return curated.select(
         "doc_id",
@@ -1663,13 +1656,12 @@ def q_curation_full_planted(spark, sf_dir):
         .otherwise(r9)
     )
     corpus = docs.select("doc_id", text.alias("text"))
-    # materialize="local_checkpoint" + carry="arrays" as the other
-    # curation twins: plan-size bound for the 5-stage composition, no
-    # pins to release — see the curation_line twin note.
+    # materialize="local_checkpoint" as the other curation twins:
+    # plan-size bound for the 5-stage composition, no pins to release —
+    # see the curation_line twin note.
     curated = curate(
         corpus, text_col="text", key_cols=("doc_id",), policy="clusters",
-        materialize="local_checkpoint", minhash_carry="arrays",
-        jaccard_threshold=0.7, min_chars=30,
+        materialize="local_checkpoint", jaccard_threshold=0.7, min_chars=30,
         line_dedup=True,
         c4=True, c4_opts={"min_sentences": 2, "badwords": ("badwordx",)},
         substring_dedup_k=8, substring_dedup_keep="none",
@@ -3452,11 +3444,7 @@ def q_ingest_planted(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="clrs_twin_ingest_sink_")
     try:
         sink = CheckpointedSink(root)
-        opts = {
-            "policy": "clusters",
-            "materialize": "none",
-            "minhash_carry": "arrays",
-        }
+        opts = {"policy": "clusters", "materialize": "none"}
         for b in (batch1, batch2):
             ingest_batch(
                 b, sink, exact_table=table, pre_extracted=True,
@@ -3894,8 +3882,7 @@ def q_curation_url_planted(spark, sf_dir):
     curated = curate(
         corpus.withColumn("url", url),
         text_col="text", key_cols=("doc_id",), policy="clusters",
-        materialize="local_checkpoint", minhash_carry="arrays",
-        url_col="url",
+        materialize="local_checkpoint", url_col="url",
     )
     return curated.select(
         "doc_id",

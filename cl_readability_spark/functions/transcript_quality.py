@@ -73,8 +73,8 @@ def conversation_flags(
     violation wherever it appears.  Join the output back on
     ``conv_col`` (broadcast if the kept set is small) or semi-join
     ``filter(conv_ok)`` to gate the turn table."""
-    # kwarg guards before any plan is built (the minhash_banding
-    # ADVICE stance)
+    # kwarg guards before any plan is built: reject nonsense at call
+    # time, not mid-action
     if min_turns < 1:
         raise ValueError("min_turns must be >= 1")
     if max_turns < min_turns:

@@ -65,6 +65,7 @@ from cl_readability_spark.core.config import DEFAULT_CONFIG, ExtractorConfig
 from cl_readability_spark.functions.curation import _row_key, curate
 from cl_readability_spark.functions.incremental import (
     append_minhash_catalog,
+    content_fingerprint,
     incremental_exact_dedup,
     incremental_minhash_dedup,
 )
@@ -384,14 +385,7 @@ def ingest_batch(
         ).withColumnRenamed("in_catalog", "exact_in_catalog")
     else:
         df = df.withColumn("exact_in_catalog", F.lit(False)).withColumn(
-            "fingerprint",
-            F.md5(
-                F.regexp_replace(
-                    F.lower(F.coalesce(F.col("extracted_text"), F.lit(""))),
-                    "[^a-z0-9]",
-                    "",
-                )
-            ),
+            "fingerprint", content_fingerprint("extracted_text")
         )
     if minhash_table is not None:
         df = incremental_minhash_dedup(

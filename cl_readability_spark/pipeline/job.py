@@ -25,8 +25,6 @@ from cl_readability_spark.pipeline.udfs import (
     make_readerable_udf,
 )
 
-OUTPUT_COLUMNS = ["conv_id", "turn_idx", "extracted_text", "content_spans"]
-
 
 def salted_repartition(
     df: DataFrame, num_partitions: int | None = None, salt_buckets: int = 16
@@ -57,7 +55,6 @@ def extract_transcripts(
     salt_buckets: int = 16,
     num_partitions: int | None = None,
     prefilter_readerable: bool | str = False,
-    with_metrics: bool = True,
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) →
     extracted(conv_id, turn_idx, extracted_text, content_spans [, metrics…]).
@@ -87,8 +84,6 @@ def extract_transcripts(
         src = src.filter(make_readerable_udf(config)(F.col("text")))
     src = salted_repartition(src, num_partitions, salt_buckets)
     res = src.mapInArrow(make_arrow_extractor(config), EXTRACT_OUTPUT_SCHEMA)
-    if not with_metrics:
-        res = res.select(*OUTPUT_COLUMNS)
     return res.sortWithinPartitions("conv_id", "turn_idx")
 
 

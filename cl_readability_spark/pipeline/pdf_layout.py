@@ -413,8 +413,8 @@ def assemble_layout(
     string — decoded-but-no-content, distinct from undecodable.
 
     Scale shape: single doc-keyed exchange, see module doc."""
-    # kwarg guards BEFORE any plan is built (the minhash_banding
-    # ADVICE stance: reject nonsense at call time, not mid-action)
+    # kwarg guards BEFORE any plan is built: reject nonsense at call
+    # time, not mid-action
     if not (0.0 <= header_band <= 1.0) or not (0.0 <= footer_band <= 1.0):
         raise ValueError("header_band/footer_band must be fractions in [0, 1]")
     if repeat_min_pages < 1:

@@ -589,16 +589,13 @@ def streaming_exact_dedup(
     Duplicates arriving LATER than the watermark horizon are re-emitted by
     construction; downstream exact dedup at rest (the batch gate) remains
     the backstop, exactly like late data in the windowed rollup."""
-    from pyspark.sql import functions as F
+    from cl_readability_spark.functions.incremental import (
+        content_fingerprint,
+    )
 
     stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(input_path)
-    fingerprint = F.md5(
-        F.regexp_replace(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[^a-z0-9]", ""
-        )
-    )
     deduped = (
-        stream.withColumn("_fp", fingerprint)
+        stream.withColumn("_fp", content_fingerprint(text_col))
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["_fp"])
         .drop("_fp")

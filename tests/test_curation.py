@@ -89,6 +89,29 @@ def test_curate_report_partitions_rows_in(spark):
     assert not flags["b"].exact_keep and not flags["c"].exact_keep
 
 
+def test_curate_local_checkpoint_evaluates_upstream_once(spark, planted):
+    """Under materialize="local_checkpoint" the survivor count that picks
+    the minhash plan is the job that materializes the flagged frame's
+    (lazy) checkpoint: a counting upstream sees each row exactly once
+    across curate() itself and every later read of its result."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def _counting(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
+
+    upstream = planted.repartition(2).mapInPandas(_counting, planted.schema)
+    curated = curate(
+        upstream, jaccard_threshold=0.7, materialize="local_checkpoint"
+    )
+    assert acc.value == 6
+    kept = {r.conv_id for r in curated.filter(F.col("kept")).collect()}
+    assert kept == {"c1", "c5"}
+    assert curation_report(curated).first().rows_in == 6
+    assert acc.value == 6
+
+
 def test_curate_plan_single_extraction(spark):
     """Plan-shape golden (VERDICT r2 #1): the flagged extraction frame is
     materialized once before the near-dup branch references it twice.
@@ -108,17 +131,16 @@ def test_curate_plan_single_extraction(spark):
         # checkpoint — the extraction/minhash stages then live in those
         # checkpoint jobs and the MapInArrow counts below would trivially
         # pass without proving the single-extraction property)
-        # minhash_carry="arrays": this golden pins the FLAGGED-frame
-        # materialization property; the rehash minhash plan adds its own
+        # the toy corpus is far below CARRY_THRESHOLD, so curate picks
+        # the arrays minhash plan: this golden pins the FLAGGED-frame
+        # materialization property, which the rehash plan's own
         # internally-pinned subtrees (covered by the dedup equivalence
-        # test) that would change the MapInArrow counts without bearing
-        # on the single-extraction claim
+        # test) would blur
         curated = curate(
             extract_transcripts(transcripts, salt_buckets=4),
             min_stopword_bp=0,
             materialize=materialize,
             policy="pairwise",
-            minhash_carry="arrays",
         )
         return curated._jdf.queryExecution().executedPlan().toString()
 
@@ -297,37 +319,11 @@ def test_release_curated_unpersists_the_pin(spark, planted):
     assert release_curated(planted) == 0
 
 
-def test_curate_minhash_banding_passthrough(spark, planted):
-    """minhash_banding pins the LSH sizing through curate() →
-    minhash_near_dups (the deployment recall/cost knob and the bench A/B
-    axis).  On this corpus the near-dup is caught under any banding
-    (NEAR shares most 5-grams with GOOD), so the pinned run must agree
-    with the default recall-sized run; an invalid banding surfaces
-    minhash_near_dups' divisibility error rather than being dropped."""
-    base = {
-        (r.conv_id, r.turn_idx, r.kept)
-        for r in curate(planted, jaccard_threshold=0.7).collect()
-    }
-    pinned = {
-        (r.conv_id, r.turn_idx, r.kept)
-        for r in curate(
-            planted, jaccard_threshold=0.7, minhash_banding=(32, 8)
-        ).collect()
-    }
-    assert pinned == base
-    # the invalid banding raises at plan construction, BEFORE the
-    # materialization action — no pin to orphan
-    with pytest.raises(ValueError, match="divisible"):
-        curate(planted, jaccard_threshold=0.7, minhash_banding=(32, 7))
-    from cl_readability_spark.functions.pins import release_all_pins
-
-    release_all_pins(spark)
-
-
-def test_pin_registry_recovers_lost_handles(spark, planted):
+def test_pin_registry_recovers_lost_handles(spark, planted, monkeypatch):
     """A pinned frame derived with .filter() loses the attribute handle;
     the session registry still knows the pin, so leaks are detectable
     (pins_outstanding) and recoverable (release_all_pins)."""
+    from cl_readability_spark.functions import curation
     from cl_readability_spark.functions.pins import (
         pins_outstanding,
         release_all_pins,
@@ -335,8 +331,8 @@ def test_pin_registry_recovers_lost_handles(spark, planted):
     )
 
     release_all_pins(spark)  # clean slate
-    # default minhash_carry="auto" picks the arrays plan on this toy
-    # corpus (below CARRY_THRESHOLD) → one pin, the flagged frame
+    # the toy corpus is below CARRY_THRESHOLD, so curate picks the
+    # arrays minhash plan → one pin, the flagged frame
     curated = curate(planted, jaccard_threshold=0.7, policy="pairwise")
     assert pins_outstanding(spark) == 1
     derived = curated.filter(F.col("kept"))     # handle lost here
@@ -347,13 +343,11 @@ def test_pin_registry_recovers_lost_handles(spark, planted):
     after = {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
     assert len(after) < len(before)
     assert pins_outstanding(spark) == 0
-    # releasing through the exact handle also deregisters; the explicit
-    # rehash carry forwards its candidate-pair and candidate-array pins
-    # to the same handle (3 total)
-    curated2 = curate(
-        planted, jaccard_threshold=0.7, policy="pairwise",
-        minhash_carry="rehash",
-    )
+    # releasing through the exact handle also deregisters; the rehash
+    # minhash plan (reached here by dropping the threshold) forwards its
+    # candidate-pair and candidate-array pins to the same handle (3 total)
+    monkeypatch.setattr(curation, "CARRY_THRESHOLD", 0)
+    curated2 = curate(planted, jaccard_threshold=0.7, policy="pairwise")
     assert pins_outstanding(spark) == 3
     assert release_pinned(curated2) == 3
     assert pins_outstanding(spark) == 0
@@ -419,8 +413,7 @@ def test_curate_line_dedup_flag(spark):
         rows, "conv_id long, turn_idx int, extracted_text string"
     )
     curated = curate(
-        df, min_stopword_bp=0, materialize="none", minhash_carry="arrays",
-        line_dedup=True,
+        df, min_stopword_bp=0, materialize="none", line_dedup=True,
     )
     flags = {r.conv_id: r for r in curated.collect()}
     assert flags[0].kept and flags[0].line_dedup_n_kept == 2
@@ -632,7 +625,7 @@ def test_curate_stage_pin_stacking_releases_all(spark):
         rows, "conv_id long, turn_idx int, extracted_text string"
     )
     curated = curate(
-        df, min_stopword_bp=0, materialize="disk", minhash_carry="arrays",
+        df, min_stopword_bp=0, materialize="disk",
         line_dedup=True, gopher_repetition=True,
     )
     assert curated.count() == 6
@@ -880,8 +873,7 @@ def test_curate_substring_dedup_stage(spark):
         rows, "conv_id long, turn_idx int, extracted_text string"
     )
     curated = curate(
-        df, min_stopword_bp=0, materialize="none", minhash_carry="arrays",
-        substring_dedup_k=8,
+        df, min_stopword_bp=0, materialize="none", substring_dedup_k=8,
     )
     flags = {r.conv_id: r for r in curated.collect()}
     assert flags[0].kept and flags[0].extracted_text == good0
@@ -895,10 +887,7 @@ def test_curate_substring_dedup_stage(spark):
     # the flag is exactly the manual pre-stage composition
     staged, pins = substring_dedup_rewrite(df, k=8)
     assert pins == []
-    manual = curate(
-        staged, min_stopword_bp=0, materialize="none",
-        minhash_carry="arrays",
-    )
+    manual = curate(staged, min_stopword_bp=0, materialize="none")
     a = sorted(
         (r.conv_id, r.extracted_text, r.kept, r.substr_dedup_n_kept)
         for r in manual.collect()
@@ -911,7 +900,7 @@ def test_curate_substring_dedup_stage(spark):
 
     # keep='first' keeps the globally-first copy of the run (doc 0)
     first = curate(
-        df, min_stopword_bp=0, materialize="none", minhash_carry="arrays",
+        df, min_stopword_bp=0, materialize="none",
         substring_dedup_k=8, substring_dedup_keep="first",
     )
     t = {r.conv_id: r.extracted_text for r in first.collect()}
@@ -1041,7 +1030,7 @@ def test_curate_c4_and_gopher_repetition_stages(spark):
         r.doc_id: r
         for r in curate(
             df, text_col="text", key_cols=("doc_id",), policy="clusters",
-            materialize="disk", minhash_carry="arrays", min_chars=30,
+            materialize="disk", min_chars=30,
             line_dedup=True, substring_dedup_k=8, substring_dedup_keep="none",
             c4=True, c4_opts={"min_sentences": 2, "badwords": ("badwordx",)},
             gopher_repetition=True, minhash_k=1,

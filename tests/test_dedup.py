@@ -237,9 +237,9 @@ def test_minhash_params_recall_math():
         minhash_params(0.2, recall_target=0.999, n_max=8)
 
 
-def test_minhash_auto_params_beats_fixed_banding_at_low_threshold(spark):
+def test_minhash_recall_sized_banding_beats_fixed_at_low_threshold(spark):
     """100 planted boundary pairs (word-5-gram J ≈ 0.58, above the 0.5
-    threshold): the historical fixed 8×4 banding (auto_params=False)
+    threshold): the historical fixed banding (n_hashes=32, bands=8)
     misses a large fraction of them (expected candidate P ≈ 0.61 per
     pair); the recall-curve sizing — THE DEFAULT since round 5 —
     recovers ≥ 0.9.  Verification is exact either way — this is purely
@@ -253,25 +253,18 @@ def test_minhash_auto_params_beats_fixed_banding_at_low_threshold(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     expected = {(2 * g, 2 * g + 1) for g in range(100)}
 
+    # the default IS the recall-sized banding; explicit (n_hashes, bands)
+    # pins, and half-specified banding is rejected
     fixed = {
         (r.id_a, r.id_b)
         for r in minhash_near_dups(
-            df, jaccard_threshold=0.5, auto_params=False
+            df, jaccard_threshold=0.5, n_hashes=32, bands=8
         ).collect()
     }
     auto = {
         (r.id_a, r.id_b)
         for r in minhash_near_dups(df, jaccard_threshold=0.5).collect()
     }
-    # the default IS the recall-sized banding; explicit (n_hashes, bands)
-    # still pins, and half-specified banding is rejected
-    explicit = {
-        (r.id_a, r.id_b)
-        for r in minhash_near_dups(
-            df, jaccard_threshold=0.5, n_hashes=32, bands=8
-        ).collect()
-    }
-    assert explicit == fixed
     with pytest.raises(ValueError, match="both"):
         minhash_near_dups(df, jaccard_threshold=0.5, n_hashes=64)
     assert fixed <= expected and auto <= expected  # no false pairs
@@ -313,7 +306,7 @@ def test_minhash_rehash_carry_equivalent_and_releasable(spark):
     assert release_pinned(rh) == 2
     assert pins_outstanding(spark) == before
     with pytest.raises(ValueError, match="carry"):
-        minhash_near_dups(df, carry="nope")
+        minhash_near_dups(df, carry="auto")
 
 
 def test_simhash_max_group_caps_clone_pair_explosion(spark):
@@ -412,13 +405,14 @@ def test_minhash_plan_shape(spark, corpus_df):
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
 
 
-def test_minhash_carry_auto_is_action_free_at_plan_construction(spark):
-    """carry='auto' must be a pure plan builder.  Round 5's version ran
-    df.count() inside the builder — a Spark action evaluating the caller's
-    entire upstream plan (e.g. extraction) once just to pick a code path,
-    and again for the real job unless the input was pinned.  Now the
-    caller supplies carry_rows and construction triggers ZERO jobs; the
-    count still steers the branch (arrays is join-free, rehash joins)."""
+def test_minhash_plan_construction_is_action_free(spark):
+    """Building either minhash plan must be a pure plan builder.  Round
+    5's version ran df.count() inside the builder — a Spark action
+    evaluating the caller's entire upstream plan (e.g. extraction) once
+    just to pick a code path, and again for the real job unless the
+    input was pinned.  Construction triggers ZERO jobs for both plans
+    (arrays is join-free, rehash joins); the plan choice belongs to the
+    caller (curate picks it from the count its pin action takes)."""
     acc = spark.sparkContext.accumulator(0)
     base = spark.createDataFrame(
         [(i, f"alpha beta gamma delta epsilon zeta eta theta iota {i}")
@@ -432,8 +426,8 @@ def test_minhash_carry_auto_is_action_free_at_plan_construction(spark):
             yield pdf
 
     docs = base.repartition(2).mapInPandas(_counting, base.schema)
-    small = minhash_near_dups(docs, carry="auto", carry_rows=10)
-    big = minhash_near_dups(docs, carry="auto", carry_rows=200_000)
+    small = minhash_near_dups(docs, carry="arrays")
+    big = minhash_near_dups(docs, carry="rehash")
     assert acc.value == 0, "plan construction must not evaluate the input"
     small_plan = small._jdf.queryExecution().analyzed().toString()
     big_plan = big._jdf.queryExecution().analyzed().toString()
@@ -445,10 +439,6 @@ def test_minhash_carry_auto_is_action_free_at_plan_construction(spark):
 
     release_pinned(big)
     assert acc.value == 0
-    with pytest.raises(ValueError, match="carry_rows"):
-        minhash_near_dups(docs, carry="auto")
-    with pytest.raises(ValueError, match="carry_rows"):
-        minhash_near_dups(docs, carry="arrays", carry_rows=10)
 
 
 def test_simhash_plan_shape_join_free(spark, corpus_df):

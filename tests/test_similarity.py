@@ -565,30 +565,3 @@ def test_near_dups_group_col_plan_shape(spark):
     assert len(band_exchanges) == 1, plan[:2000]
     assert "_grp" in band_exchanges[0], band_exchanges[0]
     assert plan.count("ArrowEvalPython") == 2
-
-
-def test_score_arrow_path_matches_jvm_scores(spark):
-    """Round-7 verdict task 6: the Arrow batch scorer (score_arrow=True,
-    the big-probe-set path) must produce the same 6dp cosines and the
-    same top-k as the JVM expression path on real vectors, for all
-    three entry points."""
-    from cl_readability_spark.functions.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        lsh_bucketed_topk,
-    )
-
-    embs = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    q = list(embs.filter(F.col("vec_id") == 0).first()["embedding"])
-    corpus = embs.filter(F.col("vec_id") != 0)
-
-    for fn, kw in (
-        (brute_force_topk, {}),
-        (ivf_topk, {"n_cells": 8, "n_probe": 8}),
-        (lsh_bucketed_topk, {"n_planes": 4, "multiprobe_bits": 2}),
-    ):
-        jvm = fn(corpus, q, k=20, **kw).collect()
-        arrow = fn(corpus, q, k=20, score_arrow=True, **kw).collect()
-        assert [r.vec_id for r in jvm] == [r.vec_id for r in arrow], fn
-        for a, b in zip(jvm, arrow):
-            assert abs(a.cosine_sim - b.cosine_sim) < 2e-6, (fn, a, b)
