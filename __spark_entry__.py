@@ -185,8 +185,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # closed-form oracle on the curation_planted corpus, a strictly
     # stronger check than >0-rows on an unverifiable real-corpus report.
     # The real composition stays benched (bench.py curation_pipeline) and
-    # pytest-covered (tests/test_curation.py); the 1M rerun protocol
-    # (scripts/million_rerun_r7.py) records its counts every round.
+    # pytest-covered (tests/test_curation.py); the 1M rerun counts are
+    # recorded in BENCH/BASELINE.md ("Round-7 sustained 1M session").
 
     # NOTE (round 7): the rows-only embedding_near_dups entry (banded
     # LSH over embeddings + planted perturbed copies) was retired to

@@ -39,12 +39,6 @@ def word_count(text: str) -> int:
     return len(text.split())
 
 
-def char_count(node, ch: str = ",") -> int:
-    """Readability._getCharCount — split-based, so N separators → N (JS
-    ``split(s).length - 1``)."""
-    return get_inner_text(node).count(ch)
-
-
 def get_link_density(element: Element) -> float:
     """Readability._getLinkDensity (readability.lisp:408-423): Σ over <a> of
     text-length × (0.3 if href starts '#' else 1) ÷ total text length.

@@ -8,8 +8,8 @@ higher-order-function lambdas (no codegen) and 2.5-6.6× slower — while
 everything wide stays JVM: band/bucket exchanges, collect_list buckets,
 pairwise explode, exact Jaccard on hashed-shingle long arrays, bit_count
 Hamming verify.  JVM-only reference formulations are kept
-(``word_shingles``/``minhash_signature``/``simhash_signature_agg``) as
-the no-python option and as differential-test anchors.
+(``word_shingles``/``minhash_signature``) as the no-python option and as
+differential-test anchors.
 
 Scale design: the only wide operations are (a) the explode of ``bands``
 rows per doc (recall-curve-sized per threshold since round 5; 7-23 in
@@ -908,9 +908,9 @@ def simhash_signature(
     keyed blake2b-64 → per-bit ±1 sums weighted by token count → sign
     bits, all one numpy pass per batch.  (id, simhash:long).
 
-    Replaces the 64-aggregate JVM formulation (kept below as
-    ``simhash_signature_agg``) which paid a multi-second janino compile
-    for its 64 CASE-WHEN sums and was re-evaluated per plan branch."""
+    Replaces a 64-aggregate JVM formulation that paid a multi-second
+    janino compile for its 64 CASE-WHEN sums and was re-evaluated per
+    plan branch."""
     import hashlib
 
     import numpy as np
@@ -956,41 +956,6 @@ def simhash_signature(
     return ensure_parallelism(df.select(id_col, text_col)).mapInPandas(
         _batches, out_schema
     )
-
-
-def simhash_signature_agg(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """JVM reference formulation of SimHash: tokens → xxhash64 → 64
-    per-bit ±1 sum aggregates → sign bits (one shuffle on id, no Python).
-    Measurably slower than the fused stage (64 CASE-WHEN aggregates are a
-    janino-compile cliff and HOF-free but width-heavy); kept as the
-    no-Python option and as a differential test anchor."""
-    words = F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
-    tok = df.select(F.col(id_col), words.alias("tok")).withColumn(
-        "h", F.xxhash64(F.col("tok"))
-    )
-    bit_sums = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(
-                -1
-            )
-        ).alias(f"b{i}")
-        for i in range(64)
-    ]
-    agg = tok.groupBy(id_col).agg(*bit_sums)
-    sim = agg.select(
-        F.col(id_col),
-        sum(
-            [
-                F.when(F.col(f"b{i}") > 0, F.lit(1).cast("long") * (2**i) if i < 63
-                       else F.lit(-(2**63))).otherwise(0)
-                for i in range(64)
-            ],
-            F.lit(0).cast("long"),
-        ).alias("simhash"),
-    )
-    return sim
 
 
 def winnow_fingerprints(
