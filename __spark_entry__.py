@@ -16,9 +16,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cl_readability_spark.functions.sqltwins import SQL_TWINS
-from cl_readability_spark.pipeline.job import extract_transcripts, metrics_rollup
+from cl_readability_spark.pipeline.job import extract_transcripts
 from cl_readability_spark.pipeline.transcripts import documents_as_transcripts
-from cl_readability_spark.pipeline.udfs import make_readerable_udf
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -49,56 +48,6 @@ def _q_extract_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_extract_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    transcripts = documents_as_transcripts(spark, sf_dir)
-    return metrics_rollup(extract_transcripts(transcripts, salt_buckets=8))
-
-
-def _q_extract_triaged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full extraction behind the JVM regexp readerable gate (rows-only:
-    the triage expression is oracle-checked as readerable_triage_sql; the
-    DOM extraction it feeds is not SQL-expressible).  The 100 TB shape for
-    low-readerable corpora: the gate is whole-stage-codegen, so rejected
-    rows never reach a python worker.  Non-vacuous by construction: the
-    per-conversation digest turns (transcripts.py, turn_idx 25) clear the
-    triage threshold while the short per-doc turns are rejected, so this
-    returns >0 rows at every sf (pinned in tests/test_readerable.py)."""
-    transcripts = documents_as_transcripts(spark, sf_dir)
-    return extract_transcripts(
-        transcripts, salt_buckets=8, prefilter_readerable="jvm"
-    ).select(
-        "conv_id",
-        "turn_idx",
-        "extracted_text",
-        F.size("content_spans").alias("n_spans"),
-        "status",
-        "text_length",
-    )
-
-
-def _q_span_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exploded content spans of the real extraction (retired from the
-    registry round 7 — the span_invariants twin hash-checks the same
-    operator's output contract; kept importable for ad-hoc use)."""
-    from cl_readability_spark.pipeline.diff import explode_spans
-
-    transcripts = documents_as_transcripts(spark, sf_dir)
-    return explode_spans(extract_transcripts(transcripts, salt_buckets=8))
-
-
-def _q_readerable_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    transcripts = documents_as_transcripts(spark, sf_dir)
-    flag = make_readerable_udf()(F.col("text"))
-    return (
-        transcripts.select("conv_id", flag.alias("readerable"))
-        .groupBy("conv_id")
-        .agg(
-            F.count("*").cast("long").alias("n_turns"),
-            F.sum(F.col("readerable").cast("long")).alias("n_readerable"),
-        )
-    )
-
-
 # The driver checks at most this many queries() entries; exceeding it
 # silently drops the last-registered ones from the correctness surface
 # (it cost span_explode its round-5 row).  Pinned by queries() itself and
@@ -119,22 +68,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # agreement pinned in tests/test_readerable.py, and the extraction it
     # gates is pinned by extract_documents (rows+schema) plus the
     # hash-checked span_invariants re-aggregation.  bench.py still times
-    # the composed gate+extract as extract_corpus_triaged;
-    # _q_extract_triaged stays importable for ad-hoc use.
+    # the composed gate+extract as extract_corpus_triaged.
     # NOTE (round 7): the rows-only extract_metrics_rollup entry was
     # retired to fund the hash-checked curation_line_planted twin under
     # the 50-query cap — the rollup EXPRESSIONS are hash-checked by the
     # metrics_rollup twin, and the real-extraction output it rolled up
     # is pinned by extract_documents (rows+schema) plus the hash-checked
-    # span_invariants re-aggregation of the same output.
-    # _q_extract_rollup stays importable for ad-hoc use (bench.py still
+    # span_invariants re-aggregation of the same output (bench.py still
     # times the composed rollup as extract_corpus).
     # NOTE (round 7): the rows-only readerable_triage entry was retired
     # to fund the hash-checked span_invariants twin under the 50-query
     # cap — it was fully subsumed: readerable_triage_sql hash-checks the
     # SAME triage expression per conversation (digest-CTE twin), and
     # tests/test_readerable.py pins the python/JVM gate agreement.
-    # _q_readerable_triage stays importable for ad-hoc use.
     # NOTE (round 7): the rows-only dedup_minhash entry (raw minhash over
     # the real documents table) was retired to fund the hash-checked
     # gopher_repetition twin under the 50-query cap — the minhash chain
@@ -210,8 +156,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # hash-checked chain: the span_invariants twin runs explode_spans
     # (outer=True) over the SAME real extraction and hash-checks the
     # full _build_text_and_spans contract, a strictly stronger check
-    # than >0-rows on the raw explosion.  _q_span_explode stays
-    # importable for ad-hoc use.
+    # than >0-rows on the raw explosion.
     if len(out) > DRIVER_QUERY_CAP:
         raise AssertionError(
             f"queries() registers {len(out)} > {DRIVER_QUERY_CAP} entries; "

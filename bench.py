@@ -152,7 +152,7 @@ def main() -> None:
     # 6b. DSIR importance resampling over the documents table (target =
     # every 10th doc): fit both hashed-ngram distributions, weight every
     # doc, Gumbel-top-k 1% — the data-selection stack's bench row (its
-    # correctness rows are the LOCAL_TWINS dsir_logw DuckDB twin and the
+    # correctness rows are the dsir_logw DuckDB twin and the
     # python differential in tests/test_selection.py)
     from cl_readability_spark.functions.selection import dsir_sample
 
@@ -359,7 +359,7 @@ def main() -> None:
     # the planted-leak corpus (split_leak_planted LOCAL twin)
     from cl_readability_spark.functions.decontam import split_leakage
     from cl_readability_spark.functions.sft import sft_examples
-    from cl_readability_spark.functions.sqltwins import q_split_leak_planted
+    from tests.local_twins import q_split_leak_planted
 
     def _sft_examples():
         out = sft_examples(corpus, max_context_tokens=256)

@@ -21,7 +21,7 @@ whitespace class (java/RE2/python parity), the merge tie-break is
 the fit is invariant to corpus partitioning (tested).  The trainer
 uses the incremental pair-statistics algorithm (index pairs → affected
 word types only per merge, the reference subword-nmt optimization); a
-naive recount implementation ships alongside as the differential
+naive recount implementation in tests/test_bpe.py is the differential
 oracle and the two must produce the IDENTICAL merge sequence.
 
 Marker convention: GPT-2 style end-of-word marker ``</w>`` appended to
@@ -58,36 +58,6 @@ def word_counts(
     )
     counts = exploded.groupBy("word").agg(F.count("*").alias("n"))
     return counts.orderBy(F.desc("n"), F.asc("word")).limit(int(max_types))
-
-
-def _merge_loop_naive(types: dict[tuple, int], n_merges: int) -> list[tuple]:
-    """Reference trainer: full pair recount every round.  O(merges x
-    types) — the differential oracle for the incremental trainer."""
-    merges: list[tuple] = []
-    syms = {w: list(w) for w in types}
-    for _ in range(n_merges):
-        pairs: dict[tuple, int] = {}
-        for w, cnt in types.items():
-            s = syms[w]
-            for a, b in zip(s, s[1:]):
-                pairs[(a, b)] = pairs.get((a, b), 0) + cnt
-        if not pairs:
-            break
-        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(best)
-        joined = best[0] + best[1]
-        for w in types:
-            s = syms[w]
-            i, out = 0, []
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == best[0] and s[i + 1] == best[1]:
-                    out.append(joined)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            syms[w] = out
-    return merges
 
 
 def _merge_loop(types: dict[tuple, int], n_merges: int) -> list[tuple]:

@@ -54,16 +54,17 @@ from pyspark.sql.window import Window
 from cl_readability_spark.functions.dedup import dup_clusters, minhash_near_dups
 from cl_readability_spark.functions.incremental import content_fingerprint
 from cl_readability_spark.functions.pins import attach_pins, release_pinned
-from cl_readability_spark.functions.sqltwins import (
-    C4_JS_LINE_RE,
-    C4_SENTENCE_RE,
-    LANG_MARKERS,
-    PII_PATTERNS as _PII_PATTERNS,
-    STOPWORDS,
-    c4_badword_re,
-    c4_drop_line_re,
-    c4_short_line_re,
-)
+
+# quality_flag's stopword and language-marker lists; the DuckDB oracles
+# (functions/sqltwins.py: quality_score, langid) build from these SAME
+# lists, so both engines count the same tokens.
+STOPWORDS = ["the", "a", "of", "to", "and", "in", "is", "on", "for", "with"]
+LANG_MARKERS = {
+    "en": ["the", "and", "of", "to", "is", "with"],
+    "de": ["der", "die", "das", "und", "ist", "nicht"],
+    "es": ["el", "los", "las", "que", "y", "una"],
+    "fr": ["le", "les", "et", "est", "une", "dans"],
+}
 
 
 def _token_occurrences(lowered, tokens) -> "F.Column":
@@ -90,7 +91,7 @@ def quality_flag(
     langs: tuple[str, ...] = ("en",),
 ):
     """Boolean Column: length window + stopword-ratio floor + langid gate
-    (the sqltwins quality/langid heuristics composed as one expression).
+    (the quality_score/langid twin heuristics composed as one expression).
     Fully whole-stage-codegen: the stopword and language-marker counts
     are ``regexp_count`` projections (``_token_occurrences``), not
     lambda HOFs — value-identical to the filter-HOF form (differential
@@ -212,6 +213,61 @@ def gopher_flags(
     )
 
 
+# --- C4 line/page cleaning pattern literals (Raffel et al. 2020 §2.2).
+# c4_filters builds the Spark expressions and the c4_planted DuckDB
+# oracle (tests/local_twins.py) builds its SQL from these SAME literals, so
+# the two engines are in lockstep by construction.  Valid in BOTH Java
+# regex and RE2: no lookaround, ``[^\n]`` instead of ``.`` (Java's dot
+# excludes \r and the unicode line separators, RE2's only \n), explicit
+# whitespace classes (java \s and RE2 \s disagree on U+000B), and the
+# Spark side prepends ``(?d)`` (UNIX_LINES) so Java's multiline ^ treats
+# ONLY \n as a line break — which RE2 always does.  Line filters apply
+# to ``text || '\n'`` with a MANDATORY trailing \n in each pattern (the
+# "terminator convention"): no pattern can match the empty string, so
+# the engines' divergent empty-match behaviors never engage (probed:
+# RE2 double-counts interior empty lines under ^...$, Java refuses ^ at
+# end-of-input; with the mandatory \n both agree on every case of the
+# randomized differential suite in tests/test_curation.py).
+C4_INTRA_WS = r"[ \t\f\r]"  # intra-line ws (NOT \x0b: VT is word-
+#                             internal, matching gopher_flags' class)
+C4_NONWS = r"[^ \t\f\r\n]"  # one word character (non-ws, non-newline)
+C4_JS_LINE_RE = r"(?i:[^\n]*javascript[^\n]*)"
+C4_NO_TERMINAL_RE = r"[^\n]*[^ \t\f\r\n.!?\"”]" + C4_INTRA_WS + "*"
+C4_SENTENCE_RE = r"[.!?]+"  # sentence-terminal runs (count heuristic)
+
+
+def c4_short_line_re(min_words: int) -> str:
+    """Full-line regex matching lines with FEWER than ``min_words``
+    whitespace-separated words (word = maximal C4_NONWS run).  For
+    ``min_words <= 0`` returns None (nothing is short)."""
+    if min_words <= 0:
+        return None
+    w, nw = C4_INTRA_WS, C4_NONWS
+    if min_words == 1:
+        return f"{w}*"
+    return f"{w}*(?:{nw}+{w}+){{0,{min_words - 2}}}{nw}*{w}*"
+
+
+def c4_drop_line_re(min_words: int = 3) -> str:
+    """The composed drop-line pattern body (no engine prefix): a full
+    line matching ANY of javascript / too-few-words / no-terminal-
+    punctuation, INCLUDING its mandatory trailing newline."""
+    short = c4_short_line_re(min_words)
+    alts = [C4_JS_LINE_RE] + ([short] if short else []) + [C4_NO_TERMINAL_RE]
+    return "^(?:" + "|".join(alts) + ")\\n"
+
+
+def c4_badword_re(badwords) -> str:
+    """Word-boundary-ish alternation over plain lowercase words for the
+    page-level bad-word flag, without ``\\b`` (metachar-free boundary
+    classes keep Java and RE2 in lockstep).  Match against lowercased
+    text."""
+    import re as _re
+
+    alts = "|".join(_re.escape(w) for w in badwords)
+    return f"(?:^|[^a-z0-9])(?:{alts})(?:[^a-z0-9]|$)"
+
+
 def c4_filters(
     df: DataFrame,
     text_col: str = "text",
@@ -256,7 +312,7 @@ def c4_filters(
     plus ``regexp_count`` s of nested-union patterns (count(JS),
     count(JS|SHORT); differences give exact per-reason attribution
     without conjunction regexes), all built from the shared
-    ``sqltwins`` C4 literals (mandatory-``\\n`` terminator convention;
+    C4 literals above (mandatory-``\\n`` terminator convention;
     the Spark side alone prepends ``(?d)`` so Java's line semantics
     match RE2's \\n-only model — rationale on the literals).  No
     explode, no shuffle, no lambda HOF, no python stage: scan → project
@@ -692,10 +748,16 @@ def _stage_pin(
 #   trade for a pre-training scrub.
 # Extend with locale-specific patterns (IBANs, national ids) at
 # deployment — each entry is one codegen'd regexp_replace, so the cost
-# is one scan regardless of count.  The tuple LIVES in sqltwins (with
-# the other engine-parity constants) so the DuckDB oracle chain is
-# generated from the same literals — re-exported here as the public name.
-PII_PATTERNS = _PII_PATTERNS
+# is one scan regardless of count.  The pii_redact DuckDB oracle
+# (functions/sqltwins.py) builds its chain from this SAME tuple.
+PII_PATTERNS: tuple[tuple[str, str], ...] = (
+    (r"[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}", "[EMAIL]"),
+    (r"\b(?:\d{4}[- ]){3}\d{4}\b|\b\d{16}\b", "[CARD]"),
+    (r"\+\d{1,3}[-. ]?\(?\d{1,4}\)?(?:[-. ]?\d{2,4}){2,3}\b"
+     r"|(?:\(\d{3}\)[-. ]?|\b\d{3}[-. ])\d{3}[-. ]\d{4}\b", "[PHONE]"),
+    (r"\b\d{3}-\d{2}-\d{4}\b", "[SSN]"),
+    (r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b", "[IPV4]"),
+)
 
 
 def redact_pii(text_col):

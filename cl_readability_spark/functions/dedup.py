@@ -7,9 +7,7 @@ numpy/Arrow stages — the expression alternatives are interpreted
 higher-order-function lambdas (no codegen) and 2.5-6.6× slower — while
 everything wide stays JVM: band/bucket exchanges, collect_list buckets,
 pairwise explode, exact Jaccard on hashed-shingle long arrays, bit_count
-Hamming verify.  JVM-only reference formulations are kept
-(``word_shingles``/``minhash_signature``) as the no-python option and as
-differential-test anchors.
+Hamming verify.
 
 Scale design: the only wide operations are (a) the explode of ``bands``
 rows per doc (recall-curve-sized per threshold since round 5; 7-23 in
@@ -24,112 +22,6 @@ rows and re-hashes candidate docs only (the large-corpus shape)."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def word_shingles(df: DataFrame, text_col: str = "text", k: int = 5) -> DataFrame:
-    """Adds a ``shingles`` column: distinct word k-grams (array<string>)."""
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    n = F.size(words)
-    shingles = F.when(
-        n >= k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), n - k),
-                lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)),
-            )
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-    return df.withColumn("shingles", shingles)
-
-
-def minhash_signature(
-    df: DataFrame,
-    n_hashes: int = 32,
-    shingle_col: str = "shingles",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id_col, signature): array of n_hashes min-hash values.  Hash family
-    = xxhash64 with a per-index string prefix (deterministic, JVM-side).
-
-    Shape: explode shingles → n_hashes xxhash64 projections → min-agg.
-    Everything here is whole-stage-codegen (xxhash64 + hash-aggregate with
-    map-side partial combine: the shuffle carries n_hashes longs per doc
-    per map partition, never the shingles).  The obvious alternative —
-    ``array_min(transform(shingles, hash))`` per index — keeps the row
-    shape without a shuffle but runs as interpreted lambdas (higher-order
-    functions don't codegen): measured ~3x slower end-to-end at sf0.1 and
-    O(n_hashes × shingles) interpreter dispatches per row at scale."""
-    exploded = df.select(F.col(id_col), F.explode(shingle_col).alias("_sh"))
-    mins = [
-        F.min(F.xxhash64(F.concat(F.lit(f"mh{j}:"), F.col("_sh")))).alias(f"_m{j}")
-        for j in range(n_hashes)
-    ]
-    agg = exploded.groupBy(id_col).agg(*mins)
-    return agg.select(
-        F.col(id_col),
-        F.array(*[F.col(f"_m{j}") for j in range(n_hashes)]).alias("signature"),
-    )
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_hashes: int = 32,
-    bands: int = 8,
-    max_bucket: int = 64,
-) -> DataFrame:
-    """signature → band hashes → bucket-join → candidate pairs (id_a < id_b).
-
-    ``max_bucket`` caps pathological buckets (e.g. empty-text clusters) so a
-    degenerate key cannot produce a quadratic pair explosion."""
-    rows_per_band = n_hashes // bands
-    banded = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col("signature")[b * rows_per_band + r].cast(
-                                        "string"
-                                    )
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("_id", "band.band_idx", "band.band_hash")
-    buckets = (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
-    )
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda a, i: F.transform(
-                            F.slice(F.col("ids"), i + 2, F.size("ids")),
-                            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
-    return pairs
 
 
 def _minhash_coeffs(seed: int, n_hashes: int):
@@ -265,7 +157,7 @@ def band_signature_stage(
     band_sig = keyed blake2b-64 of the band's minhash-signature slice.
 
     STATELESS per input row, which is the property the streaming near-dup
-    gate needs (``pipeline/streaming.py:streaming_near_dup_flags``): the
+    gate needs (``pipeline/streaming.py:streaming_near_dup_flags_jvm``): the
     stage runs unchanged under ``readStream`` per micro-batch, with
     ``passthrough`` carrying the event-time column for the watermark.
     Two equal texts produce equal band signatures by construction (same
@@ -1348,7 +1240,6 @@ def line_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     normalize: bool = True,
-    pin_lines: bool = False,
     group_col: str | None = None,
 ) -> DataFrame:
     """C4-style cross-document line deduplication (Raffel et al. 2020
@@ -1417,16 +1308,15 @@ def line_dedup(
     second long costs ~8 bytes per exchanged row next to the line bytes
     themselves.
 
-    ``pin_lines``: the winners frame aggregates the SAME exploded-lines
-    subtree the join probes (a self-join — PLANS.md rule), so a
-    NONDETERMINISTIC input plan (rand-salted, sampled, fresh-uuid) could
-    disagree between the two evaluations and silently drop lines whose
-    re-evaluated bytes no longer match any winner.  Pure scans /
-    projections (parquet reads, the sink-staged pipeline frames this
-    repo composes) re-evaluate identically and need nothing; for
-    anything nondeterministic pass ``pin_lines=True`` to materialize the
-    exploded lines DISK_ONLY before the branch — the returned frame then
-    carries the standard ``pins.release_pinned`` handle."""
+    The winners frame aggregates the SAME exploded-lines subtree the
+    join probes (a self-join — PLANS.md rule), so a NONDETERMINISTIC
+    input plan (rand-salted, sampled, fresh-uuid) could disagree between
+    the two evaluations and silently drop lines whose re-evaluated bytes
+    no longer match any winner.  Pure scans / projections (parquet
+    reads, the sink-staged pipeline frames this repo composes)
+    re-evaluate identically and need nothing; pin or checkpoint a
+    nondeterministic input first (``curate`` does, via
+    ``line_dedup_rewrite(pin=)``)."""
     # CONTRACT: id_col must be NON-NULL and unique per row (the pipeline
     # row keys are, by construction).  A NULL id would make "first
     # occurrence" ill-defined (and, since the keep-marking is an
@@ -1454,10 +1344,6 @@ def line_dedup(
     if normalize:
         norm = F.lower(norm)
     lines = lines.withColumn("_is_blank", F.coalesce(norm, F.lit("")) == "")
-    if pin_lines:
-        from pyspark import StorageLevel
-
-        lines = lines.persist(StorageLevel.DISK_ONLY)
     # first occurrence per content-line key, as a map-side-combinable
     # min aggregation: the skew-safe formulation — a hot key collapses
     # to one slim partial row per input partition before the exchange,
@@ -1532,7 +1418,7 @@ def line_dedup(
             | F.coalesce(F.col("_is_winner"), F.lit(False))
         ),
     )
-    out = (
+    return (
         marked.groupBy("_id")
         .agg(
             F.count("_line").cast("long").alias("n_lines"),
@@ -1565,18 +1451,13 @@ def line_dedup(
             ),
         )
     )
-    if pin_lines:
-        from cl_readability_spark.functions.pins import attach_pins
-
-        out = attach_pins(out, lines)
-    return out
 
 
 # Token split class for substring_dedup — the EXPLICIT whitespace set the
 # repo standardized on after the gopher \s finding (java \s and RE2 \s
 # disagree on vertical tab U+000B): space/tab/LF/FF/CR.  Shared verbatim
-# with the DuckDB twin (sqltwins.q_substring_dedup_planted) so both
-# engines tokenize identically.
+# with the DuckDB twin (tests/local_twins.py: substring_dedup_planted) so
+# both engines tokenize identically.
 TOKEN_SPLIT_RE = r"[ \t\n\f\r]+"
 
 
@@ -1588,7 +1469,6 @@ def substring_dedup(
     keep: str = "none",
     normalize: bool = True,
     dup_join_salt: int = 8,
-    pin_tokens: bool = False,
 ) -> DataFrame:
     """ExactSubstr-style duplicated-substring removal (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better", §4.1
@@ -1655,11 +1535,10 @@ def substring_dedup(
       documents reassemble with the same sort-structs groupBy as
       `line_dedup`.
 
-    ``pin_tokens``: the gram branch aggregates the SAME exploded-tokens
-    subtree the keep-join probes (a self-join — PLANS.md rule); for a
-    NONDETERMINISTIC input plan pass True to materialize the tokens
-    DISK_ONLY first (release via the standard `pins.release_pinned`
-    handle on the returned frame).  Pure scans/projections need nothing.
+    The gram branch aggregates the SAME exploded-tokens subtree the
+    keep-join probes (a self-join — PLANS.md rule); pure scans/projections
+    need nothing, but pin or checkpoint a nondeterministic input first
+    (``curate`` does, via ``substring_dedup_rewrite(pin=)``).
 
     Reference scope note: cl-readability ends at extraction (no dedup
     counterpart); semantics follow the public paper + released tool.
@@ -1679,10 +1558,6 @@ def substring_dedup(
             F.array_remove(F.split(F.col(text_col), TOKEN_SPLIT_RE), "")
         ).alias("_pos", "_tok"),
     )
-    if pin_tokens:
-        from pyspark import StorageLevel
-
-        toks = toks.persist(StorageLevel.DISK_ONLY)
 
     norm_tok = F.lower(F.col("_tok")) if normalize else F.col("_tok")
     w = Window.partitionBy("_id").orderBy("_pos")
@@ -1777,7 +1652,7 @@ def substring_dedup(
         "_keep",
         F.col("_tok").isNotNull() & F.col("_covered").isNull(),
     )
-    out = (
+    return (
         marked.groupBy("_id")
         .agg(
             F.count("_tok").cast("long").alias("n_tokens"),
@@ -1805,11 +1680,6 @@ def substring_dedup(
             F.when(F.col("_has_text"), F.col("_text")).alias("dedup_text"),
         )
     )
-    if pin_tokens:
-        from cl_readability_spark.functions.pins import attach_pins
-
-        out = attach_pins(out, toks)
-    return out
 
 
 def _attach_group_counts(

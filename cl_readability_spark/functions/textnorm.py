@@ -18,7 +18,7 @@ in ONE vectorized Arrow stage (pandas_udf) — and only when requested:
 ``form=None, strip_accents=False`` compiles to a pure whole-stage-
 codegen plan with no python stage (plan-shape test).
 
-Cross-engine semantics are pinned by the ``textnorm`` LOCAL twin: the
+Cross-engine semantics are pinned by the ``textnorm`` SQL twin: the
 DuckDB oracle re-derives the full chain with DuckDB's OWN
 ``nfc_normalize``/``strip_accents``/``lower`` over planted
 composed/decomposed/ligature/fullwidth text, so the python

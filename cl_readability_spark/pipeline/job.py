@@ -49,6 +49,37 @@ def salted_repartition(
     return df.repartition(num_partitions, F.col("conv_id"), salt)
 
 
+# The JVM readerable-triage scorer behind ``prefilter_readerable="jvm"``.
+# (?i) case-insensitive, (?s) dot-matches-newline, \b + [^>]* for
+# attributes — real-world <P CLASS=...> paragraphs spanning lines must
+# score, not silently extract zero blocks (a bare '<p>(.*?)</p>' would
+# filter virtually any non-synthetic corpus to nothing).  The same
+# literal works in Java regex and DuckDB RE2, so the readerable_triage_sql
+# twin (functions/sqltwins.py) builds its oracle from it too.
+_TRIAGE_PARA_RE = r"(?is)<p\b[^>]*>(.*?)</p>"
+_TRIAGE_TAG_RE = r"(?s)<[^>]+>"
+
+
+def triage_score_col(html_col):
+    """Long Column: the isProbablyReaderable score of ``html_col`` —
+    floor(sqrt(len - 140)) summed over <p> blocks whose tag-stripped,
+    trimmed text is at least 140 chars (readability.lisp:634-668);
+    readerable once the sum exceeds 20."""
+    paras = F.regexp_extract_all(html_col, F.lit(_TRIAGE_PARA_RE), F.lit(1))
+
+    def contrib(p):
+        ln = F.length(F.trim(F.regexp_replace(p, _TRIAGE_TAG_RE, "")))
+        return (
+            F.when(ln >= 140, F.floor(F.sqrt((ln - 140).cast("double"))))
+            .otherwise(F.lit(0))
+            .cast("long")
+        )
+
+    return F.aggregate(
+        F.transform(paras, contrib), F.lit(0).cast("long"), lambda a, x: a + x
+    )
+
+
 def extract_transcripts(
     df: DataFrame,
     config: ExtractorConfig = DEFAULT_CONFIG,
@@ -64,9 +95,9 @@ def extract_transcripts(
     when much of the corpus is non-article noise.  Two variants:
     True/"exact" runs the DOM-parsing triage (a python pass — exact, but
     at 10^12 rows it is a second extraction-scale cost); "jvm" runs the
-    regexp-expression approximation (sqltwins.readerable_triage_sql's
-    scorer — JVM-only, no python workers, ≥99% per-turn agreement
-    measured) and is the shape to deploy at the 100 TB target."""
+    regexp-expression approximation (``triage_score_col`` — JVM-only, no
+    python workers, ≥99% per-turn agreement measured) and is the shape to
+    deploy at the 100 TB target."""
     if prefilter_readerable not in (False, True, "exact", "jvm"):
         # strict: any other truthy string would silently fall through to
         # the expensive exact python pass ("JVM", "off", a typo...)
@@ -77,8 +108,6 @@ def extract_transcripts(
     cols = ["conv_id", "turn_idx", "text"]
     src = df.select(*cols)
     if prefilter_readerable == "jvm":
-        from cl_readability_spark.functions.sqltwins import triage_score_col
-
         src = src.filter(triage_score_col(F.col("text")) > 20)
     elif prefilter_readerable:
         src = src.filter(make_readerable_udf(config)(F.col("text")))

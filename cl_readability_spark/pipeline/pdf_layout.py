@@ -51,8 +51,6 @@ not a skewed plan.
 
 from __future__ import annotations
 
-import math
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import (
@@ -694,163 +692,6 @@ def pdf_extract(
         decode_pdf_boxes(df, fake=fake, id_col=id_col, payload_col=payload_col),
         **layout_kwargs,
     )
-
-
-# ---------------------------------------------------------------------------
-# Python differential oracle (tests/test_pdf_layout.py): the SAME layout
-# rules implemented independently over the decoded box lists — plain
-# loops, no Spark.  Drift in either implementation flips the comparison.
-# ---------------------------------------------------------------------------
-
-
-def layout_reference(
-    boxes: list[tuple],
-    col_gap_tol: float = 1.0,
-    band_gap_tol: float = 32.0,
-    header_band: float = 0.1,
-    footer_band: float = 0.1,
-    repeat_min_pages: int = 2,
-    repeat_frac: float = 0.5,
-    para_gap_factor: float = 0.8,
-    min_size_frac: float = 0.6,
-) -> dict:
-    """Reference implementation over ONE doc's decoded boxes
-    ``[(page, page_w, page_h, x0, y0, x1, y1, size, text), ...]``.
-    Returns the assemble_layout output row as a dict (status 'ok')."""
-    import re
-
-    trim = re.compile(_BOX_TRIM_RE)
-    real = [
-        (pg, ph, x0, y0, x1, y1, size, trim.sub("", text), idx)
-        for idx, (pg, _pw, ph, x0, y0, x1, y1, size, text) in enumerate(boxes)
-        if trim.sub("", text) != ""
-    ]
-    n_boxes = len(real)
-    mean_size = (
-        sum(r[6] for r in real) / n_boxes if n_boxes else None
-    )
-    kept_boxes = (
-        [r for r in real if not (r[6] < min_size_frac * mean_size)]
-        if n_boxes
-        else []
-    )
-    n_tiny = n_boxes - len(kept_boxes)
-
-    # section sweep (y), then column sweep (x) per section, per page
-    by_page: dict[int, list] = {}
-    for r in kept_boxes:
-        by_page.setdefault(r[0], []).append(r)
-    line_recs = []
-    for pg, bs in by_page.items():
-        bs.sort(key=lambda r: (r[3], r[5], r[8]))  # y0, y1, box_idx
-        secs: list[list] = []
-        run_sy1 = None
-        for r in bs:
-            if run_sy1 is None or r[3] > run_sy1 + band_gap_tol:
-                secs.append([])
-            secs[-1].append(r)
-            run_sy1 = r[5] if run_sy1 is None else max(run_sy1, r[5])
-        for si, sb in enumerate(secs):
-            sb.sort(key=lambda r: (r[2], r[4], r[8]))  # x0, x1, box_idx
-            cols: list[list] = []
-            run_x1 = None
-            for r in sb:
-                if run_x1 is None or r[2] > run_x1 + col_gap_tol:
-                    cols.append([])
-                cols[-1].append(r)
-                run_x1 = r[4] if run_x1 is None else max(run_x1, r[4])
-            for ci, cb in enumerate(cols):
-                cb.sort(key=lambda r: (r[3], r[5], r[8]))  # y0, y1, box_idx
-                lns: list[list] = []
-                run_y1 = None
-                for r in cb:
-                    if run_y1 is None or r[3] >= run_y1:
-                        lns.append([])
-                    lns[-1].append(r)
-                    run_y1 = r[5] if run_y1 is None else max(run_y1, r[5])
-                for li, lb in enumerate(lns):
-                    lb.sort(key=lambda r: (r[2], r[8]))
-                    line_recs.append(
-                        {
-                            "page": pg,
-                            "sec": si,
-                            "col": ci,
-                            "line": li,
-                            "ytop": min(r[3] for r in lb),
-                            "ybot": max(r[5] for r in lb),
-                            "ph": lb[0][1],
-                            "text": " ".join(r[7] for r in lb),
-                        }
-                    )
-    n_lines = len(line_recs)
-    n_pages = len({l["page"] for l in line_recs})
-
-    # repeated header/footer
-    digit = re.compile("[0-9]+")
-    for l in line_recs:
-        if l["ytop"] / l["ph"] <= header_band:
-            l["band"] = "top"
-        elif l["ybot"] / l["ph"] >= 1.0 - footer_band:
-            l["band"] = "bot"
-        else:
-            l["band"] = None
-        l["fold"] = (
-            digit.sub("#", l["text"].lower()) if l["band"] else None
-        )
-    rep_pages: dict[tuple, set] = {}
-    for l in line_recs:
-        if l["band"]:
-            rep_pages.setdefault((l["band"], l["fold"]), set()).add(l["page"])
-    needed = max(repeat_min_pages, math.ceil(repeat_frac * n_pages))
-    n_rep = 0
-    kept_lines = []
-    for l in line_recs:
-        if l["band"] and len(rep_pages[(l["band"], l["fold"])]) >= needed:
-            n_rep += 1
-        else:
-            kept_lines.append(l)
-
-    # paragraph assembly per (page, sec, col)
-    by_col: dict[tuple, list] = {}
-    for l in kept_lines:
-        by_col.setdefault((l["page"], l["sec"], l["col"]), []).append(l)
-    paras = []
-    for (pg, si, ci), lns in by_col.items():
-        lns.sort(key=lambda l: l["line"])
-        cur: list = []
-        prev_bot = None
-        for l in lns:
-            gap_break = (
-                prev_bot is None
-                or (l["ytop"] - prev_bot)
-                > para_gap_factor * (l["ybot"] - l["ytop"])
-            )
-            if gap_break and cur:
-                paras.append((pg, si, ci, cur))
-                cur = []
-            cur.append(l)
-            prev_bot = l["ybot"] if prev_bot is None else max(prev_bot, l["ybot"])
-        if cur:
-            paras.append((pg, si, ci, cur))
-    hyph = re.compile("([A-Za-z])-\n([a-z])")
-    ptexts = []
-    for pg, si, ci, lns in paras:
-        joined = "\n".join(l["text"] for l in lns)
-        joined = hyph.sub(r"\1\2", joined).replace("\n", " ")
-        ptexts.append((pg, si, ci, min(l["ytop"] for l in lns), joined))
-    ptexts.sort(key=lambda p: (p[0], p[1], p[2], p[3]))
-    text = "\n\n".join(p[4] for p in ptexts)
-    return {
-        "status": "ok",
-        "extracted_text": text,
-        "n_pages": n_pages,
-        "n_boxes": n_boxes,
-        "n_tiny_dropped": n_tiny,
-        "n_lines": n_lines,
-        "n_repeated_removed": n_rep,
-        "n_paragraphs": len(ptexts),
-        "chars_out": len(text),
-    }
 
 
 def synthetic_pdfs(spark: SparkSession, n: int = 32, seed: int = 7) -> DataFrame:

@@ -158,151 +158,6 @@ def streaming_extract(
     return writer.start()
 
 
-def streaming_near_dup_flags(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    n_hashes: int = 32,
-    bands: int = 8,
-    state_ttl_ms: int | None = None,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming MinHash near-dup gate: the batch LSH's band signatures
-    are computed per micro-batch by the STATELESS fused Arrow stage
-    (``dedup.band_signature_stage``), then a custom stateful operator
-    keyed on (band_idx, band_sig) assigns each LSH bucket a permanent
-    OWNER — the first-arrived document, minimum-key within a micro-batch
-    — and emits every band row flagged ``owned`` (doc == bucket owner).
-    Reduce the sink with ``near_dup_kept_ids``: a doc is kept iff it
-    owns ALL of its ``bands`` buckets, i.e. no earlier (or same-batch
-    lower-key) document collided with it on any band.
-
-    Why explicit ownership state instead of
-    ``dropDuplicatesWithinWatermark`` on the bucket key: per-key
-    dedup keeps an ARBITRARY winner within a micro-batch, so two copies
-    arriving together could split the bucket wins and then NEITHER owns
-    all its bands — both copies dropped, the document lost from the
-    corpus entirely.  The min-key tie-break makes ownership
-    deterministic and identical to the batch keep-one (minimum key per
-    duplicate group): same-batch copies share every bucket, the minimum
-    key wins each one, exactly one representative survives.
-
-    Semantics — candidate-level, deliberately: recall of true near-dups
-    follows the (bands, rows/band) LSH curve and a chance band collision
-    false-drops at the same (tiny) rate the batch pipeline would pay in
-    candidate verification.  The batch ``minhash_near_dups`` + keep-one
-    over the corpus at rest remains the exact backstop (the pytest
-    replays a corpus through both and asserts the kept sets agree).
-
-    ``state_ttl_ms`` bounds bucket ownership by a processing-time
-    horizon (the TTL twin of ``streaming_exact_dedup``'s watermark):
-    an owner older than the TTL is treated as absent on read — the next
-    claimant re-claims the bucket and is re-emitted; the at-rest batch
-    dedup catches those.  Enforcement is deliberately READ-SIDE, not via
-    GroupState timeouts: a pending timeout is canceled by new data (the
-    expired owner would keep claiming), and a registered eviction timer
-    keeps availableNow runs alive scheduling no-data batches.  The cost:
-    expired state rows linger until a new claimant overwrites them, so
-    the state FOOTPRINT is proportional to distinct buckets seen; at the
-    10^12 target run the state on RocksDB
-    (``spark.sql.streaming.stateStore.providerClass``) where that is a
-    disk-resident LSM, and compact by periodically restarting from a
-    fresh checkpoint with the batch gate as the bridge.  The input
-    schema is taken from a static read of ``input_path`` (the streaming
-    source requires an explicit schema), and the id column's SQL type is
-    derived from it — the output/state schemas always agree with the
-    input by construction.
-
-    THROUGHPUT: this is the semantics-reference implementation — the
-    per-bucket python state op costs ~55 µs/key (measured: 2,252 turns/s
-    at 1M turns, 8.6M bucket keys).  The deployment-scale variant is
-    ``streaming_near_dup_flags_jvm`` (watermarked JVM window aggregation,
-    no python state), which this operator's pytest pins semantics
-    against."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from cl_readability_spark.functions.dedup import band_signature_stage
-
-    schema = spark.read.parquet(input_path).schema
-    id_type = schema[id_col].dataType.simpleString()
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    banded = band_signature_stage(
-        stream,
-        id_col=id_col,
-        text_col=text_col,
-        k=k,
-        n_hashes=n_hashes,
-        bands=bands,
-    )
-    out_schema = f"{id_col} {id_type}, band_idx INT, owned BOOLEAN"
-    state_schema = f"owner {id_type}, claimed_at LONG"
-
-    def claim(key, pdfs, state: GroupState):
-        import time as _time
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        now_ms = int(_time.time() * 1000)
-        owner = None
-        if state.exists:
-            owner, claimed_at = state.get
-            # TTL is enforced HERE, on read, not via the timeout firing:
-            # Spark cancels a pending timeout when new data arrives for
-            # the key, so an expired-but-not-yet-evicted owner would
-            # otherwise keep claiming its bucket forever.  The
-            # ProcessingTimeTimeout below is only lazy state EVICTION.
-            if state_ttl_ms is not None and now_ms - claimed_at > state_ttl_ms:
-                owner = None
-        if owner is None:
-            owner = rows[id_col].min()  # deterministic same-batch tie-break
-            state.update((owner, now_ms))
-        yield pd.DataFrame(
-            {
-                id_col: rows[id_col],
-                "band_idx": rows["band_idx"].astype("int32"),
-                "owned": rows[id_col] == owner,
-            }
-        )
-
-    flagged = banded.groupBy(F.col("band_idx"), F.col("band_sig")).applyInPandasWithState(
-        claim,
-        out_schema,
-        state_schema,
-        "append",
-        # deliberately NoTimeout even with a TTL: a registered
-        # ProcessingTimeTimeout keeps availableNow runs alive scheduling
-        # no-data eviction batches (measured: 2-row incremental runs
-        # pinned at the awaitTermination budget), and a timeout that
-        # fires is CANCELED by new data anyway — so the TTL semantics
-        # live entirely in the read-side check above.  Expired rows
-        # linger until overwritten; see the docstring for the eviction
-        # story at scale.
-        GroupStateTimeout.NoTimeout,
-    )
-    writer = (
-        flagged.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def _read_band_sink(spark: SparkSession, bands_path: str):
     """Read a streaming band sink, treating an UNFLUSHED sink (nothing
     flushed before the watermark first advanced — routine under
@@ -364,41 +219,6 @@ def _empty_ids(spark: SparkSession, id_col: str):
     return spark.range(0).select(F.col("id").alias(id_col))
 
 
-def near_dup_kept_ids(
-    spark: SparkSession,
-    bands_path: str,
-    id_col: str = "doc_id",
-):
-    """Batch reduction of ``streaming_near_dup_flags`` output: the ids
-    owning all their band buckets (kept set).  countDistinct over owned
-    band indexes — NOT a raw row count, so a doc legitimately re-emitted
-    after bucket-state expiry (its rows appear twice in the append-mode
-    sink) still reduces to ``bands`` owned buckets.  The band count is
-    derived from the sink itself (max band_idx + 1 — every doc emits all
-    its band rows, so the maximum is exact): a hard-coded count that
-    disagreed with what the producer ran with would silently return an
-    empty or wrong kept set.  One pruned three-column scan + one
-    groupBy."""
-    from pyspark.sql import functions as F
-
-    sink = _read_band_sink(spark, bands_path)
-    if sink is None:
-        return _empty_ids(spark, id_col)
-    bands = sink.agg(F.max("band_idx")).first()[0]
-    if bands is None:
-        return sink.select(id_col).limit(0)
-    return (
-        sink.groupBy(id_col)
-        .agg(
-            F.count_distinct(
-                F.when(F.col("owned"), F.col("band_idx"))
-            ).alias("n_owned")
-        )
-        .filter(F.col("n_owned") == bands + 1)
-        .select(id_col)
-    )
-
-
 def streaming_near_dup_flags_jvm(
     spark: SparkSession,
     input_path: str,
@@ -415,10 +235,12 @@ def streaming_near_dup_flags_jvm(
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """The deployment-scale streaming near-dup gate: bucket ownership as
-    a watermarked JVM window aggregation — NO python state operator
-    anywhere (the only python stage is the stateless Arrow band-signature
-    stage every variant needs).
+    """The streaming near-dup gate: bucket ownership as a watermarked JVM
+    window aggregation — NO python state operator anywhere (the only
+    python stage is the stateless Arrow band-signature stage).  Its
+    semantics are pinned against a python-state reference gate
+    (first-claim bucket ownership via ``applyInPandasWithState``) that
+    lives in tests/test_streaming_multimodal.py.
 
     Per (event-time window, band_idx, band_sig) the aggregation computes
     ``min(id)`` (the owner — the batch keep-one's tie-break, applied
@@ -437,8 +259,8 @@ def streaming_near_dup_flags_jvm(
     by the JVM state store, no per-key python round-trips.
 
     Semantics — the ownership decision is batched PER INGESTION WINDOW
-    (the alternative the reference operator's docstring contracts for
-    the 10^12 shape): within a window, exact batch keep-one semantics
+    (the alternative the reference gate's docstring names for the
+    10^12 shape): within a window, exact batch keep-one semantics
     (min-key owner, same-batch copies collapse to one survivor); across
     windows, first-window-wins via ``near_dup_kept_ids_windowed``'s
     reduction.  A window's rows are emitted once the WATERMARK passes

@@ -11,12 +11,41 @@ from pyspark.sql import functions as F
 from cl_readability_spark.functions.bpe import (
     EOW,
     _merge_loop,
-    _merge_loop_naive,
     bpe_decode_tokens,
     bpe_encode,
     bpe_fit,
     word_counts,
 )
+
+
+def _merge_loop_naive(types: dict[tuple, int], n_merges: int) -> list[tuple]:
+    """Reference trainer: full pair recount every round.  O(merges x
+    types) — the differential oracle for the incremental trainer."""
+    merges: list[tuple] = []
+    syms = {w: list(w) for w in types}
+    for _ in range(n_merges):
+        pairs: dict[tuple, int] = {}
+        for w, cnt in types.items():
+            s = syms[w]
+            for a, b in zip(s, s[1:]):
+                pairs[(a, b)] = pairs.get((a, b), 0) + cnt
+        if not pairs:
+            break
+        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+        merges.append(best)
+        joined = best[0] + best[1]
+        for w in types:
+            s = syms[w]
+            i, out = 0, []
+            while i < len(s):
+                if i + 1 < len(s) and s[i] == best[0] and s[i + 1] == best[1]:
+                    out.append(joined)
+                    i += 2
+                else:
+                    out.append(s[i])
+                    i += 1
+            syms[w] = out
+    return merges
 
 
 def _df(spark, texts):

@@ -916,10 +916,10 @@ def test_quality_flag_matches_filter_hof_form(spark):
     shadowing ('a' vs 'and'), punctuation-fused tokens, leading/
     trailing/vertical-tab whitespace, empty and NULL text, and every
     language's marker words."""
-    from cl_readability_spark.functions.curation import quality_flag
-    from cl_readability_spark.functions.sqltwins import (
+    from cl_readability_spark.functions.curation import (
         LANG_MARKERS,
         STOPWORDS,
+        quality_flag,
     )
 
     texts = [

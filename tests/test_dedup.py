@@ -6,17 +6,125 @@ import itertools
 import random
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from cl_readability_spark.functions.dedup import (
-    lsh_candidate_pairs,
     minhash_near_dups,
-    minhash_signature,
     simhash_signature,
-    word_shingles,
 )
 
 pytestmark = pytest.mark.spark
+
+
+# JVM-only MinHash+LSH reference form (shingle → xxhash64 min-agg →
+# band bucket-join), checked against brute-force Jaccard below.
+
+
+def word_shingles(df: DataFrame, text_col: str = "text", k: int = 5) -> DataFrame:
+    """Adds a ``shingles`` column: distinct word k-grams (array<string>)."""
+    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    n = F.size(words)
+    shingles = F.when(
+        n >= k,
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(0), n - k),
+                lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)),
+            )
+        ),
+    ).otherwise(F.array(F.concat_ws(" ", words)))
+    return df.withColumn("shingles", shingles)
+
+
+def minhash_signature(
+    df: DataFrame,
+    n_hashes: int = 32,
+    shingle_col: str = "shingles",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """(id_col, signature): array of n_hashes min-hash values.  Hash family
+    = xxhash64 with a per-index string prefix (deterministic, JVM-side).
+
+    Shape: explode shingles → n_hashes xxhash64 projections → min-agg.
+    Everything here is whole-stage-codegen (xxhash64 + hash-aggregate with
+    map-side partial combine: the shuffle carries n_hashes longs per doc
+    per map partition, never the shingles).  The obvious alternative —
+    ``array_min(transform(shingles, hash))`` per index — keeps the row
+    shape without a shuffle but runs as interpreted lambdas (higher-order
+    functions don't codegen): measured ~3x slower end-to-end at sf0.1 and
+    O(n_hashes × shingles) interpreter dispatches per row at scale."""
+    exploded = df.select(F.col(id_col), F.explode(shingle_col).alias("_sh"))
+    mins = [
+        F.min(F.xxhash64(F.concat(F.lit(f"mh{j}:"), F.col("_sh")))).alias(f"_m{j}")
+        for j in range(n_hashes)
+    ]
+    agg = exploded.groupBy(id_col).agg(*mins)
+    return agg.select(
+        F.col(id_col),
+        F.array(*[F.col(f"_m{j}") for j in range(n_hashes)]).alias("signature"),
+    )
+
+
+def lsh_candidate_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    n_hashes: int = 32,
+    bands: int = 8,
+    max_bucket: int = 64,
+) -> DataFrame:
+    """signature → band hashes → bucket-join → candidate pairs (id_a < id_b).
+
+    ``max_bucket`` caps pathological buckets (e.g. empty-text clusters) so a
+    degenerate key cannot produce a quadratic pair explosion."""
+    rows_per_band = n_hashes // bands
+    banded = df.select(
+        F.col(id_col).alias("_id"),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band_idx"),
+                        F.xxhash64(
+                            F.concat_ws(
+                                ",",
+                                *[
+                                    F.col("signature")[b * rows_per_band + r].cast(
+                                        "string"
+                                    )
+                                    for r in range(rows_per_band)
+                                ],
+                            )
+                        ).alias("band_hash"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("band"),
+    ).select("_id", "band.band_idx", "band.band_hash")
+    buckets = (
+        banded.groupBy("band_idx", "band_hash")
+        .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
+        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
+    )
+    pairs = (
+        buckets.select(
+            F.explode(
+                F.flatten(
+                    F.transform(
+                        F.col("ids"),
+                        lambda a, i: F.transform(
+                            F.slice(F.col("ids"), i + 2, F.size("ids")),
+                            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
+                        ),
+                    )
+                )
+            ).alias("p")
+        )
+        .select("p.id_a", "p.id_b")
+        .distinct()
+    )
+    return pairs
+
 
 
 def make_corpus():
@@ -806,57 +914,6 @@ def test_line_dedup_plan_shape(spark):
     assert len(keys) <= 4, keys
 
 
-def test_line_dedup_pin_lines_single_evaluation(spark):
-    """The skew-safe formulation is a self-join (winners aggregate the
-    same exploded-lines subtree the join probes), so PLANS.md's
-    materialize-before-self-join rule applies when the input plan is
-    nondeterministic.  pin_lines=True must evaluate the upstream exactly
-    ONCE (accumulator counts rows flowing through a python stage), carry
-    the standard pins release handle, and produce identical results;
-    the default (no pin) evaluates the deterministic upstream twice —
-    the documented trade."""
-    from cl_readability_spark.functions.dedup import line_dedup
-    from cl_readability_spark.functions.pins import (
-        pins_outstanding,
-        release_pinned,
-    )
-
-    base = spark.createDataFrame(
-        [(i, f"shared footer\nbody {i}") for i in range(12)],
-        ["doc_id", "text"],
-    )
-    acc = spark.sparkContext.accumulator(0)
-
-    def _counting(batches):
-        for pdf in batches:
-            acc.add(len(pdf))
-            yield pdf
-
-    docs = base.repartition(2).mapInPandas(_counting, base.schema)
-    pinned = line_dedup(docs, pin_lines=True)
-    rows = {r.doc_id: r.deduped_text for r in pinned.collect()}
-    assert acc.value == 12, "pinned input must evaluate exactly once"
-    assert rows[0].startswith("shared footer")
-    assert sum("shared footer" in t for t in rows.values()) == 1
-    assert pins_outstanding(spark) >= 1
-    assert release_pinned(pinned) == 1
-    # unpinned on the same (deterministic python-stage) upstream:
-    # two evaluations, same results — the documented default trade
-    acc2 = spark.sparkContext.accumulator(0)
-
-    def _counting2(batches):
-        for pdf in batches:
-            acc2.add(len(pdf))
-            yield pdf
-
-    docs2 = base.repartition(2).mapInPandas(_counting2, base.schema)
-    rows2 = {
-        r.doc_id: r.deduped_text for r in line_dedup(docs2).collect()
-    }
-    assert rows2 == rows
-    assert acc2.value == 24
-
-
 def test_line_dedup_extraction_interplay_golden(spark):
     """AUTHORED golden (derived from the written semantics, never from
     the engine — tests/authored_goldens.py method) for the line_dedup ×
@@ -1156,46 +1213,6 @@ def test_substring_dedup_plan_shape(spark):
     # the lead window partitions by the doc id only (doc-bounded tasks)
     wins = _re.findall(r"windowspecdefinition\(([^,]+),", plan)
     assert wins and all("_id" in w for w in wins), (wins, plan[:1500])
-
-
-def test_substring_dedup_pin_tokens_single_evaluation(spark):
-    """substring_dedup's gram branch aggregates the same exploded-tokens
-    subtree the keep-join probes (self-join — PLANS.md rule):
-    pin_tokens=True must evaluate the upstream exactly once, carry the
-    standard pins release handle, and match the unpinned result."""
-    from cl_readability_spark.functions.dedup import substring_dedup
-    from cl_readability_spark.functions.pins import (
-        pins_outstanding,
-        release_pinned,
-    )
-
-    base = spark.createDataFrame(
-        [(i, f"shared run alpha beta gamma delta u{i}") for i in range(10)],
-        ["doc_id", "text"],
-    )
-    acc = spark.sparkContext.accumulator(0)
-
-    def _counting(batches):
-        for pdf in batches:
-            acc.add(len(pdf))
-            yield pdf
-
-    docs = base.repartition(2).mapInPandas(_counting, base.schema)
-    pinned = substring_dedup(docs, k=4, pin_tokens=True, dup_join_salt=2)
-    rows = {r.doc_id: r.dedup_text for r in pinned.collect()}
-    assert acc.value == 10, "pinned input must evaluate exactly once"
-    # every doc loses the shared 6-token run, keeps 'shared run' prefix?
-    # no: grams of k=4 over 'shared run alpha beta gamma delta u{i}' —
-    # 'shared run alpha beta', 'run alpha beta gamma', 'alpha beta gamma
-    # delta' are shared by all docs -> positions 0..5 covered; u{i} kept
-    assert all(rows[i] == f"u{i}" for i in range(10)), rows
-    assert pins_outstanding(spark) >= 1
-    assert release_pinned(pinned) == 1
-    unpinned = {
-        r.doc_id: r.dedup_text
-        for r in substring_dedup(base, k=4, dup_join_salt=2).collect()
-    }
-    assert unpinned == rows
 
 
 # --- dedup_weights (soft dedup: SoftDeDup / data-constrained scaling) ---

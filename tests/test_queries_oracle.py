@@ -8,7 +8,8 @@ import os
 import duckdb
 import pytest
 
-from cl_readability_spark.functions.sqltwins import LOCAL_TWINS, SQL_TWINS
+from cl_readability_spark.functions.sqltwins import SQL_TWINS
+from local_twins import LOCAL_TWINS
 
 # driver-registered twins + local-only twins (DuckDB parity without a
 # driver registry slot — the 50-entry cap is full); same compare

@@ -71,7 +71,7 @@ def test_jvm_triage_twin_agrees_with_exact_dom_triage(spark):
     10^12-row pre-filter that avoids a full python pass."""
     from pyspark.sql import functions as F
 
-    from cl_readability_spark.functions.sqltwins import triage_score_col
+    from cl_readability_spark.pipeline.job import triage_score_col
     from cl_readability_spark.pipeline.transcripts import documents_as_transcripts
     from cl_readability_spark.pipeline.udfs import make_readerable_udf
 
@@ -99,7 +99,7 @@ def test_driver_corpus_triage_gate_passes_and_rejects(spark):
     >0 rows and the gate verifiably rejects the rest."""
     from pyspark.sql import functions as F
 
-    from cl_readability_spark.functions.sqltwins import triage_score_col
+    from cl_readability_spark.pipeline.job import triage_score_col
     from cl_readability_spark.pipeline.job import extract_transcripts
     from cl_readability_spark.pipeline.transcripts import documents_as_transcripts
 
@@ -123,7 +123,7 @@ def test_jvm_triage_handles_real_world_p_tags(spark):
     from pyspark.sql import functions as F
 
     from cl_readability_spark.core.readerable import is_readerable
-    from cl_readability_spark.functions.sqltwins import triage_score_col
+    from cl_readability_spark.pipeline.job import triage_score_col
 
     long = (
         "Paragraph text with commas, clauses, and plenty of length to "

@@ -4,8 +4,9 @@ Every ``scripts/*.py`` and the repo-root benches are parsed with ``ast``
 (imports nested inside functions included); nothing is executed and no
 SparkSession starts.  For each file:
 
-- every ``from cl_readability_spark... import name`` resolves to a module
-  attribute or a submodule;
+- every ``from cl_readability_spark... import name`` and every
+  ``from tests... import name`` (``bench.py`` times a twin that lives in
+  ``tests/local_twins.py``) resolves to a module attribute or a submodule;
 - every literal keyword passed to a call of an imported package callable
   is a parameter of that callable's ``inspect.signature``, unless the
   callable takes ``**kwargs``.
@@ -30,7 +31,7 @@ from pathlib import Path
 import pytest
 
 ROOT = Path(__file__).resolve().parent.parent
-PACKAGE = "cl_readability_spark"
+CHECKED_ROOTS = ("cl_readability_spark", "tests")
 ROOT_BENCHES = ("bench.py", "scaling_bench.py", "skew_bench.py", "dedup_scaling_bench.py")
 FILES = sorted(p.relative_to(ROOT).as_posix() for p in (ROOT / "scripts").glob("*.py"))
 FILES += list(ROOT_BENCHES)
@@ -66,9 +67,10 @@ def _own_nodes(scope: ast.AST):
 
 
 def _package_imports(node: ast.AST):
-    """(bound name, module, attribute, line) per ``from <package> import``."""
+    """(bound name, module, attribute, line) per ``from <package> import``
+    or ``from tests... import``."""
     if isinstance(node, ast.ImportFrom) and node.level == 0 and (
-        (node.module or "").split(".")[0] == PACKAGE
+        (node.module or "").split(".")[0] in CHECKED_ROOTS
     ):
         for alias in node.names:
             yield alias.asname or alias.name, node.module, alias.name, node.lineno
@@ -126,8 +128,12 @@ def test_checker_flags_removed_option_and_missing_name():
     source = (
         "def main(df):\n"
         "    from cl_readability_spark.functions.curation import curate, no_such_op\n"
+        "    from tests.local_twins import no_such_twin\n"
         "    return curate(df, minhash_carry='arrays', **{'anything': 1})\n"
     )
     unresolved, unknown = check_source(source)
-    assert unresolved == ["<source>:2: cl_readability_spark.functions.curation.no_such_op"]
-    assert unknown == ["<source>:3: curate(minhash_carry=)"]
+    assert sorted(unresolved) == [
+        "<source>:2: cl_readability_spark.functions.curation.no_such_op",
+        "<source>:3: tests.local_twins.no_such_twin",
+    ]
+    assert unknown == ["<source>:4: curate(minhash_carry=)"]
