@@ -518,7 +518,6 @@ def streaming_ingest(
     minhash_threshold: float = 0.8,
     curate_opts: dict | None = None,
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
     on_report=None,
 ):
     """Streaming front-end of the ingest loop: a transcripts parquet
@@ -563,9 +562,7 @@ def streaming_ingest(
     writer = stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_path
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def compact_exact_catalog(spark: SparkSession, table: str) -> None:

@@ -16,6 +16,11 @@ contract on parquet, exactly as SURVEY §7 step 4 specifies the fallback:
   half-written batch has no _SUCCESS → invisible; the anti-join re-selects
   its rows.
 
+A batch commits in one pass: ``run_resumable`` reads it back once and
+derives the metrics sidecar and the batch report (one ``metrics_rollup``)
+from that read; ``CheckpointedSink.run`` writes ``_MANIFEST.json`` from
+the report, so the sink keeps no per-run state.
+
 Swapping in Iceberg is a sink-object change only; the job DAG upstream of
 the write is identical (asserted by the plan-identity test in
 tests/test_spark_pipeline.py).
@@ -29,10 +34,14 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from cl_readability_spark.core.config import DEFAULT_CONFIG, ExtractorConfig
-from cl_readability_spark.pipeline.job import extract_transcripts, metrics_sidecar
+from cl_readability_spark.pipeline.job import (
+    extract_transcripts,
+    metrics_rollup,
+    metrics_sidecar,
+)
 from cl_readability_spark.pipeline.sink import KEY_COLUMNS, KeyedSink
 
 
@@ -54,10 +63,12 @@ def run_resumable(
     num_partitions: int | None = None,
     metrics_root: str | None = None,
     prefilter_readerable: bool | str = False,
-) -> int:
-    """Extract every not-yet-committed turn into ``sink``; returns rows
-    written.  Sink-agnostic: the same call works against parquet
-    checkpoints here and an Iceberg table in production."""
+) -> dict:
+    """Extract every not-yet-committed turn into ``sink`` as one batch;
+    returns the batch report ``{"batch", "rows", "write_s", "by_status"}``
+    (``batch`` is the sink's handle, None when nothing was pending).
+    Sink-agnostic: the same call works against parquet checkpoints here
+    and an Iceberg table in production."""
     spark = transcripts.sparkSession
     sink.prepare(spark)
     committed = sink.committed_keys(spark)
@@ -71,7 +82,7 @@ def run_resumable(
     # at the first pending row, so a normal run pays at most one extra
     # partial anti-join pass.
     if committed is not None and not remaining.take(1):
-        return 0
+        return {"batch": None, "rows": 0, "write_s": 0.0, "by_status": {}}
     result = extract_transcripts(
         remaining,
         config=config,
@@ -79,15 +90,31 @@ def run_resumable(
         num_partitions=num_partitions,
         prefilter_readerable=prefilter_readerable,
     )
+    t0 = time.time()
     handle = sink.write_batch(result)
+    write_s = time.time() - t0
     # batch-scoped read-back via the sink protocol (NOT the cumulative
-    # table): the returned count and the metrics sidecar must cover only
-    # the rows THIS run wrote, for every sink — parquet batch dir here,
-    # Iceberg incremental snapshot read in production
+    # table): the report and the metrics sidecar must cover only the rows
+    # THIS run wrote, for every sink — parquet batch dir here, Iceberg
+    # incremental snapshot read in production
     written = sink.read_batch(spark, handle)
     if metrics_root is not None:
         metrics_sidecar(written).write.mode("append").parquet(metrics_root)
-    return written.count()
+    by_status = {
+        r["status"]: {
+            "rows": r["rows"],
+            "chars_in": r["total_chars_in"] or 0,
+            "chars_kept": r["total_chars_kept"] or 0,
+            "retries": r["total_retries"] or 0,
+        }
+        for r in sorted(metrics_rollup(written).collect(), key=lambda r: r["status"])
+    }
+    return {
+        "batch": handle,
+        "rows": sum(s["rows"] for s in by_status.values()),
+        "write_s": write_s,
+        "by_status": by_status,
+    }
 
 
 class CheckpointedSink:
@@ -96,27 +123,23 @@ class CheckpointedSink:
     def __init__(self, root: str):
         self.root = root
         self.key_columns = list(KEY_COLUMNS)
-        self._last_write: dict | None = None
         os.makedirs(root, exist_ok=True)
 
     # --- snapshot bookkeeping ---
+    def _batch_indices(self) -> list[int]:
+        return sorted(
+            int(n.split("=", 1)[1]) for n in os.listdir(self.root)
+            if n.startswith("batch=")
+        )
+
     def committed_batches(self) -> list[str]:
-        out = []
-        for name in sorted(os.listdir(self.root)):
-            path = os.path.join(self.root, name)
-            if name.startswith("batch=") and os.path.exists(
-                os.path.join(path, "_SUCCESS")
-            ):
-                out.append(path)
-        return out
+        """Committed batch dirs, oldest first (by batch index)."""
+        paths = (os.path.join(self.root, f"batch={i}") for i in self._batch_indices())
+        return [p for p in paths if os.path.exists(os.path.join(p, "_SUCCESS"))]
 
     def _next_batch_path(self) -> str:
-        existing = [
-            int(n.split("=", 1)[1])
-            for n in os.listdir(self.root)
-            if n.startswith("batch=")
-        ]
-        return os.path.join(self.root, f"batch={max(existing, default=-1) + 1}")
+        last = max(self._batch_indices(), default=-1)
+        return os.path.join(self.root, f"batch={last + 1}")
 
     def cleanup_uncommitted(self) -> None:
         """Drop half-written batch dirs (no _SUCCESS) before resuming."""
@@ -129,10 +152,6 @@ class CheckpointedSink:
 
     # --- KeyedSink protocol ---
     def prepare(self, spark: SparkSession) -> None:
-        # reset the per-run write handle: a fully-resumed rerun performs
-        # NO write, and a stale handle from a previous run would make
-        # run() rewrite a committed batch's manifest with rows=0
-        self._last_write = None
         self.cleanup_uncommitted()
 
     def committed_keys(self, spark: SparkSession) -> DataFrame | None:
@@ -143,9 +162,7 @@ class CheckpointedSink:
 
     def write_batch(self, df: DataFrame) -> str:
         batch_path = self._next_batch_path()
-        t0 = time.time()
         df.write.mode("errorifexists").parquet(batch_path)
-        self._last_write = {"path": batch_path, "seconds": time.time() - t0}
         return batch_path
 
     def read_batch(self, spark: SparkSession, handle: str) -> DataFrame:
@@ -167,8 +184,7 @@ class CheckpointedSink:
         metrics_root: str | None = None,
         prefilter_readerable: bool | str = False,
     ) -> int:
-        spark = transcripts.sparkSession
-        n = run_resumable(
+        report = run_resumable(
             transcripts,
             self,
             config=config,
@@ -177,47 +193,25 @@ class CheckpointedSink:
             metrics_root=metrics_root,
             prefilter_readerable=prefilter_readerable,
         )
-        last = self._last_write or {}
-        batch_path = last.get("path")
-        if batch_path:
-            written = spark.read.parquet(batch_path)
-            self._write_manifest(
-                written, batch_path, n, last.get("seconds", 0.0), config,
-                salt_buckets,
-            )
-        return n
+        if report["batch"] is not None:
+            self._write_manifest(report, config, salt_buckets)
+        return report["rows"]
 
-    def _write_manifest(self, written: DataFrame, batch_path: str, n_rows: int,
-                        seconds: float, config: ExtractorConfig,
+    def _write_manifest(self, report: dict, config: ExtractorConfig,
                         salt_buckets: int) -> None:
         """Snapshot-manifest equivalent: per-batch lineage (row/status/char
         counts, config, timing) next to the data — the operational metadata
         an Iceberg snapshot summary would carry."""
-        by_status = {
-            r["status"]: {
-                "rows": r["rows"],
-                "chars_in": r["ci"] or 0,
-                "chars_kept": r["ck"] or 0,
-                "retries": r["rt"] or 0,
-            }
-            for r in written.groupBy("status")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum("chars_in").alias("ci"),
-                F.sum("chars_kept").alias("ck"),
-                F.sum("retries").alias("rt"),
-            )
-            .collect()
-        }
         cfg = dataclasses.asdict(config)
         cfg["preserved_classes"] = sorted(cfg["preserved_classes"])
         vc = cfg.get("visibility_checker")
         cfg["visibility_checker"] = getattr(vc, "__qualname__", None) if vc else None
+        batch_path = report["batch"]
         manifest = {
             "batch": os.path.basename(batch_path),
-            "rows": n_rows,
-            "seconds": round(seconds, 3),
-            "by_status": by_status,
+            "rows": report["rows"],
+            "seconds": round(report["write_s"], 3),
+            "by_status": report["by_status"],
             "salt_buckets": salt_buckets,
             "config": cfg,
         }

@@ -42,7 +42,7 @@ class KeyedSink(Protocol):
     def read_batch(self, spark: SparkSession, handle: str) -> DataFrame:
         """The rows of ONE committed batch, by the handle ``write_batch``
         returned — never the whole table.  The resume job derives its
-        'rows written' count and the metrics sidecar from this, so a
+        batch report and the metrics sidecar from this, so a
         full-table implementation would re-append metrics for every
         previously committed row on every run."""
 

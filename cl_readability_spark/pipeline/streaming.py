@@ -133,7 +133,6 @@ def streaming_extract(
     checkpoint_path: str,
     config: ExtractorConfig = DEFAULT_CONFIG,
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """transcripts parquet dir (streaming source) → extracted parquet sink.
 
@@ -153,9 +152,7 @@ def streaming_extract(
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def _read_band_sink(spark: SparkSession, bands_path: str):
@@ -233,7 +230,6 @@ def streaming_near_dup_flags_jvm(
     watermark: str = "10 minutes",
     window_size: str = "1 hour",
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """The streaming near-dup gate: bucket ownership as a watermarked JVM
     window aggregation — NO python state operator anywhere (the only
@@ -318,9 +314,7 @@ def streaming_near_dup_flags_jvm(
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def near_dup_kept_ids_windowed(
@@ -397,7 +391,6 @@ def streaming_exact_dedup(
     checkpoint_path: str,
     watermark: str = "1 hour",
     text_col: str = "text",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming exact dedup: the batch pipeline's content-fingerprint
     dedup (curation.py stage 1 / sqltwins ``dedup_exact``) as a stateful
@@ -428,9 +421,7 @@ def streaming_exact_dedup(
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def streaming_url_dedup(
@@ -440,7 +431,6 @@ def streaming_url_dedup(
     checkpoint_path: str,
     watermark: str = "1 hour",
     url_col: str = "url",
-    available_now: bool = True,
     schema=None,
     **canon_kwargs,
 ) -> StreamingQuery:
@@ -502,9 +492,7 @@ def streaming_url_dedup(
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def streaming_conversation_flags(
@@ -521,7 +509,6 @@ def streaming_conversation_flags(
     max_empty_turn_bp: int = 2000,
     max_tool_char_bp: int = 8000,
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """The conversation-level integrity gate
     (functions/transcript_quality.py) as a streaming query — pure JVM,
@@ -704,9 +691,7 @@ def streaming_conversation_flags(
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def conversation_flags_stale_ids(

@@ -119,8 +119,8 @@ def test_iceberg_resume_anti_join_idempotence(iceberg_spark, tmp_path):
         [(f"c{i}", j, "t") for i in range(4) for j in range(3)],
         "conv_id string, turn_idx int, body string",
     )
-    n1 = run_resumable(src.filter(F.col("turn_idx") < 2), sink)
-    n2 = run_resumable(src, sink)
+    n1 = run_resumable(src.filter(F.col("turn_idx") < 2), sink)["rows"]
+    n2 = run_resumable(src, sink)["rows"]
     assert n1 + n2 == src.count()
     assert sink.read(spark).select("conv_id", "turn_idx").distinct().count() == (
         src.count()

@@ -232,8 +232,8 @@ def test_run_resumable_generic_runner(spark, transcripts, tmp_path):
     from cl_readability_spark.pipeline.resume import run_resumable
 
     sink = CheckpointedSink(str(tmp_path / "gen"))
-    n1 = run_resumable(transcripts.filter(F.col("turn_idx") % 2 == 0), sink)
-    n2 = run_resumable(transcripts, sink)
+    n1 = run_resumable(transcripts.filter(F.col("turn_idx") % 2 == 0), sink)["rows"]
+    n2 = run_resumable(transcripts, sink)["rows"]
     assert n1 + n2 == transcripts.count()
     assert sink.read(spark).select("conv_id", "turn_idx").distinct().count() == (
         transcripts.count()
@@ -252,12 +252,97 @@ def test_resume_metrics_are_batch_scoped(spark, transcripts, tmp_path):
     n1 = run_resumable(
         transcripts.filter(F.col("turn_idx") % 2 == 0), sink,
         metrics_root=metrics_root,
-    )
-    n2 = run_resumable(transcripts, sink, metrics_root=metrics_root)
+    )["rows"]
+    n2 = run_resumable(transcripts, sink, metrics_root=metrics_root)["rows"]
     total = transcripts.count()
     assert n1 + n2 == total
     # exactly one metrics row per written row across both runs
     assert spark.read.parquet(metrics_root).count() == total
+
+
+def test_committed_batches_sort_by_batch_index(tmp_path):
+    """No Spark: committed batches come back oldest first by their integer
+    index, so ``[-1]`` is the newest batch past ``batch=9`` (a string sort
+    puts ``batch=10`` before ``batch=2``); uncommitted dirs are skipped."""
+    import os
+
+    root = tmp_path / "many"
+    for i in range(13):
+        (root / f"batch={i}").mkdir(parents=True)
+        if i < 12:
+            (root / f"batch={i}" / "_SUCCESS").touch()
+    sink = CheckpointedSink(str(root))
+    assert sink.committed_batches() == [
+        os.path.join(str(root), f"batch={i}") for i in range(12)
+    ]
+    assert sink._next_batch_path() == os.path.join(str(root), "batch=13")
+
+
+def test_resume_manifest_matches_batch(spark, transcripts, tmp_path):
+    """Each committed batch's _MANIFEST.json reports that batch: ``rows`` is
+    its row count and the sum of ``by_status`` rows, and ``by_status``
+    equals a driver-side per-status tally.  A fully resumed rerun writes no
+    batch and leaves the last manifest untouched."""
+    import json
+    import os
+    from collections import defaultdict
+
+    root = str(tmp_path / "manifest")
+    sink = CheckpointedSink(root)
+    n1 = sink.run(transcripts.filter(F.col("turn_idx") % 2 == 0))
+    n2 = sink.run(transcripts)
+    assert n1 > 0 and n2 > 0
+    for i, n in enumerate((n1, n2)):
+        batch = os.path.join(root, f"batch={i}")
+        with open(os.path.join(batch, "_MANIFEST.json")) as f:
+            manifest = json.load(f)
+        rows = spark.read.parquet(batch).collect()
+        tally = defaultdict(
+            lambda: {"rows": 0, "chars_in": 0, "chars_kept": 0, "retries": 0}
+        )
+        for r in rows:
+            t = tally[r.status]
+            t["rows"] += 1
+            t["chars_in"] += r.chars_in or 0
+            t["chars_kept"] += r.chars_kept or 0
+            t["retries"] += r.retries or 0
+        assert manifest["batch"] == f"batch={i}"
+        assert manifest["rows"] == n == len(rows)
+        by_status = manifest["by_status"]
+        assert manifest["rows"] == sum(s["rows"] for s in by_status.values())
+        assert by_status == dict(tally)
+        assert list(by_status) == sorted(by_status)
+
+    last = os.path.join(root, "batch=1", "_MANIFEST.json")
+    with open(last, "rb") as f:
+        before = f.read()
+    assert sink.run(transcripts) == 0
+    assert sorted(os.listdir(root)) == ["batch=0", "batch=1"]
+    with open(last, "rb") as f:
+        assert f.read() == before
+
+
+def test_resume_run_job_count_fence(spark, transcripts, tmp_path):
+    """A resume batch commits in one pass: a warm run over a half-committed
+    sink launches at most 9 Spark jobs — committed-keys read (1), the
+    take(1) probe (2), the extracting write (3), the batch read-back (1)
+    and one per-status rollup for both the report and the manifest (2)."""
+    import uuid
+
+    half = transcripts.filter(F.col("turn_idx") % 2 == 0)
+    CheckpointedSink(str(tmp_path / "warm")).run(half)  # warm-up, not counted
+    sink = CheckpointedSink(str(tmp_path / "fence"))
+    sink.run(half)
+    sc = spark.sparkContext
+    group = f"resume-fence-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "warm CheckpointedSink.run")
+    try:
+        n = sink.run(transcripts)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == transcripts.count() - half.count()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 9, jobs
 
 
 def test_iceberg_batch_handle_is_snapshot_scoped():

@@ -41,7 +41,6 @@ def streaming_near_dup_flags(
     bands: int = 8,
     state_ttl_ms: int | None = None,
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming MinHash near-dup gate: the batch LSH's band signatures
     are computed per micro-batch by the STATELESS fused Arrow stage
@@ -169,9 +168,7 @@ def streaming_near_dup_flags(
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def near_dup_kept_ids(
