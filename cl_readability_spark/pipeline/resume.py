@@ -68,7 +68,9 @@ def run_resumable(
     returns the batch report ``{"batch", "rows", "write_s", "by_status"}``
     (``batch`` is the sink's handle, None when nothing was pending).
     Sink-agnostic: the same call works against parquet checkpoints here
-    and an Iceberg table in production."""
+    and an Iceberg table in production.  ``num_partitions`` pins the
+    extraction stage's task count; ``None`` sizes it from the task slots
+    and the pending rows' estimated bytes (``job.salted_repartition``)."""
     spark = transcripts.sparkSession
     sink.prepare(spark)
     committed = sink.committed_keys(spark)
@@ -184,6 +186,10 @@ class CheckpointedSink:
         metrics_root: str | None = None,
         prefilter_readerable: bool | str = False,
     ) -> int:
+        """Run one resumable batch (``run_resumable``) into this sink and
+        write its manifest; returns the rows written.  ``num_partitions``
+        as in ``run_resumable``: ``None`` sizes the extraction stage from
+        the task slots and the pending rows' estimated bytes."""
         report = run_resumable(
             transcripts,
             self,

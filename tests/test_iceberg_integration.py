@@ -102,22 +102,25 @@ def test_iceberg_sink_snapshot_scoped_batches(iceberg_spark):
 @requires_iceberg
 def test_iceberg_resume_anti_join_idempotence(iceberg_spark, tmp_path):
     """The generic resume runner over the Iceberg sink: a re-run appends
-    only the missing keys (the CheckpointedSink contract, same semantics)."""
+    only the missing keys (the CheckpointedSink contract, same semantics).
+    Extraction reads ``text`` and writes the extraction schema, so the
+    source carries HTML in ``text`` and the table has the output schema."""
     from pyspark.sql import functions as F
 
     from cl_readability_spark.pipeline.resume import run_resumable
     from cl_readability_spark.pipeline.sink import IcebergSink
+    from cl_readability_spark.pipeline.udfs import EXTRACT_OUTPUT_SCHEMA
 
     spark = iceberg_spark
     table = "local.db.resume_it"
-    spark.sql(
-        f"CREATE TABLE {table} (conv_id STRING, turn_idx INT, body STRING) "
-        "USING iceberg"
-    )
+    spark.createDataFrame([], EXTRACT_OUTPUT_SCHEMA).writeTo(table).using(
+        "iceberg"
+    ).create()
     sink = IcebergSink(table)
     src = spark.createDataFrame(
-        [(f"c{i}", j, "t") for i in range(4) for j in range(3)],
-        "conv_id string, turn_idx int, body string",
+        [(f"c{i}", j, f"<p>turn {j} of conversation {i}</p>")
+         for i in range(4) for j in range(3)],
+        "conv_id string, turn_idx int, text string",
     )
     n1 = run_resumable(src.filter(F.col("turn_idx") < 2), sink)["rows"]
     n2 = run_resumable(src, sink)["rows"]

@@ -100,6 +100,65 @@ def test_salting_spreads_conversations(spark):
     assert pids > 1
 
 
+def test_salted_repartition_width_follows_slots_and_bytes(spark):
+    """Without ``num_partitions`` the extraction exchange is
+    min(shuffle.partitions, max(slots, ceil(bytes / maxPartitionBytes))),
+    read from the plan with no job: a small frame runs one task per slot,
+    a frame that exceeds slots × maxPartitionBytes grows toward the cap,
+    and an RDD-backed frame (unknown size) keeps the cap."""
+    import math
+    import re
+    import uuid
+
+    from cl_readability_spark.pipeline.job import salted_repartition
+
+    def width(df, n=None):
+        plan = salted_repartition(df, n)._jdf.queryExecution().executedPlan()
+        plan = plan.toString()
+        m = re.search(
+            r"hashpartitioning\(conv_id#\d+, pmod\(hash\(turn_idx#\d+, 42\), 16\), "
+            r"(\d+)\)",
+            plan,
+        )
+        assert m, plan
+        return int(m.group(1))
+
+    def plan_bytes(df):
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+    sc = spark.sparkContext
+    small = spark.range(64).select(
+        F.col("id").cast("string").alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        F.lit("<p>x</p>").alias("text"),
+    )
+    rdd_backed = spark.createDataFrame(
+        [("c0", 0, "<p>x</p>")], "conv_id string, turn_idx int, text string"
+    )
+    conf = spark.conf
+    saved = {k: conf.get(k) for k in (
+        "spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes"
+    )}
+    group = f"width-{uuid.uuid4().hex}"
+    conf.set("spark.sql.shuffle.partitions", "16")
+    sc.setJobGroup(group, "salted_repartition width")
+    try:
+        assert width(small) == sc.defaultParallelism == 4
+        assert width(small, 7) == 7
+        assert plan_bytes(rdd_backed) == 2**63 - 1
+        assert width(rdd_backed) == 16
+        size = plan_bytes(small)
+        split = size // 10
+        conf.set("spark.sql.files.maxPartitionBytes", str(split))
+        assert 4 < math.ceil(size / split) <= 16
+        assert width(small) == min(16, math.ceil(size / split))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        for k, v in saved.items():
+            conf.set(k, v)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_metrics_sidecar_and_rollup(spark, transcripts):
     result = extract_transcripts(transcripts).cache()
     side = metrics_sidecar(result)
