@@ -11,9 +11,8 @@ Scale notes (the design targets a 1000-executor cluster):
 - Only (conv_id, turn_idx, text) are read for extraction — column pruning
   reaches the parquet scan (verify via .explain: ReadSchema).
 - The UDF stage is a narrow map after the repartition.  The exchange's
-  width is pinned (AQE cannot coalesce it): one task per slot for a
-  small input, growing with the input's plan-estimated bytes, capped at
-  ``spark.sql.shuffle.partitions`` (see ``salted_repartition``).
+  width is pinned at ``spark.sql.shuffle.partitions`` (AQE cannot
+  coalesce it; see ``salted_repartition``).
 """
 
 from __future__ import annotations
@@ -35,37 +34,29 @@ def salted_repartition(
     to ``salt_buckets`` partitions so a 50-turn conversation of 10 MB docs
     doesn't pin one task; deterministic (hash of turn_idx, no RNG).
 
-    The partition count is ALWAYS pinned explicitly: a bare
-    ``repartition(cols)`` is AQE-coalescible, and AQE sizes partitions by
-    shuffle *bytes* — blind to the Python-CPU cost of the extraction stage
-    that follows.  A few MB of HTML can hold seconds of per-row DOM work, so
-    byte-coalescing would serialize the stage onto one task (measured: 11×
-    slowdown on small inputs).  Downstream of this exchange the work is
-    CPU-proportional to rows, and the salt already bounds per-partition
-    skew.
+    The partition count is ALWAYS pinned explicitly, so AQE cannot
+    coalesce it: a bare ``repartition(cols)`` is AQE-coalescible, and AQE
+    sizes partitions by shuffle *bytes* — blind to the Python-CPU cost of
+    the extraction stage that follows.  A few MB of HTML can hold seconds
+    of per-row DOM work, so byte-coalescing would serialize the stage onto
+    one task (measured: 11× slowdown on small inputs).  Downstream of this
+    exchange the work is CPU-proportional to rows, and the salt already
+    bounds per-partition skew.
 
-    An explicit ``num_partitions`` wins.  Otherwise the width is
-    ``min(P, max(S, ceil(B / M)))``: ``P`` is ``spark.sql.shuffle.partitions``
-    (the cap), ``S`` the task slots (``defaultParallelism``), ``B`` the
-    input's optimized-plan size estimate and ``M`` the session's
-    ``spark.sql.files.maxPartitionBytes``.  Reading them runs no job.  A
-    small input thus runs one task per slot, never fewer, and a large one
-    grows back toward ``P``; an unknown size (an RDD-backed frame reports
-    ``Long.MaxValue``) gives ``P``.  Each Python task carries a fixed cost
-    on top of its rows, measured on 4 CPUs at ~0.22 s of worker CPU
-    (pyspark's ``setup_spark_files`` ~0.18 s, the daemon's post-task
-    ``gc.collect`` ~0.04 s) plus JVM task and JIT time, so a second wave
-    of tasks over a small input is pure overhead: width 8 → 4 on the
-    1.4 MB perfbench ``resume_write`` batch cut a call's CPU from ~7.6 to
-    ~5.9 s."""
+    The width is ``num_partitions`` when given, else
+    ``spark.sql.shuffle.partitions``, which the deployment sets
+    (``build_spark`` sets it to the local core count).  Each Python task
+    also carries a fixed cost on top of its rows, measured on 4 CPUs at
+    ~0.22 s of worker CPU (pyspark's ``setup_spark_files`` ~0.18 s, the
+    daemon's post-task ``gc.collect`` ~0.04 s) plus JVM task and JIT time:
+    a width above the task slots buys a second wave of that cost over a
+    small input (width 8 → 4 on the 1.4 MB perfbench ``resume_write``
+    batch cut a call's CPU from ~7.6 to ~5.9 s)."""
     salt = F.pmod(F.hash(F.col("turn_idx")), F.lit(salt_buckets))
     if not num_partitions:
-        spark = df.sparkSession
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        by_bytes = -(-size // split)
-        num_partitions = min(cap, max(spark.sparkContext.defaultParallelism, by_bytes))
+        num_partitions = int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+        )
     return df.repartition(num_partitions, F.col("conv_id"), salt)
 
 
@@ -120,8 +111,7 @@ def extract_transcripts(
     deploy at the 100 TB target.
 
     ``num_partitions`` pins the extraction stage's task count; ``None``
-    sizes it from the task slots and the input's estimated bytes, capped
-    at ``spark.sql.shuffle.partitions`` (``salted_repartition``)."""
+    takes ``spark.sql.shuffle.partitions`` (``salted_repartition``)."""
     if prefilter_readerable not in (False, True, "exact", "jvm"):
         # strict: any other truthy string would silently fall through to
         # the expensive exact python pass ("JVM", "off", a typo...)

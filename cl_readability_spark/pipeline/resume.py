@@ -69,8 +69,8 @@ def run_resumable(
     (``batch`` is the sink's handle, None when nothing was pending).
     Sink-agnostic: the same call works against parquet checkpoints here
     and an Iceberg table in production.  ``num_partitions`` pins the
-    extraction stage's task count; ``None`` sizes it from the task slots
-    and the pending rows' estimated bytes (``job.salted_repartition``)."""
+    extraction stage's task count; ``None`` takes
+    ``spark.sql.shuffle.partitions`` (``job.salted_repartition``)."""
     spark = transcripts.sparkSession
     sink.prepare(spark)
     committed = sink.committed_keys(spark)
@@ -188,8 +188,8 @@ class CheckpointedSink:
     ) -> int:
         """Run one resumable batch (``run_resumable``) into this sink and
         write its manifest; returns the rows written.  ``num_partitions``
-        as in ``run_resumable``: ``None`` sizes the extraction stage from
-        the task slots and the pending rows' estimated bytes."""
+        as in ``run_resumable``: ``None`` takes
+        ``spark.sql.shuffle.partitions``."""
         report = run_resumable(
             transcripts,
             self,

@@ -32,7 +32,10 @@ def build_spark(
     extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
+    # one shuffle task per core: each Python task pays a fixed worker cost
+    # (see pipeline/job.py:salted_repartition), so a second wave over a
+    # small input is overhead; AQE still coalesces the unpinned exchanges
+    shuffle_partitions = shuffle_partitions or cores
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)

@@ -34,10 +34,9 @@ def main(argv: list[str]) -> int:
     p.add_argument("--metrics", default=None)
     p.add_argument("--salt-buckets", type=int, default=16)
     p.add_argument("--partitions", type=int, default=None,
-                   help="extraction tasks; default: one per task slot, more "
-                        "for inputs over slots x "
-                        "spark.sql.files.maxPartitionBytes, at most "
-                        "spark.sql.shuffle.partitions")
+                   help="extraction tasks; default: "
+                        "spark.sql.shuffle.partitions (the core count when "
+                        "run as plain python)")
     p.add_argument("--max-elements", type=int, default=None)
     p.add_argument("--char-threshold", type=int, default=500)
     p.add_argument("--base-url", default=None)

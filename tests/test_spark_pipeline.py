@@ -100,13 +100,10 @@ def test_salting_spreads_conversations(spark):
     assert pids > 1
 
 
-def test_salted_repartition_width_follows_slots_and_bytes(spark):
-    """Without ``num_partitions`` the extraction exchange is
-    min(shuffle.partitions, max(slots, ceil(bytes / maxPartitionBytes))),
-    read from the plan with no job: a small frame runs one task per slot,
-    a frame that exceeds slots × maxPartitionBytes grows toward the cap,
-    and an RDD-backed frame (unknown size) keeps the cap."""
-    import math
+def test_salted_repartition_width_is_shuffle_partitions(spark):
+    """Without ``num_partitions`` the extraction exchange is pinned at the
+    session's ``spark.sql.shuffle.partitions`` (read at plan time, no job);
+    an explicit count wins."""
     import re
     import uuid
 
@@ -123,40 +120,60 @@ def test_salted_repartition_width_follows_slots_and_bytes(spark):
         assert m, plan
         return int(m.group(1))
 
-    def plan_bytes(df):
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
     sc = spark.sparkContext
     small = spark.range(64).select(
         F.col("id").cast("string").alias("conv_id"),
         F.col("id").cast("int").alias("turn_idx"),
         F.lit("<p>x</p>").alias("text"),
     )
-    rdd_backed = spark.createDataFrame(
-        [("c0", 0, "<p>x</p>")], "conv_id string, turn_idx int, text string"
-    )
-    conf = spark.conf
-    saved = {k: conf.get(k) for k in (
-        "spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes"
-    )}
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
     group = f"width-{uuid.uuid4().hex}"
-    conf.set("spark.sql.shuffle.partitions", "16")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
     sc.setJobGroup(group, "salted_repartition width")
     try:
-        assert width(small) == sc.defaultParallelism == 4
+        assert width(small) == 16
         assert width(small, 7) == 7
-        assert plan_bytes(rdd_backed) == 2**63 - 1
-        assert width(rdd_backed) == 16
-        size = plan_bytes(small)
-        split = size // 10
-        conf.set("spark.sql.files.maxPartitionBytes", str(split))
-        assert 4 < math.ceil(size / split) <= 16
-        assert width(small) == min(16, math.ceil(size / split))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-        for k, v in saved.items():
-            conf.set(k, v)
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_build_spark_shuffle_partitions_default_to_cores(monkeypatch):
+    """``build_spark`` runs one shuffle task per local core unless told
+    otherwise (no Spark: the builder is replaced by a recorder)."""
+    from cl_readability_spark.pipeline import session
+
+    class Recorder:
+        def __init__(self):
+            self.confs = {}
+
+        def master(self, m):
+            self.confs["master"] = m
+            return self
+
+        def appName(self, _):
+            return self
+
+        def config(self, key, value):
+            self.confs[key] = value
+            return self
+
+        def getOrCreate(self):
+            return self.confs
+
+    class FakeSession:
+        @property
+        def builder(self):
+            return Recorder()
+
+    monkeypatch.setattr(session, "SparkSession", FakeSession())
+    for cores in (2, 4, 12):
+        confs = session.build_spark(cores=cores)
+        assert confs["master"] == f"local[{cores}]"
+        assert confs["spark.sql.shuffle.partitions"] == str(cores)
+    confs = session.build_spark(cores=4, shuffle_partitions=16)
+    assert confs["spark.sql.shuffle.partitions"] == "16"
 
 
 def test_metrics_sidecar_and_rollup(spark, transcripts):
