@@ -51,7 +51,7 @@ def salted_repartition(
     daemon's post-task ``gc.collect`` ~0.04 s) plus JVM task and JIT time:
     a width above the task slots buys a second wave of that cost over a
     small input (width 8 → 4 on the 1.4 MB perfbench ``resume_write``
-    batch cut a call's CPU from ~7.6 to ~5.9 s)."""
+    batch cut a call's CPU from ~7.9 to ~5.9 s)."""
     salt = F.pmod(F.hash(F.col("turn_idx")), F.lit(salt_buckets))
     if not num_partitions:
         num_partitions = int(
