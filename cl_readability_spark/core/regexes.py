@@ -87,8 +87,3 @@ NON_WORD = re.compile(r"\W+", re.UNICODE)
 # Style-attribute parsing for _isProbablyVisible (we have no CSSOM)
 DISPLAY_NONE = re.compile(r"(?:^|;)\s*display\s*:\s*none(?:\s*(?:;|$))", re.I)
 VISIBILITY_HIDDEN = re.compile(r"(?:^|;)\s*visibility\s*:\s*hidden(?:\s*(?:;|$))", re.I)
-
-# Pagination link heuristics (regex.lisp:40-44 — declared by the reference,
-# unused in its body; the legacy Readability findNextPageLink surface)
-NEXT_LINK = re.compile(r"(next|weiter|continue|>([^\|]|$)|»([^\|]|$))", re.I)
-PREV_LINK = re.compile(r"(prev|earl|old|new|<|«)", re.I)

@@ -25,10 +25,11 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def _minhash_coeffs(seed: int, n_hashes: int):
-    """The multiply-shift hash family shared by every minhash stage (the
-    batch ``minhash_stage`` and the streaming ``band_signature_stage`` —
-    ONE derivation so the two can never silently desynchronize).
-    Returns (a_vec, b_vec) uint64 arrays; a_j odd."""
+    """The multiply-shift hash family shared by every minhash stage
+    (``minhash_stage`` and the catalog band rows of
+    ``functions/incremental.py`` — ONE derivation so the two can never
+    silently desynchronize).  Returns (a_vec, b_vec) uint64 arrays;
+    a_j odd."""
     import hashlib
 
     import numpy as np
@@ -48,8 +49,8 @@ def _minhash_coeffs(seed: int, n_hashes: int):
 def _shingle_hashes(text, k: int, key: bytes):
     """Keyed blake2b-64 hashes of a text's distinct word k-grams (the
     short-text fallback hashes the whole word run) — the shared per-text
-    shingling of ``minhash_stage`` and ``band_signature_stage``.
-    Returns a uint64 ndarray."""
+    shingling of ``minhash_stage``, the incremental minhash catalog and
+    the decontamination n-gram screens.  Returns a uint64 ndarray."""
     import hashlib
 
     import numpy as np
@@ -138,88 +139,6 @@ def minhash_stage(
     # of a small-on-disk corpus otherwise runs the whole shingle+hash
     # pass on 1-2 cores (no-op when the input already spans the cores)
     return ensure_parallelism(df.select(id_col, text_col)).mapInPandas(
-        _batches, out_schema
-    )
-
-
-def band_signature_stage(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    passthrough: tuple[str, ...] = (),
-    k: int = 5,
-    n_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Fused Arrow stage emitting the exploded LSH band rows directly:
-    (id, *passthrough, band_idx, band_sig) — ``bands`` rows per input row,
-    band_sig = keyed blake2b-64 of the band's minhash-signature slice.
-
-    STATELESS per input row, which is the property the streaming near-dup
-    gate needs (``pipeline/streaming.py:streaming_near_dup_flags_jvm``): the
-    stage runs unchanged under ``readStream`` per micro-batch, with
-    ``passthrough`` carrying the event-time column for the watermark.
-    Two equal texts produce equal band signatures by construction (same
-    shingle set → same minhash vector → same slice bytes), and band
-    collisions follow the standard (bands, rows-per-band) LSH curve, the
-    same structure as ``minhash_near_dups``' JVM banding (hash family
-    differs; collision structure is what matters)."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    if n_hashes % bands:
-        raise ValueError("n_hashes must be divisible by bands")
-    rows_per_band = n_hashes // bands
-    a_vec, b_vec = _minhash_coeffs(seed, n_hashes)
-    key = str(seed).encode()
-    out_schema = StructType(
-        [df.schema[id_col]]
-        + [df.schema[c] for c in passthrough]
-        + [
-            StructField("band_idx", IntegerType(), False),
-            StructField("band_sig", LongType(), False),
-        ]
-    )
-    cols = [id_col, *passthrough]
-
-    def _batches(iterator):
-        blake = hashlib.blake2b
-        for pdf in iterator:
-            out = {c: [] for c in cols}
-            out["band_idx"], out["band_sig"] = [], []
-            for row in pdf[cols + [text_col]].itertuples(index=False):
-                text = row[-1]
-                hs = _shingle_hashes(text, k, key)
-                sig = (hs[:, None] * a_vec[None, :] + b_vec[None, :]).min(axis=0)
-                for b in range(bands):
-                    for c, v in zip(cols, row):
-                        out[c].append(v)
-                    out["band_idx"].append(b)
-                    out["band_sig"].append(
-                        np.uint64(
-                            int.from_bytes(
-                                blake(
-                                    sig[
-                                        b * rows_per_band : (b + 1) * rows_per_band
-                                    ].tobytes(),
-                                    digest_size=8,
-                                    key=key,
-                                ).digest(),
-                                "big",
-                            )
-                        ).astype(np.int64)
-                    )
-            yield pd.DataFrame(out)
-
-    from cl_readability_spark.functions.parallelism import ensure_parallelism
-
-    # parallelism floor as in minhash_stage (no-op for streaming inputs:
-    # ensure_parallelism leaves frames whose .rdd is unavailable alone)
-    return ensure_parallelism(df.select(*cols, text_col)).mapInPandas(
         _batches, out_schema
     )
 

@@ -20,9 +20,9 @@ Two catalog kinds share the machinery:
 
 - EXACT: one row per normalized-content fingerprint
   (``content_fingerprint`` — the one definition ``curate()``'s exact
-  gate, the ingest loop and the streaming exact dedup share) —
+  gate and the ingest loop share) —
   bucketed by ``fingerprint``.  Probe = LEFT ANTI (or flag) join.
-- MINHASH: the LSH band rows of ``functions.dedup.band_signature_stage``
+- MINHASH: LSH band rows built on ``functions.dedup``'s minhash family
   (k-word shingles → n-hash minhash → banded 64-bit slice hashes),
   folded to ONE join column ``band_key = xxhash64(band_idx, band_sig)``
   (band_idx folded in so cross-band slice-byte collisions cannot match)
@@ -57,7 +57,7 @@ def content_fingerprint(text_col: str):
     """Column: the exact-dedup fingerprint of ``text_col`` —
     ``md5(regexp_replace(lower(coalesce(text, '')), '[^a-z0-9]', ''))``.
     Every exact-dedup site (``curate()``'s exact gate, the exact
-    catalog, the ingest loop, streaming exact dedup) uses this one
+    catalog, the ingest loop) uses this one
     definition: a catalog written under one normalization and probed
     under another would silently match nothing."""
     return F.md5(
@@ -362,7 +362,7 @@ def _band_rows_with_sig(
     seed: int,
 ) -> DataFrame:
     """(id, band_key, sig) — one row per band, sig = full minhash
-    vector.  Same hash family as ``band_signature_stage``
+    vector.  Same hash family as ``minhash_stage``
     (functions/dedup.py): keyed shingle hashes → affine minhash → keyed
     blake2b-64 band slices; equality of texts ⇒ equality of band keys
     AND signatures, and the signature agreement fraction estimates

@@ -96,7 +96,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         return df
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
-    except Exception:  # pragma: no cover — streaming frames etc.
+    except Exception:  # pragma: no cover — no physical plan: leave it to the consumer
         return df
     if _SHUFFLE_RE.search(plan) or "InMemoryTableScan" in plan:
         # downstream of a shuffle or cache: parallelism already follows

@@ -316,67 +316,3 @@ def dsir_sample(
 
         out = attach_pins(out, *mh_pins)
     return out
-
-
-def classifier_quality(
-    df: DataFrame,
-    positives: DataFrame,
-    negatives: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 4096,
-    ngrams: tuple[int, ...] = (1, 2),
-    alpha: float = 1.0,
-    threshold: float = 0.0,
-    prior_logodds: float = 0.0,
-) -> DataFrame:
-    """Classifier-based quality filtering (Brown et al. 2020 §A / the
-    GPT-3/LLaMA recipe: score web documents against a high-quality
-    reference class with a linear classifier over hashed n-gram
-    features; DCLM, Li et al. 2024, is the fastText descendant): adds
-    ``quality_logodds`` and ``quality_ok`` to ``df``.
-
-    The classifier is hashed multinomial NAIVE BAYES — the per-bucket
-    log-odds table λ_b = log P(b|pos) − log P(b|neg) with additive
-    smoothing — which is exactly the DSIR importance machinery with
-    (positives, negatives) as the (target, source) fits, so the score
-    core REUSES :func:`dsir_logweights` verbatim (bounded two-scan fit,
-    broadcast λ join, map-side per-doc sum — and the same hash-checked
-    `dsir_logw` oracle covers the computation).  NB-instead-of-LR is
-    the repo's honest-heuristic stance (langid / quality_score / lm_fit
-    precedent): the feature space and decision form match the published
-    recipe, the fit is closed-form and fully distributed — no driver
-    matrix, no iterative solver.
-
-    ``negatives`` defaults to ``df`` itself (the paper's setting: raw
-    crawl as the negative/background class — at scale pass SAMPLES for
-    both classes so only the scoring pass reads the full corpus).
-    ``prior_logodds`` is the caller-supplied log(P(pos)/P(neg)) offset
-    — a NUMBER, not a computed frame: deriving it here would cost two
-    plan-time count() actions (the lesson of the round-5 minhash plan
-    builder, which counted its input; PLANS.md).
-    Distillation recipe (DCLM-style rule→model): fit positives =
-    ``gopher_flags(...).filter("gopher_ok")`` samples, negatives = the
-    rejected samples — pinned in tests/test_selection.py.
-
-    Like DSIR, the log-odds sum is per gram OCCURRENCE (length-biased):
-    gate degenerate lengths first (gopher/curate), then threshold."""
-    neg = negatives if negatives is not None else df
-    scored = dsir_logweights(
-        df,
-        target=positives,
-        source=neg,
-        text_col=text_col,
-        id_col=id_col,
-        n_buckets=n_buckets,
-        ngrams=ngrams,
-        alpha=alpha,
-    )
-    logodds = F.col("dsir_logw") + F.lit(float(prior_logodds))
-    return (
-        scored.withColumn("quality_logodds", logodds)
-        .withColumn(
-            "quality_ok", F.col("quality_logodds") >= F.lit(float(threshold))
-        )
-        .drop("dsir_logw")
-    )

@@ -44,14 +44,15 @@ Semantics (engine-exact, DuckDB-twinned):
 
 Scale shape (100 TB): one projection adds the per-turn token count
 (whole-stage codegen — regexp-free size/split, no lambda HOFs), then
-ONE conv-keyed exchange into an Arrow ``applyInPandas`` stage that
-does the per-conversation assembly with numpy cumsum + vectorized
-searchsorted (no per-row python dispatch; string joins are batch-level
-pandas ops).  Per-task work is bounded by the largest single
-conversation — the doc-bounded stance of conversation_flags /
-pdf_layout: a whale conversation is one task, a skewed corpus is not a
-skewed plan.  Plan-shape-tested: exactly one Exchange, one
-FlatMapGroupsInPandas, zero joins/windows.
+ONE conv-keyed exchange, a partition-local sort on (conv, turn_idx)
+and ONE Arrow ``mapInPandas`` stage that assembles every conversation
+of a batch with numpy cumsum + one vectorized searchsorted (no
+per-row python dispatch; string joins are batch-level pandas ops).
+Per-task memory is bounded by the largest single conversation — the
+doc-bounded stance of conversation_flags / pdf_layout: a whale
+conversation is one task, a skewed corpus is not a skewed plan.
+Plan-shape-tested: exactly one Exchange, one MapInPandas, zero
+joins/windows.
 """
 
 from __future__ import annotations
@@ -106,7 +107,6 @@ def sft_examples(
     role_sep: str = ": ",
     turn_sep: str = "\n",
     num_partitions: int | None = None,
-    impl: str = "batched",
 ) -> DataFrame:
     """One SFT example per ``target_role`` turn (module doc for the
     budget/suffix semantics):
@@ -130,20 +130,9 @@ def sft_examples(
     whole Arrow stage), because the per-conv string assembly cost lives
     in python, not in the exchange volume.  Default None keeps AQE
     sizing, which is right when partitions are byte-bound (real
-    100 TB-scale string-heavy transcripts).
-
-    ``impl``: ``"batched"`` (default) = conv-keyed repartition +
-    partition-local sort + ONE ``mapInPandas`` stage vectorizing
-    across many conversations per Arrow batch, with the trailing
-    conversation carried between batches; ``"grouped"`` = the
-    ``applyInPandas`` per-conversation form.  Identical values
-    (equality-tested); batched measured 4.3× faster at 1M 20-turn
-    conversations because applyInPandas pays a pandas-frame-per-group
-    overhead that dominates on short conversations."""
+    100 TB-scale string-heavy transcripts)."""
     # kwarg guards before any plan is built: reject nonsense at call
     # time, not mid-action
-    if impl not in ("batched", "grouped"):
-        raise ValueError(f"impl must be batched|grouped, got {impl!r}")
     if max_context_tokens < 0:
         raise ValueError("max_context_tokens must be >= 0")
     if min_context_turns < 0:
@@ -175,82 +164,13 @@ def sft_examples(
     tgt_role = str(target_role)
     rsep, tsep = str(role_sep), str(turn_sep)
 
-    def _assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_idx", kind="mergesort")
-        toks = pdf["_tok"].to_numpy(dtype=np.int64)
-        if toks.size and toks.min() < 0:
-            raise ValueError(
-                "sft_examples: negative token count in token_col"
-            )
-        idxs = pdf["_idx"].to_numpy(dtype=np.int64)
-        roles = pdf["_role"].to_numpy(dtype=object)
-        # cum0[k] = tokens of the first k turns (length n+1, monotone)
-        cum0 = np.zeros(len(pdf) + 1, dtype=np.int64)
-        np.cumsum(toks, out=cum0[1:])
-        targets = np.flatnonzero(roles == tgt_role)
-        if targets.size == 0:
-            return pd.DataFrame(
-                {
-                    "conv_id": pd.Series(dtype=object),
-                    "target_idx": pd.Series(dtype=np.int64),
-                    "context_start_idx": pd.Series(dtype=np.int64),
-                    "n_context_turns": pd.Series(dtype=np.int64),
-                    "context_tokens": pd.Series(dtype=np.int64),
-                    "target_tokens": pd.Series(dtype=np.int64),
-                    "truncated": pd.Series(dtype=bool),
-                    "context_text": pd.Series(dtype=object),
-                    "target_text": pd.Series(dtype=object),
-                }
-            )
-        # maximal fitting suffix: smallest start with
-        # cum0[start] >= cum0[p] - budget (side='left' keeps boundary
-        # zero-token turns)
-        starts = np.searchsorted(
-            cum0, cum0[targets] - budget, side="left"
-        )
-        starts = np.minimum(starts, targets)
-        n_ctx = targets - starts
-        keep = n_ctx >= min_ctx
-        targets, starts, n_ctx = targets[keep], starts[keep], n_ctx[keep]
-        if targets.size == 0:
-            return _assemble(pdf.iloc[0:0])  # typed empty frame
-        lines = (
-            pdf["_role"].astype(str) + rsep + pdf["_text"].astype(str)
-        ).to_numpy(dtype=object)
-        texts = pdf["_text"].to_numpy(dtype=object)
-        ctx_text = [
-            tsep.join(lines[s:p]) for s, p in zip(starts, targets)
-        ]
-        return pd.DataFrame(
-            {
-                "conv_id": np.repeat(
-                    pdf["_conv"].iloc[0], targets.size
-                ),
-                "target_idx": idxs[targets],
-                "context_start_idx": np.where(
-                    n_ctx > 0, idxs[np.minimum(starts, len(idxs) - 1)], -1
-                ),
-                "n_context_turns": n_ctx,
-                "context_tokens": cum0[targets] - cum0[starts],
-                "target_tokens": toks[targets],
-                "truncated": starts > 0,
-                "context_text": ctx_text,
-                "target_text": texts[targets],
-            }
-        )
-
-    if impl == "grouped":
-        if num_partitions is not None:
-            slim = slim.repartition(num_partitions, "_conv")
-        return slim.groupBy("_conv").applyInPandas(_assemble, _OUT_SCHEMA)
-
-    # impl == "batched": conv-keyed repartition + partition-local sort,
-    # then ONE mapInPandas stage that vectorizes across MANY
-    # conversations per Arrow batch.  applyInPandas builds a pandas
-    # frame PER GROUP (~150-180 us each) — at 20-turn conversations
-    # that overhead dominated: 1M turns measured 4.3x FASTER through
-    # this path (BENCH/BASELINE.md).  Values are identical
-    # (equality-tested against the grouped path on randomized corpora).
+    # conv-keyed repartition + partition-local sort, then ONE
+    # mapInPandas stage that vectorizes across MANY conversations per
+    # Arrow batch.  applyInPandas builds a pandas frame PER GROUP
+    # (~150-180 us each) — at 20-turn conversations that overhead
+    # dominated: 1M turns measured 4.3x FASTER through this path
+    # (BENCH/BASELINE.md).  Values are equality-tested against a
+    # per-conversation applyInPandas reference (tests/test_sft.py).
     def _process(pdf: pd.DataFrame) -> pd.DataFrame:
         """Assemble over a frame of one-or-more COMPLETE conversations,
         sorted by (_conv, _idx)."""
@@ -276,7 +196,7 @@ def sft_examples(
         np.cumsum(toks, out=cum0[1:])
         targets = np.flatnonzero(roles == tgt_role)
         if targets.size == 0:
-            return _assemble(pdf.iloc[0:0])  # typed empty frame
+            return pdf.iloc[0:0]  # _iter_assemble drops empty outputs
         starts = np.searchsorted(
             cum0, cum0[targets] - budget, side="left"
         )
@@ -286,7 +206,7 @@ def sft_examples(
         keep = n_ctx >= min_ctx
         targets, starts, n_ctx = targets[keep], starts[keep], n_ctx[keep]
         if targets.size == 0:
-            return _assemble(pdf.iloc[0:0])
+            return pdf.iloc[0:0]
         lines = (
             pdf["_role"].astype(str) + rsep + pdf["_text"].astype(str)
         ).to_numpy(dtype=object)
@@ -497,69 +417,3 @@ def sft_dataset(
         )
     return ex
 
-
-def assemble_conversation(
-    idxs,
-    roles,
-    texts,
-    toks,
-    *,
-    max_context_tokens: int,
-    min_context_turns: int = 1,
-    target_role: str = "assistant",
-    role_sep: str = ": ",
-    turn_sep: str = "\n",
-) -> dict:
-    """Single-conversation assembly over parallel arrays (sorted here
-    by ``idxs``, stable) — the per-conversation core shared by the
-    streaming operator (``pipeline/streaming.py:streaming_sft_examples``,
-    which accumulates a conversation's turns in state and assembles at
-    session close) and by tests.  Returns a dict of column lists in
-    the ``sft_examples`` output order (without conv_id); value parity
-    with the batch operator is pinned by the batch≡stream equality
-    test."""
-    order = np.argsort(np.asarray(idxs, dtype=np.int64), kind="stable")
-    idx = np.asarray(idxs, dtype=np.int64)[order]
-    rol = np.asarray(roles, dtype=object)[order]
-    txt = np.asarray(texts, dtype=object)[order]
-    tok = np.asarray(toks, dtype=np.int64)[order]
-    if tok.size and tok.min() < 0:
-        raise ValueError("assemble_conversation: negative token count")
-    cum0 = np.zeros(len(idx) + 1, dtype=np.int64)
-    np.cumsum(tok, out=cum0[1:])
-    targets = np.flatnonzero(rol == target_role)
-    empty: dict = {
-        "target_idx": [], "context_start_idx": [], "n_context_turns": [],
-        "context_tokens": [], "target_tokens": [], "truncated": [],
-        "context_text": [], "target_text": [],
-    }
-    if targets.size == 0:
-        return empty
-    starts = np.searchsorted(
-        cum0, cum0[targets] - int(max_context_tokens), side="left"
-    )
-    starts = np.minimum(starts, targets)
-    n_ctx = targets - starts
-    keep = n_ctx >= int(min_context_turns)
-    targets, starts, n_ctx = targets[keep], starts[keep], n_ctx[keep]
-    if targets.size == 0:
-        return empty
-    lines = np.asarray(
-        [f"{r}{role_sep}{t}" for r, t in zip(rol, txt)], dtype=object
-    )
-    return {
-        "target_idx": [int(idx[p]) for p in targets],
-        "context_start_idx": [
-            int(idx[s]) if n else -1 for s, n in zip(starts, n_ctx)
-        ],
-        "n_context_turns": [int(n) for n in n_ctx],
-        "context_tokens": [
-            int(cum0[p] - cum0[s]) for s, p in zip(starts, targets)
-        ],
-        "target_tokens": [int(tok[p]) for p in targets],
-        "truncated": [bool(s > 0) for s in starts],
-        "context_text": [
-            turn_sep.join(lines[s:p]) for s, p in zip(starts, targets)
-        ],
-        "target_text": [txt[p] for p in targets],
-    }

@@ -81,23 +81,6 @@ TRACKING_PARAMS = (
 _TRACK_RE = r"(?:^|&)(?:" + "|".join(TRACKING_PARAMS) + r")(?:=[^&]*)?(?=&|$)"
 
 
-def url_parts(url: Column) -> Column:
-    """``struct<scheme,host,port,path,query,fragment,userinfo>`` parsed
-    from a URL column (RFC 3986 appendix-B regex; absent parts are
-    empty strings — one codegen projection, no python)."""
-    s = F.trim(url)
-    auth = F.regexp_extract(s, _PARTS, 2)
-    return F.struct(
-        F.regexp_extract(s, _PARTS, 1).alias("scheme"),
-        F.regexp_extract(auth, _AUTH, 2).alias("host"),
-        F.regexp_extract(auth, _AUTH, 3).alias("port"),
-        F.regexp_extract(s, _PARTS, 3).alias("path"),
-        F.regexp_extract(s, _PARTS, 4).alias("query"),
-        F.regexp_extract(s, _PARTS, 5).alias("fragment"),
-        F.regexp_extract(auth, _AUTH, 1).alias("userinfo"),
-    )
-
-
 def canonicalize_url(
     url: Column,
     strip_www: bool = True,

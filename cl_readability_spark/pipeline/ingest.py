@@ -504,67 +504,6 @@ def ingest_batch(
     return report
 
 
-def streaming_ingest(
-    spark: SparkSession,
-    input_path: str,
-    sink: KeyedSink,
-    checkpoint_path: str,
-    exact_table: str | None = None,
-    minhash_table: str | None = None,
-    ledger_path: str | None = None,
-    config: ExtractorConfig = DEFAULT_CONFIG,
-    salt_buckets: int = 16,
-    prefilter_readerable: bool | str = False,
-    minhash_threshold: float = 0.8,
-    curate_opts: dict | None = None,
-    max_files_per_trigger: int | None = None,
-    on_report=None,
-):
-    """Streaming front-end of the ingest loop: a transcripts parquet
-    stream where every micro-batch runs the FULL ``ingest_batch``
-    composition via ``foreachBatch``.
-
-    Exactly-once is by COMPOSITION, not by the streaming engine alone:
-    Spark's checkpoint gives at-least-once micro-batch replay, and
-    ``ingest_batch`` is idempotent under replay (the resume anti-join
-    re-selects only uncommitted rows; the catalog ledger replays or
-    skips the append) — so a crash anywhere, including a lost
-    checkpoint, converges to the same committed corpus.  This is the
-    same argument the Iceberg deployment makes with snapshots in place
-    of ``_SUCCESS`` markers.
-
-    ``on_report`` (optional callable) receives each micro-batch's
-    report dict on the driver — one bounded dict per trigger, the
-    streaming twin of the batch loop's return value."""
-    from cl_readability_spark.pipeline.transcripts import TRANSCRIPTS_SCHEMA
-
-    reader = spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        report = ingest_batch(
-            batch_df,
-            sink,
-            exact_table=exact_table,
-            minhash_table=minhash_table,
-            ledger_path=ledger_path,
-            config=config,
-            salt_buckets=salt_buckets,
-            prefilter_readerable=prefilter_readerable,
-            minhash_threshold=minhash_threshold,
-            curate_opts=curate_opts,
-        )
-        if on_report is not None:
-            on_report({"micro_batch": batch_id, **report})
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
-    )
-    return writer.trigger(availableNow=True).start()
-
-
 def compact_exact_catalog(spark: SparkSession, table: str) -> None:
     """Rewrite the exact catalog one-row-per-fingerprint (min keep_id),
     reclaiming duplicate rows left by crash-replayed appends.  One

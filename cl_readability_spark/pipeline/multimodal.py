@@ -59,15 +59,6 @@ IMAGE_FEATURES_SCHEMA = StructType(
     ]
 )
 
-FRAME_SAMPLE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("frame_offsets_ms", ArrayType(IntegerType()), False),
-        StructField("n_frames", IntegerType(), False),
-    ]
-)
-
-
 def synthetic_media(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFrame:
     """Deterministic opaque payloads (hash-chained bytes) with typed meta."""
     rows = []
@@ -132,91 +123,6 @@ def decode_image_features(df: DataFrame, fake: bool = True) -> DataFrame:
     return ensure_parallelism(
         df.select("doc_id", "kind", "payload")
     ).mapInPandas(mapper, IMAGE_FEATURES_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("kind", StringType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("payload", BinaryType(), True),
-        StructField("status", StringType(), False),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame, width: int = 64, height: int = 64, fake: bool = True
-) -> DataFrame:
-    """payload → resized payload via mapInPandas.  The real resizer (PIL
-    ``Image.resize``) would drop in where the deterministic fake sits —
-    the fake emits a hash-derived payload of exactly width*height bytes so
-    downstream batch-shape/size accounting is real; non-fake mode raises
-    per the stub contract (no image libs in this runtime)."""
-    import hashlib
-
-    def mapper(batches):
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "image resize requires PIL — not in runtime image; "
-                    "use fake=True for the deterministic stand-in"
-                )
-            out_payloads = []
-            status = []
-            for kind, p in zip(pdf["kind"], pdf["payload"]):
-                if p is None or kind != "image":
-                    out_payloads.append(None)
-                    status.append("skipped" if p is not None else "null_payload")
-                    continue
-                seed = hashlib.blake2b(bytes(p), digest_size=8).digest()
-                n = width * height
-                reps = n // 8 + 1
-                out_payloads.append((seed * reps)[:n])
-                status.append("ok")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "kind": pdf["kind"],
-                    "width": [width] * len(pdf),
-                    "height": [height] * len(pdf),
-                    "payload": out_payloads,
-                    "status": status,
-                }
-            )
-
-    return df.select("doc_id", "kind", "payload").mapInPandas(
-        mapper, RESIZED_SCHEMA
-    )
-
-
-def sample_video_frames(
-    df: DataFrame, every_ms: int = 1000, fake: bool = True
-) -> DataFrame:
-    """video rows → deterministic frame-offset plan (the real frame decoder
-    would consume these offsets; ffmpeg absent → offsets only)."""
-
-    def mapper(batches):
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError("frame decode requires ffmpeg")
-            offsets = [
-                list(range(0, int(d), every_ms)) if pd.notna(d) else []
-                for d in pdf["duration_ms"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "frame_offsets_ms": offsets,
-                    "n_frames": [len(o) for o in offsets],
-                }
-            )
-
-    src = df.filter(F.col("kind") == "video").select(
-        "doc_id", F.col("meta.duration_ms").alias("duration_ms")
-    )
-    return src.mapInPandas(mapper, FRAME_SAMPLE_SCHEMA)
 
 
 def media_feature_near_dups(

@@ -35,7 +35,10 @@ def main(argv: list[str]) -> int:
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
     p.add_argument("--salt-buckets", type=int, default=16)
-    p.add_argument("--partitions", type=int, default=None)
+    p.add_argument("--partitions", type=int, default=None,
+                   help="pins the width of BOTH the extraction exchange "
+                        "and the --pack pack_sequences exchange; without "
+                        "it both use spark.sql.shuffle.partitions")
     p.add_argument("--jaccard-threshold", type=float, default=0.8)
     p.add_argument("--min-chars", type=int, default=100)
     p.add_argument("--min-stopword-bp", type=int, default=100,

@@ -1,10 +1,7 @@
-"""Config-surface hooks: *visibility-checker* (globals.lisp:32-33) and the
-pagination link regexes (regex.lisp:40-44)."""
+"""Config-surface hook: *visibility-checker* (globals.lisp:32-33)."""
 
 from cl_readability_spark.core.config import ExtractorConfig
-from cl_readability_spark.core.dom import parse_html
 from cl_readability_spark.core.extract import extract
-from cl_readability_spark.core.pagination import find_pagination_links
 from cl_readability_spark.core.readerable import is_readerable
 
 LONG = (
@@ -39,34 +36,3 @@ def test_visibility_checker_gates_readerable():
     cfg = ExtractorConfig(visibility_checker=lambda el: False)
     assert is_readerable(HTML, cfg) is False
 
-
-def test_pagination_rel_links_win():
-    doc = parse_html(
-        "<html><body>"
-        "<a href='/p/3' rel='next'>more</a>"
-        "<a href='/p/1' rel='prev'>back</a>"
-        "<a href='/p/99'>next chapter</a>"
-        "</body></html>"
-    )
-    nxt, prev = find_pagination_links(doc, "https://ex.com/p/2")
-    assert nxt == "https://ex.com/p/3"
-    assert prev == "https://ex.com/p/1"
-
-
-def test_pagination_regex_fallback_and_guards():
-    doc = parse_html(
-        "<html><body>"
-        "<a href='#top'>next</a>"  # fragment-only: ignored
-        "<a href='javascript:void(0)'>next</a>"  # js: ignored
-        "<a href='/older'>older posts</a>"  # prev regex ('old')
-        "<a href='/weiter'>weiter</a>"  # next regex (german)
-        "</body></html>"
-    )
-    nxt, prev = find_pagination_links(doc)
-    assert nxt == "/weiter"
-    assert prev == "/older"
-
-
-def test_pagination_none_when_absent():
-    doc = parse_html("<html><body><a href='/about'>about us</a></body></html>")
-    assert find_pagination_links(doc) == (None, None)

@@ -55,20 +55,3 @@ def test_explode_spans(spark):
     for r in joined.collect():
         assert 0 <= r.start <= r.end <= len(r.extracted_text)
 
-
-def test_stitch_conversations_grouped_map(spark):
-    from cl_readability_spark.pipeline.grouped import stitch_conversations
-
-    df = synthetic_transcripts(spark, 4, seed=17)
-    got = {r.conv_id: r for r in stitch_conversations(df).collect()}
-    rows = df.orderBy("conv_id", "turn_idx").collect()
-    by_conv = {}
-    for r in rows:
-        by_conv.setdefault(r.conv_id, []).append(r)
-    assert set(got) == set(by_conv)
-    for cid, turns in by_conv.items():
-        g = got[cid]
-        assert g.n_turns == len(turns)
-        assert g.first_role == turns[0].role
-        assert g.stitched_text == "\n\n".join(t.text or "" for t in turns)
-        assert g.total_chars == sum(len(t.text or "") for t in turns)

@@ -314,55 +314,6 @@ def test_committed_filter_scopes_resume_scan(spark, tmp_path, batches):
     )
 
 
-def test_streaming_ingest_end_to_end_and_replay(spark, tmp_path, batches):
-    """Two-file stream, one file per trigger → two micro-batches through
-    the full loop; then a checkpoint LOSS replay converges to the same
-    corpus (exactly-once by composition: streaming checkpoint ×
-    ingest_batch idempotence)."""
-    from cl_readability_spark.pipeline.ingest import streaming_ingest
-
-    b1, b2 = batches
-    exact, mh = _catalogs(spark, "stream")
-    src = str(tmp_path / "src")
-    b1.coalesce(1).write.parquet(src)
-    b2.coalesce(1).write.mode("append").parquet(src)
-    sink = CheckpointedSink(str(tmp_path / "corpus"))
-    reports = []
-
-    q = streaming_ingest(
-        spark, src, sink, str(tmp_path / "ckpt"),
-        exact_table=exact, minhash_table=mh, curate_opts=CURATE,
-        max_files_per_trigger=1, on_report=reports.append,
-    )
-    q.awaitTermination(300)
-    assert len(reports) == 2
-    total_kept = sum(r["rows_kept"] for r in reports)
-    corpus = sink.read(spark).filter("kept")
-    assert corpus.count() == total_kept
-    # the batch-1 copies inside batch 2 were caught (whichever order the
-    # two files streamed in, the second trigger probes the first's rows)
-    assert any(
-        r["exact_in_catalog"] + r["near_dup_in_catalog"] > 0
-        for r in reports
-    )
-    # kept content is globally unique across micro-batches
-    assert (
-        corpus.select("fingerprint").distinct().count() == corpus.count()
-    )
-
-    # checkpoint loss: replay the whole stream from scratch — the resume
-    # anti-join makes every replayed micro-batch a no-op
-    replays = []
-    q2 = streaming_ingest(
-        spark, src, sink, str(tmp_path / "ckpt2"),
-        exact_table=exact, minhash_table=mh, curate_opts=CURATE,
-        max_files_per_trigger=1, on_report=replays.append,
-    )
-    q2.awaitTermination(300)
-    assert all(r["rows_in"] == 0 for r in replays)
-    assert sink.read(spark).filter("kept").count() == total_kept
-
-
 def test_url_catalog_gates_ingest_before_extraction(spark, tmp_path):
     """url_table= probes canonical URLs BEFORE extraction: batch-2
     rows re-crawling batch-1 KEPT pages under raw URL variants (www/

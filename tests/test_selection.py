@@ -212,88 +212,3 @@ def test_dsir_plan_shape(spark):
     idxs = {m.group(1) for m in _re.finditer(r"element_at\([^,]*, (\d+)", plan)}
     assert idxs <= {"1"}, idxs
     assert "zip_with" in plan
-
-
-def test_classifier_quality_separates_and_distills(spark):
-    """The Brown et al. classifier recipe: fit positives = fluent
-    reference samples (or gopher-passing docs), negatives = gibberish —
-    fluent corpus docs must out-score gibberish ones, the threshold
-    gates, and the prior shifts log-odds additively."""
-    from cl_readability_spark.functions.curation import gopher_flags
-    from cl_readability_spark.functions.selection import classifier_quality
-
-    fluent = [
-        "the quick brown fox jumps over the lazy dog in the morning",
-        "a model of the world is trained on text from many sources",
-        "the cat sat on the mat and the dog sat on the log",
-    ]
-    junk = [
-        "zxq qqq zzz xxz qzx zqx xqz",
-        "lorem qqqq zzzz glorp blix nox",
-        "@@@ ### $$$ %%% ^^^ &&&",
-    ]
-    pos = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(fluent)], "doc_id long, text string"
-    )
-    neg = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(junk)], "doc_id long, text string"
-    )
-    corpus = spark.createDataFrame(
-        [
-            (10, "the quick brown dog jumps over the fox"),
-            (11, "zzz qqq glorp zxq blix"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r.asDict()
-        for r in classifier_quality(corpus, pos, neg).collect()
-    }
-    assert out[10]["quality_logodds"] > out[11]["quality_logodds"]
-    assert out[10]["quality_ok"] and not out[11]["quality_ok"]
-
-    # prior shifts additively; threshold gates on the shifted value
-    shifted = {
-        r["doc_id"]: r.asDict()
-        for r in classifier_quality(
-            corpus, pos, neg, prior_logodds=-100.0
-        ).collect()
-    }
-    assert shifted[10]["quality_logodds"] == pytest.approx(
-        out[10]["quality_logodds"] - 100.0
-    )
-    assert not shifted[10]["quality_ok"]
-
-    # DCLM-style distillation: gopher rules label the fit classes
-    docs = spark.createDataFrame(
-        [(i, (fluent + junk)[i % 6] + f" filler {i}") for i in range(24)],
-        "doc_id long, text string",
-    )
-    flagged = gopher_flags(docs, min_words=6, min_stopwords=1)
-    p2 = flagged.filter("gopher_ok").select("doc_id", "text")
-    n2 = flagged.filter("NOT gopher_ok").select("doc_id", "text")
-    assert p2.count() > 0 and n2.count() > 0
-    scored = classifier_quality(docs, p2, n2)
-    joined = scored.join(
-        flagged.select("doc_id", "gopher_ok"), "doc_id"
-    ).collect()
-    by_rule = {}
-    for r in joined:
-        by_rule.setdefault(r["gopher_ok"], []).append(r["quality_logodds"])
-    # the distilled model reproduces its teacher's ordering on average
-    assert min(by_rule[True]) > max(by_rule[False])
-
-
-def test_classifier_quality_negatives_default_and_empty(spark):
-    from cl_readability_spark.functions.selection import classifier_quality
-
-    corpus = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, None), (3, "")],
-        "doc_id long, text string",
-    )
-    pos = corpus.filter("doc_id = 1")
-    out = {r["doc_id"]: r.asDict() for r in classifier_quality(corpus, pos).collect()}
-    assert set(out) == {1, 2, 3}
-    # gramless docs score the empty sum (0.0) + prior, per the DSIR contract
-    assert out[2]["quality_logodds"] == 0.0
-    assert out[3]["quality_logodds"] == 0.0

@@ -7,12 +7,18 @@ test_queries_oracle.py."""
 
 import random
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
 
 from cl_readability_spark.functions.decontam import split_leakage
-from cl_readability_spark.functions.sft import sft_examples
+from cl_readability_spark.functions.sft import (
+    _OUT_SCHEMA,
+    default_turn_tokens,
+    sft_examples,
+)
 
 pytestmark = pytest.mark.spark
 
@@ -228,12 +234,7 @@ def test_plan_shape_one_exchange_one_arrow_stage(spark):
         [("A", 0, "user", "x y"), ("A", 1, "assistant", "z")],
         TURNS_SCHEMA,
     )
-    for kwargs in (
-        {},
-        {"num_partitions": 3},
-        {"impl": "grouped"},
-        {"impl": "grouped", "num_partitions": 3},
-    ):
+    for kwargs in ({}, {"num_partitions": 3}):
         plan = (
             sft_examples(df, **kwargs)
             ._jdf.queryExecution()
@@ -242,12 +243,7 @@ def test_plan_shape_one_exchange_one_arrow_stage(spark):
         )
         # the explicit repartition SATISFIES the required distribution —
         # pinning the width must not add a second exchange
-        arrow_op = (
-            "FlatMapGroupsInPandas"
-            if kwargs.get("impl") == "grouped"
-            else "MapInPandas"
-        )
-        assert plan.count(arrow_op) == 1, kwargs
+        assert plan.count("MapInPandas") == 1, kwargs
         assert plan.count("Exchange") == 1, kwargs
         for bad in ("Join", "Window", "ArrayFilter", "ArrayTransform"):
             assert bad not in plan, (bad, kwargs)
@@ -257,8 +253,6 @@ def test_plan_shape_one_exchange_one_arrow_stage(spark):
     assert out.rdd.getNumPartitions() == 3
     with pytest.raises(ValueError):
         sft_examples(df, num_partitions=0)
-    with pytest.raises(ValueError):
-        sft_examples(df, impl="rowwise")
 
 
 # --- split_leakage ---
@@ -471,11 +465,12 @@ def test_sft_with_bpe_subword_counts(spark):
 
 
 def test_batched_equals_grouped_and_cross_batch_carry(spark):
-    """The default batched (mapInPandas) implementation is
-    value-identical to the grouped (applyInPandas) one — including when
-    a conversation straddles Arrow batches (forced with a 5-row batch
-    size against 40-turn conversations, so every conversation spans
-    several batches and the carry path runs on every one)."""
+    """``sft_examples`` (conv-sorted batches through one mapInPandas)
+    is value-identical to the per-conversation applyInPandas reference
+    ``_assemble`` — including when a conversation straddles Arrow
+    batches (forced with a 5-row batch size against 40-turn
+    conversations, so every conversation spans several batches and the
+    carry path runs on every one)."""
     rng = random.Random(99)
     words = ["alpha", "beta", "gamma", "delta"]
     turns = []
@@ -494,19 +489,62 @@ def test_batched_equals_grouped_and_cross_batch_carry(spark):
             )
     df = spark.createDataFrame(turns, TURNS_SCHEMA)
 
-    def rows(impl):
-        out = sft_examples(
-            df, max_context_tokens=9, impl=impl, num_partitions=3
+    def _assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+        """Reference assembly of ONE conversation (9-token budget,
+        default target role, separators and min_context_turns).  A
+        closure: python workers cannot import this test module."""
+        pdf = pdf.sort_values("_idx", kind="mergesort")
+        toks = pdf["_tok"].to_numpy(dtype=np.int64)
+        idxs = pdf["_idx"].to_numpy(dtype=np.int64)
+        roles = pdf["_role"].to_numpy(dtype=object)
+        cum0 = np.zeros(len(pdf) + 1, dtype=np.int64)
+        np.cumsum(toks, out=cum0[1:])
+        targets = np.flatnonzero(roles == "assistant")
+        starts = np.minimum(
+            np.searchsorted(cum0, cum0[targets] - 9, side="left"), targets
         )
+        n_ctx = targets - starts
+        keep = n_ctx >= 1
+        targets, starts, n_ctx = targets[keep], starts[keep], n_ctx[keep]
+        lines = (pdf["_role"] + ": " + pdf["_text"]).to_numpy(dtype=object)
+        texts = pdf["_text"].to_numpy(dtype=object)
+        return pd.DataFrame(
+            {
+                "conv_id": [pdf["_conv"].iloc[0]] * targets.size,
+                "target_idx": idxs[targets],
+                "context_start_idx": idxs[starts],
+                "n_context_turns": n_ctx,
+                "context_tokens": cum0[targets] - cum0[starts],
+                "target_tokens": toks[targets],
+                "truncated": starts > 0,
+                "context_text": [
+                    "\n".join(lines[s:p]) for s, p in zip(starts, targets)
+                ],
+                "target_text": texts[targets],
+            }
+        )
+
+    slim = df.select(
+        F.col("conv_id").alias("_conv"),
+        F.col("turn_idx").cast("long").alias("_idx"),
+        F.col("role").alias("_role"),
+        F.col("text").alias("_text"),
+        default_turn_tokens(F.col("text")).alias("_tok"),
+    )
+    reference = slim.groupBy("_conv").applyInPandas(_assemble, _OUT_SCHEMA)
+    baseline = sorted(tuple(r) for r in reference.collect())
+    assert baseline
+
+    def rows():
+        out = sft_examples(df, max_context_tokens=9, num_partitions=3)
         return sorted(tuple(r) for r in out.collect())
 
-    baseline = rows("grouped")
-    assert rows("batched") == baseline
+    assert rows() == baseline
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "5")
     try:
-        assert rows("batched") == baseline
+        assert rows() == baseline
     finally:
         spark.conf.set(key, old)
 

@@ -13,7 +13,6 @@ from cl_readability_spark.functions.urls import (
     canonicalize_url,
     url_dedup,
     url_host,
-    url_parts,
 )
 
 pytestmark = pytest.mark.spark
@@ -148,20 +147,12 @@ def test_canonicalize_idempotent_and_differential(spark):
         assert r["canon2"] == r["canon"], ("fixed point", r["url"])
 
 
-def test_url_parts_and_host(spark):
+def test_url_host(spark):
     df = spark.createDataFrame(
         [(1, "https://u@WWW.Ex.org:444/p?q=1#f"), (2, "ftp://h/x")],
         ["i", "url"],
-    ).select(
-        "i",
-        url_parts(F.col("url")).alias("p"),
-        url_host(F.col("url")).alias("h"),
-    )
+    ).select("i", url_host(F.col("url")).alias("h"))
     r = {x["i"]: x for x in df.collect()}
-    p = r[1]["p"]
-    assert (p["scheme"], p["host"], p["port"], p["path"], p["query"],
-            p["fragment"], p["userinfo"]) == (
-        "https", "WWW.Ex.org", "444", "/p", "q=1", "f", "u@")
     assert r[1]["h"] == "ex.org"
     assert r[2]["h"] == "h"
 
