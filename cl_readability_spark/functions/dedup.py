@@ -21,7 +21,14 @@ rows and re-hashes candidate docs only (the large-corpus shape)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import (
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+)
 
 
 def _minhash_coeffs(seed: int, n_hashes: int):
@@ -192,6 +199,28 @@ def minhash_params(
     return n, b
 
 
+def _band_column(bands: int, rows_per_band: int) -> Column:
+    """The LSH band rows of a ``signature`` column: ``band`` =
+    explode of one (band_idx, band_hash) struct per band, band_hash =
+    xxhash64 of the band's ``rows_per_band`` signature values joined
+    with ",".  Written as ONE SQL expression string so the column costs
+    one JVM call: built per element through ``pyspark.sql.functions``
+    the same expression took ~350 py4j calls (0.4-0.6 s of driver time
+    per warm build at the default 91 × 13 banding, on 4 cores).  The parsed expression is
+    the same Catalyst tree (one codegen'd Generate, no higher-order
+    function), so every output byte is unchanged."""
+    structs = ", ".join(
+        f"named_struct('band_idx', {b}, 'band_hash', xxhash64(concat_ws(',', "
+        + ", ".join(
+            f"CAST(signature[{b * rows_per_band + r}] AS STRING)"
+            for r in range(rows_per_band)
+        )
+        + ")))"
+        for b in range(bands)
+    )
+    return F.expr(f"explode(array({structs})) AS band")
+
+
 def minhash_near_dups(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -222,7 +251,8 @@ def minhash_near_dups(
     back onto candidate pairs re-runs the hashing stage per branch —
     measured in round 2).  ``carry="rehash"`` is the safe formulation of
     candidates-only hashing (explicit DISK_ONLY pins break the
-    re-evaluation).  Building either plan runs no Spark action: the
+    re-evaluation).  Building either plan runs no Spark action, and the
+    band column of both is one JVM call (``_band_column``): the
     caller picks the plan — ``curate()`` picks it from the survivor count
     its pin's materializing action already takes (``CARRY_THRESHOLD``).
 
@@ -269,42 +299,18 @@ def minhash_near_dups(
         raise ValueError(
             f"n_hashes ({n_hashes}) must be divisible by bands ({bands})"
         )
-    rows_per_band = n_hashes // bands
-
-    def _band_explode():
-        return F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col("signature")[b * rows_per_band + r].cast(
-                                        "string"
-                                    )
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band")
-
+    band = _band_column(bands, n_hashes // bands)
     if carry == "rehash":
         return _minhash_near_dups_rehash(
             df, id_col, text_col, k, n_hashes, jaccard_threshold,
-            max_bucket, _band_explode,
+            max_bucket, band,
         )
 
     hashed = minhash_stage(df, id_col, text_col, k, n_hashes, include="both")
     banded = hashed.select(
         F.col(id_col).alias("_id"),
         F.col("shingle_hashes"),
-        _band_explode(),
+        band,
     ).select("_id", "shingle_hashes", "band.band_idx", "band.band_hash")
     buckets = (
         banded.groupBy("band_idx", "band_hash")
@@ -355,7 +361,7 @@ def _minhash_near_dups_rehash(
     n_hashes: int,
     jaccard_threshold: float,
     max_bucket: int,
-    band_explode,
+    band: Column,
 ) -> DataFrame:
     """The slim-exchange minhash plan (``carry="rehash"``; rationale at
     ``minhash_near_dups``): signature-only python pass → 20-byte band
@@ -372,7 +378,7 @@ def _minhash_near_dups_rehash(
     from cl_readability_spark.functions.pins import attach_pins
 
     hashed = minhash_stage(df, id_col, text_col, k, n_hashes, include="signature")
-    banded = hashed.select(F.col(id_col).alias("_id"), band_explode()).select(
+    banded = hashed.select(F.col(id_col).alias("_id"), band).select(
         "_id", "band.band_idx", "band.band_hash"
     )
     buckets = (
@@ -1001,6 +1007,15 @@ class _RoundPinner:
         self._this_round_paths = []
 
 
+# edge count up to which dup_clusters resolves components on the driver
+# from one bounded collect instead of running label-propagation rounds
+# (sizing measurements in the dup_clusters docstring)
+DRIVER_CLUSTER_EDGES = 100_000
+# id types whose Python ordering is Spark's (non-binary collations and
+# floating point order differently, so those ids always take the rounds)
+_DRIVER_ID_TYPES = (StringType(), LongType(), IntegerType(), ShortType(), ByteType())
+
+
 def dup_clusters(
     pairs: DataFrame,
     max_iters: int = 25,
@@ -1014,7 +1029,24 @@ def dup_clusters(
     keep-one-representative dedup policy over any of this module's pair
     producers (minhash / simhash / winnowing / embedding near-dups).
 
-    Algorithm: iterative min-label propagation with pointer jumping —
+    The edge set is pinned first (one evaluation of the pair producer),
+    then read by ONE bounded collect, ``limit(DRIVER_CLUSTER_EDGES + 1)``.
+
+    Small pair sets (≤ ``DRIVER_CLUSTER_EDGES`` edges, string or integral
+    ids, no NULL id): union-find on the driver, returned as a local
+    relation of the pairs' id type.  Crossover, measured on 4 cores with
+    string ids over mixed cliques/stars/chains of 2-12 nodes (edge pin,
+    resolution and a count of the non-representatives, best of 2-3
+    runs): the rounds took 3.7 / 5.8 / 13.2 / 30.6 / 38.4 s at 1k / 10k
+    / 100k / 300k / 1M edges, the driver path 0.2 / 0.3 / 1.1 / 3.6 /
+    10.3 s — always 5 jobs, where the rounds took 73-128.  The driver
+    path never lost on one machine, so the bound is set by what the
+    driver holds: the collected edges peak at 40 MB of Python heap at
+    100k edges and 397 MB at 1M (tracemalloc), and on a cluster the
+    rounds spread over the executors while the union-find does not.
+
+    Larger pair sets (the 10^12-turn scale, where the pairs never fit on
+    the driver): iterative min-label propagation with pointer jumping —
     each round (a) every node takes the min label over itself and its
     neighbors (one shuffle on id), then (b) labels chase one pointer hop
     (label := label(label), one self-join).  Pointer jumping makes long
@@ -1023,9 +1055,12 @@ def dup_clusters(
     with a materialization (see ``_RoundPinner`` — iterative Spark plans
     otherwise grow exponentially) and a changed-row count as the driver-
     side fixpoint test.  At 100 TB the per-round cost is two keyed
-    shuffles over the EDGE set — no collect of nodes or edges.
+    shuffles over the EDGE set; past the bounded collect of at most
+    ``DRIVER_CLUSTER_EDGES + 1`` edges, no node or edge reaches the
+    driver.
 
-    ``checkpoint_mode`` selects the round materialization:
+    ``checkpoint_mode`` selects how the edge pin and the rounds
+    materialize:
     ``"local"`` (default — single-JVM only), ``"reliable"``
     (``DataFrame.checkpoint()``, executor-loss-tolerant; the cluster
     default), or ``"table"`` (parquet-staged rounds, the lakehouse
@@ -1033,7 +1068,7 @@ def dup_clusters(
     On a multi-executor cluster DO NOT run the default: pass
     ``checkpoint_mode="reliable"`` with a durable ``checkpoint_dir``.
 
-    If the fixpoint is not reached within ``max_iters`` rounds the labels
+    If the rounds do not reach the fixpoint within ``max_iters`` the labels
     are WRONG (some nodes still carry a non-minimal representative), so
     by default this raises; ``on_nonconverged="warn"`` downgrades to a
     warning and returns the unconverged labels (diagnostic use only)."""
@@ -1043,25 +1078,72 @@ def dup_clusters(
         )
     pinner = _RoundPinner(pairs.sparkSession, checkpoint_mode, checkpoint_dir)
     try:
-        return _dup_clusters_rounds(pinner, pairs, max_iters, on_nonconverged)
+        # pin the EDGE SET first, before anything reads it twice: Spark
+        # has no cross-branch subplan reuse (PLANS.md), so reading
+        # `pairs` again (the bounded collect, then the adjacency union's
+        # two branches) evaluates the upstream pair producer — often a
+        # whole LSH pipeline over the corpus — once per read (measured:
+        # +79 s on the 1M-turn curation, a full second minhash pass).
+        edges = pinner.pin(
+            pairs.select("id_a", "id_b"), "edges", persistent=True
+        )
+        id_type = edges.schema["id_a"].dataType
+        if id_type in _DRIVER_ID_TYPES and id_type == edges.schema["id_b"].dataType:
+            few = edges.limit(DRIVER_CLUSTER_EDGES + 1).collect()
+            if len(few) <= DRIVER_CLUSTER_EDGES and all(
+                a is not None and b is not None for a, b in few
+            ):
+                return _components_on_driver(edges, few)
+        return _dup_clusters_rounds(pinner, edges, max_iters, on_nonconverged)
     finally:
         pinner.restore()
 
 
+def _components_on_driver(edges: DataFrame, rows: list) -> DataFrame:
+    """Connected components of a small edge list on the driver: union-
+    find whose root is always the component's minimum id (a union links
+    the larger root under the smaller), returned as a local relation
+    (id, cluster_rep) of the edges' id type — the same rows the rounds
+    return.  Python's ``<`` on str/int orders exactly as Spark's on
+    string/integral ids (UTF-8 byte order is code-point order), which is
+    why only those id types come here."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in rows:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    ids = list(parent)
+    id_type = edges.schema["id_a"].dataType
+    return edges.sparkSession.createDataFrame(
+        pa.table({"id": ids, "cluster_rep": [find(x) for x in ids]}),
+        StructType(
+            [StructField("id", id_type), StructField("cluster_rep", id_type)]
+        ),
+    )
+
+
 def _dup_clusters_rounds(
     pinner: _RoundPinner,
-    pairs: DataFrame,
+    edges: DataFrame,
     max_iters: int,
     on_nonconverged: str,
 ) -> DataFrame:
-    # pin the EDGE SET first, before the both-directions union references
-    # it twice: Spark has no cross-branch subplan reuse (PLANS.md), so
-    # building the adjacency straight off `pairs` evaluates the upstream
-    # pair producer — often a whole LSH pipeline over the corpus — once
-    # PER UNION BRANCH (measured: +79 s on the 1M-turn curation, a full
-    # second minhash pass).  The staged edges make the union two cheap
-    # scans, and every propagation round reads the pinned adjacency.
-    edges = pinner.pin(pairs.select("id_a", "id_b"), "edges", persistent=True)
+    # the staged edges make the adjacency union two cheap scans, and
+    # every propagation round reads the pinned adjacency
     adj = pinner.pin(
         edges.unionByName(
             edges.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))

@@ -1,34 +1,9 @@
-"""Correctness-diff harness (SURVEY §2.11 set-ops row).
-
-``table_diff`` compares two extraction outputs (e.g. this engine vs a
-reference dump, or two runs across a refactor) with exceptAll in both
-directions — multiset semantics, so duplicate rows are caught too."""
+"""Span explode of an extraction result (SURVEY §2.8): one row per
+block span, the input of the ``span_invariants`` twin's contract."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def table_diff(actual: DataFrame, expected: DataFrame, columns: list[str] | None = None):
-    """Returns (only_in_actual, only_in_expected) DataFrames; both empty ⇔
-    the tables agree as multisets on ``columns`` (default: all common)."""
-    if columns is None:
-        columns = [c for c in actual.columns if c in set(expected.columns)]
-    a = actual.select(*columns)
-    e = expected.select(*columns)
-    return a.exceptAll(e), e.exceptAll(a)
-
-
-def assert_tables_equal(actual: DataFrame, expected: DataFrame,
-                        columns: list[str] | None = None) -> None:
-    extra, missing = table_diff(actual, expected, columns)
-    n_extra, n_missing = extra.count(), missing.count()
-    if n_extra or n_missing:
-        raise AssertionError(
-            f"table mismatch: {n_extra} rows only in actual "
-            f"(sample {extra.limit(3).collect()}), {n_missing} only in expected "
-            f"(sample {missing.limit(3).collect()})"
-        )
 
 
 def explode_spans(

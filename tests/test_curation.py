@@ -1148,3 +1148,55 @@ def test_curate_url_stage_line_winner_consistency(spark):
     assert winner.line_dedup_n_kept == winner.line_dedup_n_lines
     assert not loser.url_keep and not loser.kept
     assert loser.line_dedup_n_kept == 0  # husked, not the winner
+
+
+def test_curate_job_count_fence(spark, tmp_path):
+    """A warm curate + curation_report over a planted corpus launches at
+    most 14 Spark jobs.  The pair set of a corpus this size resolves on
+    the driver from one bounded collect (dup_clusters), where the label-
+    propagation rounds alone took 14 jobs of the 26 such a call ran
+    before; the one-expression band column took the other driver gap."""
+    import random
+    import uuid
+
+    from cl_readability_spark.functions.curation import release_curated
+
+    rng = random.Random(15)
+    vocab = [f"w{i}" for i in range(400)]
+    markers = ("the", "and", "of", "to", "is", "with")
+    base = [
+        (f"doc-{i:04d}", 0, " ".join(
+            rng.choice(markers) if rng.random() < 0.2 else rng.choice(vocab)
+            for _ in range(rng.randint(80, 160))
+        ))
+        for i in range(300)
+    ]
+    exact = [(f"exact-{j:03d}", 0, rng.choice(base)[2].upper()) for j in range(20)]
+    near = []
+    for j in range(20):
+        words = rng.choice(base)[2].split()
+        words[rng.randrange(10, len(words) - 10)] = "zzplanted"
+        near.append((f"near-{j:03d}", 0, " ".join(words)))
+    src = str(tmp_path / "planted")
+    spark.createDataFrame(
+        base + exact + near, "conv_id string, turn_idx int, extracted_text string"
+    ).coalesce(spark.sparkContext.defaultParallelism).write.parquet(src)
+
+    def run():
+        cur = curate(spark.read.parquet(src), min_stopword_bp=0)
+        rep = curation_report(cur).collect()[0]
+        release_curated(cur)
+        return rep
+
+    run()  # warm-up, not counted
+    sc = spark.sparkContext
+    group = f"curate-fence-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "warm curate + curation_report")
+    try:
+        rep = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rep.rows_in == 340
+    assert rep.dropped_exact_dup == 20 and rep.dropped_near_dup == 20
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 14, jobs

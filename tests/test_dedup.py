@@ -549,6 +549,95 @@ def test_minhash_plan_construction_is_action_free(spark):
     assert acc.value == 0
 
 
+def _band_explode_reference(bands: int, rows_per_band: int):
+    """The per-element band builder ``minhash_near_dups`` used before
+    ``_band_column``: one ``pyspark.sql.functions`` call per signature
+    cell, cast, concat, hash, literal and struct (~350 py4j calls at
+    91 × 13).  The reference the one-expression builder must match."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band_idx"),
+                    F.xxhash64(
+                        F.concat_ws(
+                            ",",
+                            *[
+                                F.col("signature")[b * rows_per_band + r].cast(
+                                    "string"
+                                )
+                                for r in range(rows_per_band)
+                            ],
+                        )
+                    ).alias("band_hash"),
+                )
+                for b in range(bands)
+            ]
+        )
+    ).alias("band")
+
+
+@pytest.mark.parametrize("n_hashes,bands", [(91, 13), (32, 8)])
+def test_band_column_matches_per_column_reference(spark, n_hashes, bands):
+    """The one-expression band column gives the reference builder's
+    schema and identical (band_idx, band_hash) rows on seeded random
+    signatures — at the default banding for curate's 0.8 threshold
+    (91 × 13) and at the historical fixed 32 × 8."""
+    from cl_readability_spark.functions.dedup import _band_column, minhash_params
+
+    if bands == 13:
+        assert minhash_params(0.8) == (n_hashes, bands)
+    rng = random.Random(n_hashes)
+    sigs = spark.createDataFrame(
+        [
+            (i, [rng.randrange(-(2**63), 2**63) for _ in range(n_hashes)])
+            for i in range(200)
+        ],
+        "doc_id long, signature array<long>",
+    )
+    rows_per_band = n_hashes // bands
+    got = sigs.select("doc_id", _band_column(bands, rows_per_band))
+    ref = sigs.select("doc_id", _band_explode_reference(bands, rows_per_band))
+    assert got.schema == ref.schema
+    flat = ["doc_id", "band.band_idx", "band.band_hash"]
+    got_rows = sorted(got.select(*flat).collect())
+    assert got_rows == sorted(ref.select(*flat).collect())
+    assert len(got_rows) == 200 * bands
+
+
+def test_band_column_is_constant_functions_calls(spark, monkeypatch):
+    """Building the band column calls into ``pyspark.sql.functions`` a
+    constant number of times, whatever the banding: the per-element
+    builder's calls (each a py4j round trip) grew with bands ×
+    rows_per_band and were ~0.5 s of driver time per minhash plan."""
+    import inspect
+
+    from cl_readability_spark.functions.dedup import _band_column
+
+    calls = []
+
+    def _counting(name, fn):
+        def wrapper(*args, **kwargs):
+            calls.append(name)
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    for name, fn in inspect.getmembers(F, inspect.isfunction):
+        if not name.startswith("_"):
+            monkeypatch.setattr(F, name, _counting(name, fn))
+    counts = {}
+    for bands, rows_per_band in ((13, 7), (8, 4), (22, 4), (2, 10)):
+        calls.clear()
+        _band_column(bands, rows_per_band)
+        counts[bands, rows_per_band] = len(calls)
+    assert len(set(counts.values())) == 1, counts
+    # the counter sees the reference builder's per-element calls
+    calls.clear()
+    _band_explode_reference(13, 7)
+    assert len(calls) > 13 * 7 > counts[13, 7]
+
+
 def test_simhash_plan_shape_join_free(spark, corpus_df):
     """Physical-plan golden: the restructured simhash pipeline is join-free
     — signatures and id lists ride the shuffles (signature groupBy → block
@@ -566,27 +655,50 @@ def test_simhash_plan_shape_join_free(spark, corpus_df):
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
 
 
-def test_dup_clusters_path_graph_and_cliques(spark):
+def _cc_paths(monkeypatch):
+    """Yields each dup_clusters resolution path in turn, setting its edge
+    bound: the driver union-find (the default for graphs this small) and
+    the label-propagation rounds (forced by a bound of 0 edges)."""
+    from cl_readability_spark.functions import dedup
+
+    for path, bound in (("driver", dedup.DRIVER_CLUSTER_EDGES), ("rounds", 0)):
+        monkeypatch.setattr(dedup, "DRIVER_CLUSTER_EDGES", bound)
+        yield path
+
+
+def _assert_cc_path(clusters, path):
+    """The driver path returns a local relation, the rounds a pinned
+    round result."""
+    logical = clusters._jdf.queryExecution().logical().getClass().getSimpleName()
+    assert (logical == "LocalRelation") == (path == "driver"), (path, logical)
+
+
+def test_dup_clusters_path_graph_and_cliques(spark, monkeypatch):
     """Connected components over pairs: a long path (worst case for plain
     label propagation — pointer jumping must converge), a clique, and a
-    singleton edge; representative = min id per component."""
+    singleton edge; representative = min id per component.  On both
+    resolution paths."""
     from cl_readability_spark.functions.dedup import dup_clusters
 
     path = [(i, i + 1) for i in range(20, 40)]         # one 21-node chain
     clique = [(a, b) for a in range(5) for b in range(a + 1, 5)]
     lone = [(100, 101)]
     pairs = spark.createDataFrame(path + clique + lone, ["id_a", "id_b"])
-    got = {r.id: r.cluster_rep for r in dup_clusters(pairs).collect()}
-    assert all(got[i] == 20 for i in range(20, 41))
-    assert all(got[i] == 0 for i in range(5))
-    assert got[100] == 100 and got[101] == 100
-    assert len(got) == 21 + 5 + 2
+    for cc_path in _cc_paths(monkeypatch):
+        out = dup_clusters(pairs)
+        _assert_cc_path(out, cc_path)
+        got = {r.id: r.cluster_rep for r in out.collect()}
+        assert all(got[i] == 20 for i in range(20, 41))
+        assert all(got[i] == 0 for i in range(5))
+        assert got[100] == 100 and got[101] == 100
+        assert len(got) == 21 + 5 + 2
 
 
-def test_dup_clusters_keep_one_policy_composes(spark):
+def test_dup_clusters_keep_one_policy_composes(spark, monkeypatch):
     """pairs → clusters → keep-one over the minhash pipeline on a small
     duplicated corpus: exactly one representative survives per duplicate
-    cluster, and unique docs survive untouched."""
+    cluster, and unique docs survive untouched.  On both resolution
+    paths."""
     from cl_readability_spark.functions.dedup import dup_clusters, minhash_near_dups
 
     dup_text = "the same long boilerplate body of words repeated across docs " * 4
@@ -595,13 +707,17 @@ def test_dup_clusters_keep_one_policy_composes(spark):
         (11, "yet another unrelated text body concerning arrow batches " * 4),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    clusters = dup_clusters(minhash_near_dups(df, jaccard_threshold=0.9))
-    kept = df.join(
-        clusters.withColumnRenamed("id", "doc_id"), "doc_id", "left"
-    ).filter(
-        F.coalesce(F.col("cluster_rep"), F.col("doc_id")) == F.col("doc_id")
-    )
-    assert sorted(r.doc_id for r in kept.select("doc_id").collect()) == [0, 10, 11]
+    for cc_path in _cc_paths(monkeypatch):
+        clusters = dup_clusters(minhash_near_dups(df, jaccard_threshold=0.9))
+        _assert_cc_path(clusters, cc_path)
+        kept = df.join(
+            clusters.withColumnRenamed("id", "doc_id"), "doc_id", "left"
+        ).filter(
+            F.coalesce(F.col("cluster_rep"), F.col("doc_id")) == F.col("doc_id")
+        )
+        assert sorted(
+            r.doc_id for r in kept.select("doc_id").collect()
+        ) == [0, 10, 11]
 
 
 def _cc_case(spark):
@@ -612,52 +728,64 @@ def _cc_case(spark):
     return pairs, expected
 
 
-def test_dup_clusters_reliable_checkpoint_mode(spark, tmp_path):
-    """checkpoint_mode='reliable' (the multi-executor-safe mode: rounds
-    materialize through DataFrame.checkpoint, recoverable on executor
-    loss) produces the identical labels as local mode and actually writes
-    checkpoint files to the supplied directory."""
+def test_dup_clusters_reliable_checkpoint_mode(spark, tmp_path, monkeypatch):
+    """checkpoint_mode='reliable' (the multi-executor-safe mode: the edge
+    pin and the rounds materialize through DataFrame.checkpoint,
+    recoverable on executor loss) produces the identical labels as local
+    mode and actually writes checkpoint files to the supplied directory.
+    On both resolution paths."""
     from cl_readability_spark.functions.dedup import dup_clusters
 
     pairs, expected = _cc_case(spark)
-    ckpt = tmp_path / "ckpt"
-    got = {
-        r.id: r.cluster_rep
-        for r in dup_clusters(
+    for cc_path in _cc_paths(monkeypatch):
+        ckpt = tmp_path / f"ckpt-{cc_path}"
+        out = dup_clusters(
             pairs, checkpoint_mode="reliable", checkpoint_dir=str(ckpt)
-        ).collect()
-    }
-    assert got == expected
-    written = list(ckpt.rglob("*"))
-    assert written, "reliable mode must write checkpoint files"
+        )
+        _assert_cc_path(out, cc_path)
+        got = {r.id: r.cluster_rep for r in out.collect()}
+        assert got == expected
+        written = list(ckpt.rglob("*"))
+        assert written, "reliable mode must write checkpoint files"
 
 
-def test_dup_clusters_table_staged_mode_and_cleanup(spark, tmp_path):
-    """checkpoint_mode='table' (the lakehouse shape: every round staged
-    through parquet, zero executor-storage state) produces identical
-    labels, keeps the final round's table alive for the returned frame,
-    and deletes superseded rounds as the loop advances."""
+def test_dup_clusters_table_staged_mode_and_cleanup(spark, tmp_path, monkeypatch):
+    """checkpoint_mode='table' (the lakehouse shape: the edge pin and
+    every round staged through parquet, zero executor-storage state)
+    produces identical labels, keeps the final round's table alive for
+    the returned frame, and deletes superseded rounds as the loop
+    advances.  The driver path stages the edges alone: it runs no round."""
     from cl_readability_spark.functions.dedup import dup_clusters
 
     pairs, expected = _cc_case(spark)
-    out = dup_clusters(
-        pairs, checkpoint_mode="table", checkpoint_dir=str(tmp_path)
-    )
-    got = {r.id: r.cluster_rep for r in out.collect()}
-    assert got == expected
-    # the path graph needs several rounds; superseded label rounds are
-    # deleted, so far fewer staged tables remain than rounds ran
-    staged = [p for p in tmp_path.rglob("labels-*") if p.is_dir()]
-    assert 1 <= len(staged) <= 2, sorted(p.name for p in tmp_path.iterdir())
-    # the returned frame stays readable (backed by the surviving table)
-    assert out.count() == len(expected)
+    for cc_path in _cc_paths(monkeypatch):
+        ckpt = tmp_path / cc_path
+        out = dup_clusters(
+            pairs, checkpoint_mode="table", checkpoint_dir=str(ckpt)
+        )
+        _assert_cc_path(out, cc_path)
+        got = {r.id: r.cluster_rep for r in out.collect()}
+        assert got == expected
+        assert [p for p in ckpt.rglob("edges-*") if p.is_dir()]
+        staged = [p for p in ckpt.rglob("labels-*") if p.is_dir()]
+        if cc_path == "driver":
+            assert not staged, sorted(p.name for p in staged)
+        else:
+            # the path graph needs several rounds; superseded label
+            # rounds are deleted, so far fewer staged tables remain
+            # than rounds ran
+            assert 1 <= len(staged) <= 2, sorted(p.name for p in staged)
+        # the returned frame stays readable (backed by the surviving
+        # table, or local)
+        assert out.count() == len(expected)
 
 
-def test_dup_clusters_evaluates_pair_producer_once(spark):
-    """The adjacency union references the pair set on both branches; the
-    pinned edge staging must keep the upstream producer at ONE evaluation
-    (no cross-branch subplan reuse in Spark — unpinned, a full LSH
-    pipeline would run twice; measured +79 s at 1M turns)."""
+def test_dup_clusters_evaluates_pair_producer_once(spark, monkeypatch):
+    """The bounded collect and the adjacency union's two branches all
+    read the pair set; the pinned edge staging must keep the upstream
+    producer at ONE evaluation on both resolution paths (no
+    cross-branch subplan reuse in Spark — unpinned, a full LSH pipeline
+    would run per read; measured +79 s at 1M turns)."""
     from cl_readability_spark.functions.dedup import dup_clusters
 
     acc = spark.sparkContext.accumulator(0)
@@ -671,32 +799,36 @@ def test_dup_clusters_evaluates_pair_producer_once(spark):
             yield pdf
 
     pairs = base.repartition(2).mapInPandas(_counting, base.schema)
-    assert dup_clusters(pairs).count() == 51
-    assert acc.value == 50, "pair producer must evaluate exactly once"
+    for cc_path in _cc_paths(monkeypatch):
+        acc.value = 0
+        out = dup_clusters(pairs)
+        _assert_cc_path(out, cc_path)
+        assert out.count() == 51
+        assert acc.value == 50, "pair producer must evaluate exactly once"
 
 
-def test_dup_clusters_restores_session_checkpoint_dir(spark, tmp_path):
+def test_dup_clusters_restores_session_checkpoint_dir(spark, tmp_path, monkeypatch):
     """reliable mode must not permanently redirect the session's
     checkpoint dir (a library call overriding session-global config is a
-    side effect the caller never asked to keep)."""
+    side effect the caller never asked to keep) — on both resolution
+    paths, the driver path's early return included."""
     from cl_readability_spark.functions.dedup import dup_clusters
 
     sc = spark.sparkContext
     sc.setCheckpointDir(str(tmp_path / "prior"))
     prior = sc.getCheckpointDir()
     pairs, expected = _cc_case(spark)
-    got = {
-        r.id: r.cluster_rep
-        for r in dup_clusters(
+    for cc_path in _cc_paths(monkeypatch):
+        out = dup_clusters(
             pairs, checkpoint_mode="reliable",
-            checkpoint_dir=str(tmp_path / "cc"),
-        ).collect()
-    }
-    assert got == expected
-    # Spark resolves a set dir to a UUID subdirectory, so exact identity
-    # is unobservable; restored means future checkpoints land back under
-    # the prior root, not under dup_clusters' dir
-    assert sc.getCheckpointDir().startswith(prior)
+            checkpoint_dir=str(tmp_path / f"cc-{cc_path}"),
+        )
+        _assert_cc_path(out, cc_path)
+        assert {r.id: r.cluster_rep for r in out.collect()} == expected
+        # Spark resolves a set dir to a UUID subdirectory, so exact
+        # identity is unobservable; restored means future checkpoints
+        # land back under the prior root, not under dup_clusters' dir
+        assert sc.getCheckpointDir().startswith(prior)
 
 
 def test_dup_clusters_mode_validation(spark, tmp_path):
@@ -709,11 +841,15 @@ def test_dup_clusters_mode_validation(spark, tmp_path):
         dup_clusters(pairs, checkpoint_mode="table")
 
 
-def test_dup_clusters_nonconvergence_raises_and_warns(spark):
+def test_dup_clusters_nonconvergence_raises_and_warns(spark, monkeypatch):
     """An exhausted round budget means the labels are not final — the
     default is a hard error (silent wrong labels would feed a keep-one
-    dedup that drops the wrong rows); 'warn' downgrades for diagnostics."""
+    dedup that drops the wrong rows); 'warn' downgrades for diagnostics.
+    Rounds path only: the driver union-find has no round budget."""
+    from cl_readability_spark.functions import dedup
     from cl_readability_spark.functions.dedup import dup_clusters
+
+    monkeypatch.setattr(dedup, "DRIVER_CLUSTER_EDGES", 0)
 
     # a 21-node path cannot converge in one round even with pointer
     # jumping (min label must travel ~20 hops; one round covers ≤3)
@@ -725,6 +861,52 @@ def test_dup_clusters_nonconvergence_raises_and_warns(spark):
     with pytest.warns(RuntimeWarning, match="fixpoint"):
         got = dup_clusters(pairs, max_iters=1, on_nonconverged="warn")
         assert got.count() == 21
+
+
+@pytest.mark.parametrize("id_kind", ["long", "string"])
+def test_dup_clusters_driver_and_rounds_paths_agree(spark, monkeypatch, id_kind):
+    """Seeded differential: the driver union-find and the label-
+    propagation rounds give identical (id, cluster_rep) sets and the
+    same schema over chains, stars, cliques and disjoint pairs with
+    shuffled node numbering and edge order — with long ids and with
+    string ids (whose min is the byte-order min: "n10" < "n9")."""
+    from cl_readability_spark.functions.dedup import dup_clusters
+
+    rng = random.Random(15)
+    nodes = rng.sample(range(10_000), 400)
+    edges, at = [], 0
+
+    def take(n):
+        nonlocal at
+        at += n
+        return nodes[at - n : at]
+
+    for _ in range(6):  # chains
+        c = take(rng.randint(3, 30))
+        edges += list(zip(c, c[1:]))
+    for _ in range(6):  # stars, the hub anywhere in id order
+        hub, *rest = take(rng.randint(3, 15))
+        edges += [(hub, x) for x in rest]
+    for _ in range(5):  # cliques
+        c = take(rng.randint(3, 7))
+        edges += list(itertools.combinations(c, 2))
+    for _ in range(20):  # disjoint pairs
+        edges.append(tuple(take(2)))
+    rng.shuffle(edges)
+    if id_kind == "string":
+        edges = [(f"n{a}", f"n{b}") for a, b in edges]
+    # the pair producers emit id_a < id_b; the resolution must not care
+    edges = [(min(e), max(e)) if rng.random() < 0.5 else e for e in edges]
+    pairs = spark.createDataFrame(
+        edges, f"id_a {id_kind}, id_b {id_kind}"
+    ).repartition(3)
+    got = {}
+    for cc_path in _cc_paths(monkeypatch):
+        out = dup_clusters(pairs)
+        _assert_cc_path(out, cc_path)
+        got[cc_path] = (out.schema, {tuple(r) for r in out.collect()})
+    assert got["driver"] == got["rounds"]
+    assert len(got["driver"][1]) == at
 
 
 def test_winnow_fingerprints_shared_substring_guarantee(spark):

@@ -1,17 +1,38 @@
-"""exceptAll diff harness + span-explode tests."""
+"""exceptAll diff harness (SURVEY §2.11 set-ops row) + span-explode
+tests."""
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from cl_readability_spark.pipeline.diff import (
-    assert_tables_equal,
-    explode_spans,
-    table_diff,
-)
+from cl_readability_spark.pipeline.diff import explode_spans
 from cl_readability_spark.pipeline.job import extract_transcripts
 from cl_readability_spark.pipeline.transcripts import synthetic_transcripts
 
 pytestmark = pytest.mark.spark
+
+
+def table_diff(actual: DataFrame, expected: DataFrame, columns: list[str] | None = None):
+    """Compares two extraction outputs (e.g. two runs across a refactor)
+    with exceptAll in both directions — multiset semantics, so duplicate
+    rows are caught too.  Returns (only_in_actual, only_in_expected);
+    both empty ⇔ the tables agree on ``columns`` (default: all common)."""
+    if columns is None:
+        columns = [c for c in actual.columns if c in set(expected.columns)]
+    a = actual.select(*columns)
+    e = expected.select(*columns)
+    return a.exceptAll(e), e.exceptAll(a)
+
+
+def assert_tables_equal(actual: DataFrame, expected: DataFrame,
+                        columns: list[str] | None = None) -> None:
+    extra, missing = table_diff(actual, expected, columns)
+    n_extra, n_missing = extra.count(), missing.count()
+    if n_extra or n_missing:
+        raise AssertionError(
+            f"table mismatch: {n_extra} rows only in actual "
+            f"(sample {extra.limit(3).collect()}), {n_missing} only in expected "
+            f"(sample {missing.limit(3).collect()})"
+        )
 
 
 def test_table_diff_detects_missing_and_extra(spark):
