@@ -48,10 +48,17 @@ AQE-manageable; no driver-side loops, no collect.
 
 from __future__ import annotations
 
+import functools
+import inspect
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from cl_readability_spark.functions.dedup import dup_clusters, minhash_near_dups
+from cl_readability_spark.functions.dedup import (
+    dup_clusters,
+    minhash_near_dups,
+    minhash_params,
+)
 from cl_readability_spark.functions.incremental import content_fingerprint
 from cl_readability_spark.functions.pins import attach_pins, release_pinned
 
@@ -453,8 +460,8 @@ def gopher_repetition_flags(
     The gram aggregates are joined back onto the per-doc base — the
     input subtree is referenced in several plan branches, so run this
     over a scan/sink-staged frame (deterministic, re-evaluates
-    identically) or a pinned one (``gopher_repetition_gate`` pins its
-    keyed input) — the PLANS.md materialize-before-self-join rule."""
+    identically) or a pinned one (``curate``'s repetition stage pins
+    its keyed input) — the PLANS.md materialize-before-self-join rule."""
     from pyspark.sql.window import Window
 
     text = F.coalesce(F.col(text_col), F.lit(""))
@@ -667,6 +674,7 @@ def _row_key(key_cols: tuple[str, ...]):
 
 
 _MATERIALIZE_MODES = ("disk", "local_checkpoint", "persist", "none")
+_POLICIES = ("clusters", "pairwise")
 
 # surviving docs above which curate_near_dups picks the rehash minhash
 # plan over the arrays plan (measured crossover, BENCH round 5: the
@@ -775,12 +783,9 @@ def curate_flags(
     text_col: str = "extracted_text",
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     min_chars: int = 100,
-    max_chars: int = 200_000,
     min_stopword_bp: int = 100,
     langs: tuple[str, ...] = ("en",),
     benchmark_hashes=None,  # list[int] | numpy int64 array
-    decontam_n: int = 13,
-    decontam_seed: int = 42,
     extra_quality_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Stage 1 of curation — adds ``quality_ok``, ``contaminated`` and
@@ -793,8 +798,8 @@ def curate_flags(
     pipelines write this frame to a table and run ``curate_near_dups``
     over the read-back, so the window is computed exactly once."""
     df = extracted.withColumn("_row_key", _row_key(key_cols))
-    q = quality_flag(F.col(text_col), min_chars, max_chars,
-                     min_stopword_bp, langs)
+    q = quality_flag(F.col(text_col), min_chars,
+                     min_stopword_bp=min_stopword_bp, langs=langs)
     # extra_quality_cols: boolean gate columns already ON the frame
     # (c4_keep, repetition_ok, a caller's gopher_ok) ANDed into the
     # quality gate — their drops land in dropped_quality, preserving the
@@ -806,12 +811,11 @@ def curate_flags(
     if benchmark_hashes is not None and len(benchmark_hashes):
         from cl_readability_spark.functions.decontam import decontaminate
 
-        # decontam_n/decontam_seed MUST match the parameters the hash set
-        # was computed with (benchmark_ngram_hashes) — a silent mismatch
-        # hashes corpus grams differently and matches nothing
+        # decontaminate's default gram width and seed (13, 42) are
+        # benchmark_ngram_hashes' defaults: a hash set computed with other
+        # values hashes corpus grams differently and matches nothing
         df = decontaminate(
             df, text_col=text_col, hashes=benchmark_hashes,
-            n=decontam_n, seed=decontam_seed,
         ).drop("n_contaminated_grams")
     else:
         df = df.withColumn("contaminated", F.lit(False))
@@ -885,7 +889,7 @@ def curate_near_dups(
     - "none": lazy; only correct when ``flagged`` is already a
       materialized table (e.g. the written flags table — then the double
       branch costs two pruned columnar scans, no recomputation)."""
-    if policy not in ("clusters", "pairwise"):
+    if policy not in _POLICIES:
         raise ValueError(f"unknown near-dup policy: {policy!r}")
     df = flagged.withColumn("_row_key", _row_key(key_cols))
     survivor_cond = F.col("quality_ok") & F.col("exact_keep")
@@ -939,181 +943,114 @@ def curate_near_dups(
 release_curated = release_pinned
 
 
+def _join_back(
+    df: DataFrame,
+    text_col: str,
+    key_cols: tuple[str, ...],
+    pin: str | None,
+    key: str,
+    operator,
+    columns: dict[str, str],
+) -> tuple[DataFrame, list[DataFrame]]:
+    """Runs the row-keyed ``operator(keyed, id_col=key, text_col=...)``
+    over ``df`` keyed by the row key, and joins its ``columns``
+    (output name → operator column) back 1:1 on that unique key —
+    skew-free by construction.  An output named ``text_col`` replaces
+    the input text.  Returns (frame, release pins).  ``pin``
+    (``_stage_pin``) materializes the KEYED INPUT frame: the operator's
+    aggregation and probe plus this join's left side read it in three
+    plan branches, and for a nondeterministic upstream all three must
+    read the same bytes."""
+    keyed, pins = _stage_pin(df.withColumn(key, _row_key(key_cols)), pin)
+    right = operator(keyed, id_col=key, text_col=text_col).select(
+        key, *[F.col(src).alias(out) for out, src in columns.items()]
+    )
+    left = keyed.drop(text_col) if text_col in columns else keyed
+    return left.join(right, key).drop(key), pins
+
+
 def line_dedup_rewrite(
     extracted: DataFrame,
     text_col: str = "extracted_text",
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     pin: str | None = None,
 ) -> tuple[DataFrame, list[DataFrame]]:
-    """The ``curate(line_dedup=True)`` pre-stage as a standalone step
-    (also used by scripts/corpus_pipeline.py's decomposed sink path):
-    C4 cross-document line dedup keyed by the row key, ``text_col``
-    rewritten from the surviving lines, ``line_dedup_n_lines`` /
-    ``line_dedup_n_kept`` audit columns added via a 1:1 skew-free join
-    on the unique row key.  Returns (rewritten frame, pins) — pins
-    non-empty only under ``pin="disk"``.
+    """``curate``'s line stage as a standalone step (also used by
+    scripts/corpus_pipeline.py's decomposed sink path): C4 cross-document
+    line dedup (``functions.dedup.line_dedup``) keyed by the row key,
+    ``text_col`` rewritten from the surviving lines, and
+    ``line_dedup_n_lines`` / ``line_dedup_n_kept`` audit columns.
+    Returns (rewritten frame, pins); ``pin`` (None | "disk" |
+    "local_checkpoint") materializes the keyed input (``_join_back``),
+    and only "disk" returns pins."""
+    from cl_readability_spark.functions.dedup import line_dedup
 
-    ``pin`` (None | "disk" | "local_checkpoint"; ``_stage_pin``)
-    materializes the KEYED INPUT frame, not just line_dedup's exploded
-    lines: this stage references the input in three plan branches (the
-    line stage's winners aggregation and probe, plus the audit join's
-    left side), and for a nondeterministic upstream every branch must
-    read the same bytes — pinning only the exploded lines would leave
-    the audit join's probe side re-evaluating the raw upstream (round-7
-    review finding)."""
-    from cl_readability_spark.functions.dedup import line_dedup as _ld
-
-    keyed, pins = _stage_pin(
-        extracted.withColumn("_ld_key", _row_key(key_cols)), pin
+    return _join_back(
+        extracted, text_col, key_cols, pin, "_ld_key", line_dedup,
+        {
+            text_col: "deduped_text",
+            "line_dedup_n_lines": "n_lines",
+            "line_dedup_n_kept": "n_kept_lines",
+        },
     )
-    # the line stage's own self-branch reads the (pinned) keyed frame,
-    # so its operator-level pin is never needed here
-    deduped = _ld(keyed, id_col="_ld_key", text_col=text_col)
-    out = (
-        keyed.drop(text_col)
-        .join(
-            deduped.select(
-                "_ld_key",
-                F.col("deduped_text").alias(text_col),
-                F.col("n_lines").alias("line_dedup_n_lines"),
-                F.col("n_kept_lines").alias("line_dedup_n_kept"),
-            ),
-            "_ld_key",
-        )
-        .drop("_ld_key")
+
+
+# Stage runners: run(frame, setting, text_col, key_cols, pin) ->
+# (frame, release pins); setting is the curate argument that turned the
+# stage on.
+def _url_stage(df, url_col, text_col, key_cols, pin):
+    from cl_readability_spark.functions.urls import url_dedup
+
+    df, pins = _stage_pin(df, pin)
+    out = url_dedup(
+        df, url_col=url_col, id_col=None, id_cols=key_cols,
+        keep_col="url_keep",
     )
     return out, pins
 
 
-def substring_dedup_rewrite(
-    extracted: DataFrame,
-    text_col: str = "extracted_text",
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    k: int = 50,
-    keep: str = "none",
-    pin: str | None = None,
-) -> tuple[DataFrame, list[DataFrame]]:
-    """The ``curate(substring_dedup_k=)`` pre-stage as a standalone
-    step: ExactSubstr duplicated-run removal (``functions.dedup.
-    substring_dedup``, Lee et al. 2021) keyed by the row key,
-    ``text_col`` rewritten from the surviving tokens (NOTE: the rebuild
-    is whitespace-normalized — single spaces — per the operator
-    contract), ``substr_dedup_n_tokens`` / ``substr_dedup_n_kept``
-    audit columns added via a 1:1 skew-free join on the unique row key.
-    Returns (rewritten frame, pins) — ``pin`` materializes the KEYED
-    INPUT frame as in ``line_dedup_rewrite``: this stage references the
-    input in three plan branches (the operator's gram aggregation and
-    probe, plus the audit join's left side), the same exposure."""
-    from cl_readability_spark.functions.dedup import (
-        substring_dedup as _sd,
-    )
-
-    keyed, pins = _stage_pin(
-        extracted.withColumn("_sd_key", _row_key(key_cols)), pin
-    )
-    deduped = _sd(keyed, id_col="_sd_key", text_col=text_col, k=k, keep=keep)
-    out = (
-        keyed.drop(text_col)
-        .join(
-            deduped.select(
-                "_sd_key",
-                F.col("dedup_text").alias(text_col),
-                F.col("n_tokens").alias("substr_dedup_n_tokens"),
-                F.col("n_kept_tokens").alias("substr_dedup_n_kept"),
-            ),
-            "_sd_key",
-        )
-        .drop("_sd_key")
-    )
-    return out, pins
-
-
-def c4_rewrite(
-    extracted: DataFrame,
-    text_col: str = "extracted_text",
-    c4_opts: dict | None = None,
-) -> DataFrame:
-    """The ``curate(c4=True)`` stage as a standalone step: the C4
-    filter battery (``c4_filters``) with ``text_col`` REWRITTEN from the
-    surviving lines (NULL input → '' husk, which the quality gate
-    absorbs — the line_dedup precedent), ``n_lines``/``n_kept_lines``
-    renamed to ``c4_n_lines``/``c4_n_kept_lines`` (the line stage owns
-    the unprefixed audit names), and the page-level ``c4_keep`` flag
-    kept on the frame for ``curate_flags``' quality gate.  Pure
-    whole-stage-codegen projection — no join, no shuffle, no pin needed
-    (single plan branch)."""
-    flagged = c4_filters(extracted, text_col=text_col, **(c4_opts or {}))
+def _c4_stage(df, c4_opts, text_col, key_cols, pin):
+    out = c4_filters(df, text_col=text_col, **c4_opts)
     return (
-        flagged.withColumnRenamed("n_lines", "c4_n_lines")
+        out.withColumnRenamed("n_lines", "c4_n_lines")
         .withColumnRenamed("n_kept_lines", "c4_n_kept_lines")
         .withColumn(text_col, F.coalesce(F.col("c4_text"), F.lit("")))
         .drop("c4_text")
+    ), []
+
+
+def _substring_stage(df, k, text_col, key_cols, pin):
+    from cl_readability_spark.functions.dedup import substring_dedup
+
+    return _join_back(
+        df, text_col, key_cols, pin, "_sd_key",
+        functools.partial(substring_dedup, k=k),
+        {
+            text_col: "dedup_text",
+            "substr_dedup_n_tokens": "n_tokens",
+            "substr_dedup_n_kept": "n_kept_tokens",
+        },
     )
 
 
-def url_dedup_gate(
-    extracted: DataFrame,
-    url_col: str = "url",
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    pin: str | None = None,
-    url_opts: dict | None = None,
-) -> tuple[DataFrame, list[DataFrame]]:
-    """The ``curate(url_col=)`` stage as a standalone step: URL-level
-    dedup (``functions.urls.url_dedup``) keyed by the composite row
-    key, adding ``canon_url`` (the canonical form — audit/refetch key)
-    and ``url_keep`` (true on exactly one row per canonical URL; rows
-    with NULL/blank URLs are all kept — a missing URL is not evidence
-    of duplication).  Returns (frame, pins) — the operator references
-    its input in two plan branches (the winners aggregation and the
-    join probe), so a nondeterministic upstream should be sink-staged
-    or pinned via ``pin`` (``line_dedup_rewrite``; "disk" pins ride the
-    standard ``pins.release_pinned`` handles).  ``url_opts`` forwards
-    canonicalization kwargs (e.g. ``extra_tracking_params``).
-
-    Winner consistency with the content stages: ``url_dedup`` picks
-    the lexicographic-minimum row key per canonical URL with the SAME
-    ``min(struct(key_cols...))`` ordering ``line_dedup`` uses per
-    line, so when URL-duplicate rows carry identical text the URL
-    winner is also the line winner for lines unique to that group —
-    composing ``url_col=`` with ``line_dedup=True`` never line-empties
-    the URL winner in favor of a doomed loser."""
-    from cl_readability_spark.functions.urls import url_dedup
-
-    extracted, pins = _stage_pin(extracted, pin)
-    out = url_dedup(
-        extracted,
-        url_col=url_col,
-        id_col=None,
-        id_cols=key_cols,
-        keep_col="url_keep",
-        **(url_opts or {}),
+def _repetition_stage(df, _on, text_col, key_cols, pin):
+    return _join_back(
+        df, text_col, key_cols, pin, "_gr_key", gopher_repetition_flags,
+        {"repetition_ok": "repetition_ok"},
     )
-    return out, pins
 
 
-def gopher_repetition_gate(
-    extracted: DataFrame,
-    text_col: str = "extracted_text",
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    pin: str | None = None,
-) -> tuple[DataFrame, list[DataFrame]]:
-    """The ``curate(gopher_repetition=True)`` stage as a standalone
-    step: the Gopher repetition battery (``gopher_repetition_flags``)
-    keyed by the row key, joining ONLY ``repetition_ok`` back 1:1 on
-    the unique row key (skew-free by construction; callers wanting the
-    13 fraction columns run the flags operator directly).  Returns
-    (frame, pins) — the same three-branch self-reference exposure as
-    ``line_dedup_rewrite`` (the battery's gram aggregation + probe,
-    plus this join's left side), so a nondeterministic upstream should
-    be sink-staged or pinned via ``pin`` (the KEYED input)."""
-    keyed, pins = _stage_pin(
-        extracted.withColumn("_gr_key", _row_key(key_cols)), pin
-    )
-    rep = gopher_repetition_flags(keyed, id_col="_gr_key", text_col=text_col)
-    out = keyed.join(
-        rep.select("_gr_key", "repetition_ok"), "_gr_key"
-    ).drop("_gr_key")
-    return out, pins
+# curate's optional stages in run order, ahead of curate_flags and
+# curate_near_dups: (name, runner, gate column ANDed into quality_ok,
+# branches).  A branching stage reads its input in several plan
+# branches, so it takes a pin (curate's docstring, "Stage pins").
+_STAGES = (
+    ("url_dedup", _url_stage, "url_keep", True),
+    ("line_dedup", lambda df, _on, *a: line_dedup_rewrite(df, *a), None, True),
+    ("c4", _c4_stage, "c4_keep", False),
+    ("substring_dedup", _substring_stage, None, True),
+    ("gopher_repetition", _repetition_stage, "repetition_ok", True),
+)
 
 
 def curate(
@@ -1122,131 +1059,108 @@ def curate(
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     jaccard_threshold: float = 0.8,
     min_chars: int = 100,
-    max_chars: int = 200_000,
     min_stopword_bp: int = 100,
     langs: tuple[str, ...] = ("en",),
     materialize: str = "disk",
     policy: str = "clusters",
     cluster_opts: dict | None = None,
     benchmark_hashes=None,  # list[int] | numpy int64 array
-    decontam_n: int = 13,
-    decontam_seed: int = 42,
     line_dedup: bool = False,
     substring_dedup_k: int | None = None,
-    substring_dedup_keep: str = "none",
     c4: bool = False,
     c4_opts: dict | None = None,
     gopher_repetition: bool = False,
     minhash_k: int = 5,
     url_col: str | None = None,
-    url_opts: dict | None = None,
 ) -> DataFrame:
     """Adds the curation flags to ``extracted`` (see module doc); filter on
     ``kept`` for the final corpus, aggregate the flags for the report.
-    Composition of [``line_dedup`` →] ``curate_flags`` →
-    ``curate_near_dups``; see ``curate_near_dups`` for the
-    ``materialize`` modes (the pin covers the whole extract+flags
-    subtree here; the stage pins follow it — last paragraph), the
-    near-dup drop ``policy``, and the minhash plan it picks from the
-    survivor count; ``benchmark_hashes``
-    (``decontam.benchmark_ngram_hashes``) enables the decontamination
-    gate — pass the SAME ``decontam_n``/``decontam_seed`` the hash set
-    was computed with.
 
-    ``line_dedup=True`` runs C4-style cross-document line dedup
-    (Raffel et al. 2020 §2.2; ``functions.dedup.line_dedup``) as a
-    PRE-stage — the C4 ordering: line-level dedup first, then the
-    doc-level gates — rewriting ``text_col`` from the deduped lines and
-    adding ``line_dedup_n_lines`` / ``line_dedup_n_kept`` audit columns.
-    The division of labor is deliberate and pinned in
-    tests/test_curation.py: line dedup subsumes exact doc-dedup (a
-    whole-doc duplicate's every line duplicates the first copy, so the
-    copy dedups to an empty husk) and the husks then fall to the
-    QUALITY gate — ``dropped_quality`` absorbs what ``dropped_exact_dup``
-    would have counted.  The line stage evaluates the upstream plan more
-    than once before the ``materialize`` pin (its winners aggregation is
-    a self-branch, plus the 1:1 audit join back): free over a
-    sink-staged/scan input — the recommended composition, as in
-    scripts/corpus_pipeline.py — while a NONDETERMINISTIC upstream
-    should either be sink-staged first or curated under
-    ``materialize="local_checkpoint"``, which materializes every
-    branching stage's keyed INPUT frame so all its branches read the
-    same bytes.
-
-    ``substring_dedup_k`` (an int, e.g. 50) additionally runs
-    ExactSubstr duplicated-run removal (Lee et al. 2021;
-    ``functions.dedup.substring_dedup``) after the line stage and
-    before the doc-level gates, rewriting ``text_col`` from the
-    surviving tokens (whitespace-normalized rebuild — the operator
-    contract) and adding ``substr_dedup_n_tokens`` /
-    ``substr_dedup_n_kept`` audit columns.  Under the paper-faithful
-    default ``substring_dedup_keep="none"`` an exact whole-document
-    duplicate of >= k tokens empties EVERY copy (the first included —
-    the paper's anti-memorization stance), so the husks fall to the
-    QUALITY gate like the line-stage note above; pass
-    ``substring_dedup_keep="first"`` for keep-one curation.  Same
-    self-branch caveat as the line stage.
-
-    ``c4=True`` runs the C4 FILTER battery (Raffel et al. 2020 §2.2;
-    ``c4_rewrite``) after the line stage and BEFORE the substring stage
-    (both line-granularity passes run before the token-granularity one,
-    whose rebuild collapses newlines): line filters rewrite
-    ``text_col`` from the surviving lines (audit columns
-    ``c4_n_lines``/``c4_n_kept_lines`` + the per-reason drop counts),
-    and the page-level ``c4_keep`` ANDs into the quality gate — its
-    drops land in ``dropped_quality`` (hierarchical attribution
-    preserved), with the per-row ``c4_keep``/``has_*`` flags kept for
-    per-stage attribution.  ``c4_opts`` forwards to ``c4_filters``
-    (min_words_per_line, min_sentences, badwords).
-
-    ``gopher_repetition=True`` runs the Gopher repetition battery (Rae
-    et al. 2021 Table A1; ``gopher_repetition_gate``) on the text as it
-    stands AFTER the rewrite stages — gates judge what would actually
-    ship — joining ``repetition_ok`` 1:1 on the row key and ANDing it
-    into the quality gate the same way.  Same nondeterministic-upstream
-    caveat.
+    The optional stages below run first, in ``_STAGES`` order, each only
+    when its argument is set; a stage's gate column ANDs into the
+    quality gate, so its drops land in ``dropped_quality`` (hierarchical
+    attribution preserved) with the per-row flag kept.  Then
+    ``curate_flags`` (quality, decontamination, exact dedup) and
+    ``curate_near_dups`` (see it for the ``materialize`` modes, the
+    near-dup drop ``policy``, ``cluster_opts`` and the minhash plan it
+    picks from the survivor count).  ``benchmark_hashes``
+    (``decontam.benchmark_ngram_hashes`` at its default gram width and
+    seed) enables the decontamination gate.  ``minhash_k`` sets the
+    near-dup shingle width in words (default 5, the standard 5-word
+    shingles; 1 = word-set Jaccard, for corpora where duplicates vary
+    token ORDER — template-permuted boilerplate — which contiguous
+    shingles undercount).  Every argument is checked before the first
+    stage, whose pin may be an eager checkpoint job.
 
     ``url_col`` (a column name, e.g. ``"url"``) runs URL-level dedup
-    (``url_dedup_gate``; ``functions.urls.url_dedup``) as the FIRST
-    stage — the deployment order: a crawl sees the same page under
-    tracking-param/case/slash variants, and collapsing those is far
-    cheaper than letting the content stages rediscover them.  Adds
-    ``canon_url`` + ``url_keep``; ``url_keep`` ANDs into the quality
-    gate (the ``c4_keep`` pattern), so URL-dup losers land in
-    ``dropped_quality`` with the per-row flag kept for attribution.
-    Rows with NULL/blank URLs are all kept by the gate (a missing URL
-    is not evidence of duplication).  Winner selection uses the same
-    lexicographic ``min(struct(key_cols...))`` ordering as
-    ``line_dedup``, so composing both never line-empties a URL winner
-    in favor of its doomed loser (see ``url_dedup_gate``).  Same
-    nondeterministic-upstream caveat.  ``url_opts`` forwards
-    canonicalization kwargs.
+    (``functions.urls.url_dedup``) — the deployment order: a crawl sees
+    the same page under tracking-param/case/slash variants, and
+    collapsing those is far cheaper than letting the content stages
+    rediscover them.  Adds ``canon_url`` and the gate ``url_keep``, true
+    on one row per canonical URL; rows with NULL/blank URLs are all
+    kept (a missing URL is not evidence of duplication).  The winner is
+    the minimum row key under the same ``min(struct(key_cols...))``
+    ordering ``line_dedup`` uses per line, so when URL-duplicate rows
+    carry identical text the URL winner is also the line winner:
+    composing both never line-empties a URL winner in favor of its
+    doomed loser.
 
-    With everything on, the stage order is: url_dedup → line_dedup →
-    c4 → substring_dedup → gopher_repetition → quality/decontam/exact
-    flags → minhash near-dups — the deployment config, hash-checked
-    end to end by the ``curation_full_planted`` driver oracle (URL
-    stage covered by the LOCAL ``curation_url_planted`` twin).
+    ``line_dedup=True`` runs C4-style cross-document line dedup (Raffel
+    et al. 2020 §2.2; ``line_dedup_rewrite``) — the C4 ordering: line-
+    level dedup before the doc-level gates — rewriting ``text_col`` from
+    the deduped lines and adding ``line_dedup_n_lines`` /
+    ``line_dedup_n_kept``.  The division of labor is deliberate and
+    pinned in tests/test_curation.py: line dedup subsumes exact doc-dedup
+    (a whole-doc duplicate's every line duplicates the first copy, so
+    the copy dedups to an empty husk) and the husks then fall to the
+    QUALITY gate — ``dropped_quality`` absorbs what ``dropped_exact_dup``
+    would have counted.
 
-    ``minhash_k`` sets the near-dup shingle width in words (default 5,
-    the standard 5-word shingles; 1 = word-set Jaccard, for corpora
-    where duplicates vary token ORDER — template-permuted boilerplate —
-    which contiguous shingles undercount).
+    ``c4=True`` runs the C4 FILTER battery (Raffel et al. 2020 §2.2;
+    ``c4_filters``, with ``c4_opts`` forwarded: min_words_per_line,
+    min_sentences, badwords).  The line filters rewrite ``text_col``
+    from the surviving lines (NULL input → '' husk, which the quality
+    gate absorbs), with audit columns ``c4_n_lines`` /
+    ``c4_n_kept_lines`` (the line stage owns the unprefixed names) and
+    the per-reason drop counts; the page-level ``c4_keep`` is the gate,
+    with the per-row ``has_*`` flags kept.  It sits between the line
+    stage and the substring stage on purpose: the C4 line filters are
+    line-granularity, while substring dedup's rebuild is whitespace-
+    normalized (newlines collapse), so after it every document would be
+    one line — and ExactSubstr (Lee et al. 2021) runs on the already
+    line-cleaned corpus, the paper's own staging.  One projection: no
+    join, no pin.
+
+    ``substring_dedup_k`` (an int >= 2, e.g. 50) runs ExactSubstr
+    duplicated-run removal (Lee et al. 2021;
+    ``functions.dedup.substring_dedup``), rewriting ``text_col`` from
+    the surviving tokens (a whitespace-normalized rebuild — the
+    operator contract) and adding ``substr_dedup_n_tokens`` /
+    ``substr_dedup_n_kept``.  Every occurrence of a duplicated run goes
+    (the operator's ``keep="none"``, the paper's anti-memorization
+    stance), so an exact whole-document duplicate of >= k tokens empties
+    EVERY copy, the first included, and the husks fall to the QUALITY
+    gate like the line stage's.
+
+    ``gopher_repetition=True`` runs the Gopher repetition battery (Rae
+    et al. 2021 Table A1; ``gopher_repetition_flags``) on the text as
+    the rewrite stages left it — gates judge what would actually ship —
+    joining only the gate ``repetition_ok`` back (callers wanting the 13
+    fraction columns run the flags operator directly).
 
     Stage pins follow ``materialize`` — the one pin knob.  Each
-    branching stage (url_dedup, line_dedup, substring_dedup,
-    gopher_repetition) evaluates its input in 2-3 plan branches; when
-    that input is itself the OUTPUT of an earlier branching stage
-    (joins, not a scan), every branch re-runs the whole upstream chain —
-    at deployment scale a repeated multi-shuffle pass, not a repeated
-    parquet read.  So:
+    branching stage (all but c4) evaluates its input in 2-3 plan
+    branches.  Over a scan that is a repeated pruned read, but over the
+    OUTPUT of an earlier branching stage every branch re-runs the whole
+    upstream chain of joins.  So:
 
     - ``"local_checkpoint"`` localCheckpoints EVERY branching stage's
-      input (the first included — safe for nondeterministic caller
-      frames), TRUNCATING lineage so the composed chain's plan size
-      stays linear in stage count instead of ~3^k — the single-JVM /
-      bench shape; it registers no pins (see ``_stage_pin`` for the
-      measured rationale and the fault-tolerance trade).
+      input (the first included — the mode for a NONDETERMINISTIC
+      caller frame that is not sink-staged), TRUNCATING lineage so the
+      composed chain's plan size stays linear in stage count instead of
+      ~3^k — the single-JVM / bench shape; it registers no pins (see
+      ``_stage_pin`` for the measured rationale and the fault-tolerance
+      trade).
     - every other mode pins (DISK_ONLY) a branching stage's input only
       when an earlier branching stage produced it — never the first
       stage's caller-supplied input.  These pins ride the returned
@@ -1254,74 +1168,60 @@ def curate(
 
     Value-neutral either way: pins change execution, never results."""
     if materialize not in _MATERIALIZE_MODES:
-        # validated BEFORE the first stage pin, which may be eager
         raise ValueError(f"unknown materialize mode: {materialize!r}")
-
-    def _pin(derived: bool) -> str | None:
-        if materialize == "local_checkpoint":
-            return materialize
-        return "disk" if derived else None
-
-    # has a BRANCHING rewrite stage already run in this call? (c4 is a
-    # single-branch projection — cheap to re-evaluate over a scan, and
-    # any earlier branching stage below it already got pinned)
-    derived = False
-    stage_pins: list[DataFrame] = []
-    extra_gates: list[str] = []
-    if url_col is not None:
-        extracted, pins = url_dedup_gate(
-            extracted, url_col, key_cols, pin=_pin(derived),
-            url_opts=url_opts,
+    if policy not in _POLICIES:
+        raise ValueError(f"unknown near-dup policy: {policy!r}")
+    if substring_dedup_k is not None and substring_dedup_k < 2:
+        raise ValueError(
+            f"substring_dedup_k must be >= 2, got {substring_dedup_k}"
         )
-        stage_pins.extend(pins)
-        extra_gates.append("url_keep")
-        derived = True
-    if line_dedup:
-        extracted, pins = line_dedup_rewrite(
-            extracted, text_col, key_cols, pin=_pin(derived)
-        )
-        stage_pins.extend(pins)
-        derived = True
+    if minhash_k < 1:
+        raise ValueError(f"minhash_k must be >= 1, got {minhash_k}")
+    minhash_params(jaccard_threshold)  # raises outside (0, 1)
+    # unknown option names raise TypeError here, as in the call itself
     if c4:
-        # BETWEEN the line stage and the substring stage on purpose: the
-        # C4 line filters are line-granularity (like the line-dedup
-        # stage they complement in Raffel et al. 2020 §2.2), while
-        # substring_dedup's rebuild is whitespace-NORMALIZED
-        # (token-granularity, newlines collapse) — running c4 after it
-        # would see every document as one line.  ExactSubstr (Lee et
-        # al. 2021) runs on the already-line-cleaned corpus, the
-        # paper's own staging.
-        extracted = c4_rewrite(extracted, text_col, c4_opts)
-        extra_gates.append("c4_keep")
-    if substring_dedup_k is not None:
-        extracted, pins = substring_dedup_rewrite(
-            extracted,
-            text_col,
-            key_cols,
-            k=substring_dedup_k,
-            keep=substring_dedup_keep,
-            pin=_pin(derived),
+        inspect.signature(c4_filters).bind(extracted, **(c4_opts or {}))
+    if policy == "clusters":
+        inspect.signature(dup_clusters).bind(
+            extracted, **(cluster_opts or {})
         )
-        stage_pins.extend(pins)
-        derived = True
-    if gopher_repetition:
-        extracted, pins = gopher_repetition_gate(
-            extracted, text_col, key_cols, pin=_pin(derived)
+    # resolves the named columns (analysis only, no job)
+    extracted.select(text_col, *key_cols, *([url_col] if url_col else []))
+
+    settings = {
+        "url_dedup": url_col,
+        "line_dedup": line_dedup or None,
+        "c4": (c4_opts or {}) if c4 else None,
+        "substring_dedup": substring_dedup_k,
+        "gopher_repetition": gopher_repetition or None,
+    }
+    derived = False  # did a branching stage produce the current frame?
+    pins: list[DataFrame] = []
+    gates: list[str] = []
+    for name, run, gate, branches in _STAGES:
+        if settings[name] is None:
+            continue
+        pin = None
+        if branches:
+            pin = "disk" if derived else None
+            if materialize == "local_checkpoint":
+                pin = materialize
+            derived = True
+        extracted, stage_pins = run(
+            extracted, settings[name], text_col, key_cols, pin
         )
-        stage_pins.extend(pins)
-        extra_gates.append("repetition_ok")
+        pins += stage_pins
+        if gate is not None:
+            gates.append(gate)
     flagged = curate_flags(
-        extracted, text_col, key_cols, min_chars, max_chars,
-        min_stopword_bp, langs, benchmark_hashes, decontam_n, decontam_seed,
-        extra_quality_cols=tuple(extra_gates),
+        extracted, text_col, key_cols, min_chars, min_stopword_bp, langs,
+        benchmark_hashes, tuple(gates),
     )
     out = curate_near_dups(
         flagged, text_col, key_cols, jaccard_threshold, materialize,
         policy, cluster_opts, minhash_k,
     )
-    if stage_pins:
-        out = attach_pins(out, *stage_pins)
-    return out
+    return attach_pins(out, *pins) if pins else out
 
 
 def curation_report(curated: DataFrame) -> DataFrame:

@@ -1316,8 +1316,8 @@ def line_dedup(
     no longer match any winner.  Pure scans / projections (parquet
     reads, the sink-staged pipeline frames this repo composes)
     re-evaluate identically and need nothing; pin or checkpoint a
-    nondeterministic input first (``curate`` does, via
-    ``line_dedup_rewrite(pin=)``)."""
+    nondeterministic input first (``curate`` does: its line stage,
+    ``curation.line_dedup_rewrite(pin=)``, pins the keyed input)."""
     # CONTRACT: id_col must be NON-NULL and unique per row (the pipeline
     # row keys are, by construction).  A NULL id would make "first
     # occurrence" ill-defined (and, since the keep-marking is an
@@ -1539,7 +1539,8 @@ def substring_dedup(
     The gram branch aggregates the SAME exploded-tokens subtree the
     keep-join probes (a self-join — PLANS.md rule); pure scans/projections
     need nothing, but pin or checkpoint a nondeterministic input first
-    (``curate`` does, via ``substring_dedup_rewrite(pin=)``).
+    (``curate``'s substring stage pins its keyed input, via
+    ``curation._join_back``).
 
     Reference scope note: cl-readability ends at extraction (no dedup
     counterpart); semantics follow the public paper + released tool.

@@ -1446,7 +1446,7 @@ def q_curation_full_planted(spark, sf_dir):
         materialize="local_checkpoint", jaccard_threshold=0.7, min_chars=30,
         line_dedup=True,
         c4=True, c4_opts={"min_sentences": 2, "badwords": ("badwordx",)},
-        substring_dedup_k=8, substring_dedup_keep="none",
+        substring_dedup_k=8,
         gopher_repetition=True, minhash_k=1,
     )
     return curated.select(

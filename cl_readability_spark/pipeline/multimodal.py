@@ -18,7 +18,7 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -58,23 +58,6 @@ IMAGE_FEATURES_SCHEMA = StructType(
         StructField("status", StringType(), False),
     ]
 )
-
-def synthetic_media(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic opaque payloads (hash-chained bytes) with typed meta."""
-    rows = []
-    kinds = ("image", "audio", "video")
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = hashlib.sha256(f"{seed}:{i}".encode()).digest() * (4 + i % 7)
-        meta = {
-            "mime": {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
-            "width": 640 if kind != "audio" else None,
-            "height": 480 if kind != "audio" else None,
-            "sample_rate": 16000 if kind != "image" else None,
-            "duration_ms": 5000 + i * 100 if kind != "image" else None,
-        }
-        rows.append((i, kind, bytearray(payload), meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def _fake_image_features(payload: bytes, dim: int = 16) -> list[float]:

@@ -103,7 +103,14 @@ def main(argv: list[str]) -> int:
 
     from pyspark.sql import functions as F
 
-    from cl_readability_spark.functions.curation import curate, curation_report
+    from cl_readability_spark.functions.curation import (
+        curate,
+        curate_flags,
+        curate_near_dups,
+        curation_report,
+        line_dedup_rewrite,
+        release_curated,
+    )
     from cl_readability_spark.pipeline.job import extract_transcripts
 
     from cl_readability_spark.pipeline.session import get_or_build_session
@@ -192,11 +199,6 @@ def main(argv: list[str]) -> int:
             # over the read-back.  Without --benchmark the repeated
             # subtree is just the cheap window and the measured trade
             # says don't pay the extra full-text write (PLANS.md).
-            from cl_readability_spark.functions.curation import (
-                curate_flags,
-                curate_near_dups,
-            )
-
             staging2 = base + ".flags1"
             flag_kwargs = {
                 k: v for k, v in kwargs.items()
@@ -205,10 +207,6 @@ def main(argv: list[str]) -> int:
             }
             flags_src = spark.read.parquet(staging1)
             if args.line_dedup:
-                from cl_readability_spark.functions.curation import (
-                    line_dedup_rewrite,
-                )
-
                 # over the STAGED scan: both line-stage branches are
                 # pruned columnar reads, no pin needed (deterministic)
                 flags_src, _ = line_dedup_rewrite(flags_src)
@@ -233,10 +231,6 @@ def main(argv: list[str]) -> int:
                 # measured at ~2.5x the staged cost (the
                 # curation_line_planted twin's materialize note); the
                 # audit columns ride along into the flagged table
-                from cl_readability_spark.functions.curation import (
-                    line_dedup_rewrite,
-                )
-
                 staging1b = base + ".linededup"
                 rewritten, _ = line_dedup_rewrite(flags_src)
                 rewritten.write.mode("overwrite").parquet(staging1b)
@@ -264,8 +258,6 @@ def main(argv: list[str]) -> int:
                 shutil.rmtree(cc_dir, ignore_errors=True)
     else:
         from pyspark import StorageLevel
-
-        from cl_readability_spark.functions.curation import release_curated
 
         curated = curate(
             extracted,

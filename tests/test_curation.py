@@ -844,12 +844,10 @@ def test_curate_substring_dedup_stage(spark):
     doc gates: text_col rewritten from surviving tokens (whitespace-
     normalized rebuild), substr_dedup audit columns added, a doc that is
     entirely a duplicated run becomes a husk absorbed by the QUALITY
-    gate (keep='none' empties every copy — the paper-faithful default),
-    and the flag composes with the manual substring_dedup_rewrite +
-    curate chain."""
-    from cl_readability_spark.functions.curation import (
-        substring_dedup_rewrite,
-    )
+    gate (every copy of a duplicated run goes — the paper-faithful
+    keep='none'), and the rewrite is the operator's own output joined
+    back on the row key."""
+    from cl_readability_spark.functions.dedup import substring_dedup
 
     # two DIFFERENT non-repeating quality bodies (GOOD repeats one
     # sentence x3, which k=8 substring dedup would itself cut)
@@ -884,28 +882,20 @@ def test_curate_substring_dedup_stage(spark):
     assert flags[0].substr_dedup_n_kept == n0 - 8
     assert flags[2].substr_dedup_n_kept == 0
 
-    # the flag is exactly the manual pre-stage composition
-    staged, pins = substring_dedup_rewrite(df, k=8)
-    assert pins == []
-    manual = curate(staged, min_stopword_bp=0, materialize="none")
-    a = sorted(
-        (r.conv_id, r.extracted_text, r.kept, r.substr_dedup_n_kept)
-        for r in manual.collect()
+    # the stage is exactly the operator's rewrite, row for row
+    operator = substring_dedup(
+        df.select(
+            F.col("conv_id").alias("doc_id"), F.col("extracted_text").alias("text")
+        ),
+        k=8,
     )
-    b = sorted(
-        (r.conv_id, r.extracted_text, r.kept, r.substr_dedup_n_kept)
+    assert {
+        r.doc_id: (r.dedup_text, r.n_tokens, r.n_kept_tokens)
+        for r in operator.collect()
+    } == {
+        r.conv_id: (r.extracted_text, r.substr_dedup_n_tokens, r.substr_dedup_n_kept)
         for r in curated.collect()
-    )
-    assert a == b
-
-    # keep='first' keeps the globally-first copy of the run (doc 0)
-    first = curate(
-        df, min_stopword_bp=0, materialize="none",
-        substring_dedup_k=8, substring_dedup_keep="first",
-    )
-    t = {r.conv_id: r.extracted_text for r in first.collect()}
-    assert t[0] == good0 + " " + run
-    assert t[1] == good1 and t[2] == ""
+    }
 
 
 def test_quality_flag_matches_filter_hof_form(spark):
@@ -1031,7 +1021,7 @@ def test_curate_c4_and_gopher_repetition_stages(spark):
         for r in curate(
             df, text_col="text", key_cols=("doc_id",), policy="clusters",
             materialize="disk", min_chars=30,
-            line_dedup=True, substring_dedup_k=8, substring_dedup_keep="none",
+            line_dedup=True, substring_dedup_k=8,
             c4=True, c4_opts={"min_sentences": 2, "badwords": ("badwordx",)},
             gopher_repetition=True, minhash_k=1,
         ).collect()
@@ -1200,3 +1190,106 @@ def test_curate_job_count_fence(spark, tmp_path):
     assert rep.dropped_exact_dup == 20 and rep.dropped_near_dup == 20
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs <= 14, jobs
+
+
+def test_curate_full_chain_job_count_fence(spark, tmp_path):
+    """A warm curate + curation_report with all five optional stages on
+    (url → line → c4 → substring → gopher repetition) launches at most
+    as many Spark jobs as the if-chain composer it replaced: 41 or 42
+    over ten warm calls in one session (7 and 3 of them), the spread
+    being one more or one fewer query-stage job that AQE submits from
+    its own threads."""
+    import random
+    import uuid
+
+    from cl_readability_spark.functions.curation import release_curated
+
+    rng = random.Random(16)
+    vocab = [f"w{i}" for i in range(400)]
+    markers = ("the", "and", "of", "to", "is", "with")
+
+    def doc():
+        return "\n".join(
+            " ".join(
+                rng.choice(markers) if rng.random() < 0.2 else rng.choice(vocab)
+                for _ in range(rng.randint(10, 16))
+            ) + "."
+            for _ in range(6)
+        )
+
+    base = [(f"doc-{i:03d}", 0, doc(), f"http://site{i}.com/p") for i in range(100)]
+    copies = [
+        (f"exact-{j:02d}", 0, base[j][2], f"http://copy{j}.com/")
+        for j in range(10)
+    ]
+    near = []
+    for j in range(10):
+        words = base[20 + j][2].split(" ")
+        words[rng.randrange(5, len(words) - 5)] = "zzplanted"
+        near.append((f"near-{j:02d}", 0, " ".join(words), None))
+    urls = [
+        (f"url-{j:02d}", 0, doc(), f"HTTP://site{40 + j}.com/p/?utm_source=x")
+        for j in range(10)
+    ]
+    src = str(tmp_path / "planted")
+    spark.createDataFrame(
+        base + copies + near + urls,
+        "conv_id string, turn_idx int, extracted_text string, url string",
+    ).coalesce(spark.sparkContext.defaultParallelism).write.parquet(src)
+
+    def run():
+        cur = curate(
+            spark.read.parquet(src), min_stopword_bp=0, url_col="url",
+            line_dedup=True, c4=True, substring_dedup_k=50,
+            gopher_repetition=True,
+        )
+        rep = curation_report(cur).collect()[0]
+        release_curated(cur)
+        return rep
+
+    run()  # warm-up, not counted
+    sc = spark.sparkContext
+    group = f"curate-chain-fence-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "warm five-stage curate + curation_report")
+    try:
+        rep = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rep.rows_in == 130
+    assert rep.rows_kept < rep.rows_in
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 42, jobs
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        {"policy": "bogus"},
+        {"materialize": "bogus"},
+        {"substring_dedup_k": 1},
+        {"jaccard_threshold": 1.5},
+        {"minhash_k": 0},
+        {"c4": True, "c4_opts": {"min_sentence": 2}},
+        {"cluster_opts": {"checkpoint_dir_typo": "/x"}},
+        {"text_col": "no_such_column"},
+    ],
+    ids=lambda bad: "-".join(bad),
+)
+def test_curate_rejects_bad_arguments_before_any_job(spark, planted, bad):
+    """Every argument is checked before the first stage: under
+    materialize="local_checkpoint" the line stage's pin is an eager
+    checkpoint job, so a late check would raise only after it ran."""
+    import uuid
+
+    from pyspark.errors import AnalysisException
+
+    kw = {"line_dedup": True, "materialize": "local_checkpoint", **bad}
+    sc = spark.sparkContext
+    group = f"curate-bad-args-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "curate with a bad argument")
+    try:
+        with pytest.raises((ValueError, TypeError, AnalysisException)):
+            curate(planted, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

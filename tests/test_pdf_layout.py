@@ -17,8 +17,55 @@ from cl_readability_spark.pipeline.pdf_layout import (
     decode_pdf_boxes,
     make_toy_pdf,
     pdf_extract,
-    synthetic_pdfs,
 )
+
+
+def synthetic_pdfs(spark, n: int = 32, seed: int = 7):
+    """Deterministic toy-PDF corpus: two-column pages with a repeated
+    header, digit-varying footer, a hyphen-split line pair, and a
+    tiny-font margin note — the layout features the assembly must handle."""
+    rows = []
+    for i in range(n):
+        rng = random.Random(f"{seed}:{i}")
+        n_pages = 2 + rng.randrange(3)
+        pages = []
+        for pg in range(n_pages):
+            boxes = [
+                (50.0, 20.0, 250.0, 32.0, 10.0, f"Acme Quarterly {i}"),
+                (280.0, 760.0, 330.0, 770.0, 9.0, f"Page {pg + 1}"),
+                (560.0, 300.0, 568.0, 380.0, 4.0, "DRAFT watermark"),
+            ]
+            for ci, x in enumerate((50.0, 320.0)):
+                y = 120.0
+                for para in range(2):
+                    n_ln = 2 + rng.randrange(3)
+                    for ln in range(n_ln):
+                        word = f"w{rng.randrange(1000)}"
+                        tail = (
+                            "contin-"
+                            if ln == 0 and para == 0
+                            else f"t{rng.randrange(100)}"
+                        )
+                        if ln == 1 and para == 0:
+                            tail = "uation here"
+                        boxes.append(
+                            (
+                                x,
+                                y,
+                                x + 220.0,
+                                y + 12.0,
+                                10.0,
+                                f"body {i} p{pg} c{ci} {word} {tail}",
+                            )
+                        )
+                        y += 14.0
+                    y += 24.0
+            rng.shuffle(boxes)
+            pages.append({"w": 612.0, "h": 792.0, "boxes": boxes})
+        rows.append((i, bytearray(make_toy_pdf(pages))))
+    return spark.createDataFrame(
+        rows, "doc_id long, payload binary"
+    )
 
 
 # Python differential oracle: the SAME layout rules implemented

@@ -514,3 +514,107 @@ def test_whale_safe_batch_bounds_configured(spark):
         "spark.sql.inMemoryColumnarStorage.batchSize",
     ):
         assert int(spark.conf.get(key)) <= 512, key
+
+
+_RETRY_SCRIPT = r"""
+import json, os, sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+from cl_readability_spark.core.config import ExtractorConfig
+from cl_readability_spark.core.text import is_probably_visible
+from cl_readability_spark.pipeline.resume import CheckpointedSink
+from cl_readability_spark.pipeline.transcripts import synthetic_transcripts
+
+out_dir = sys.argv[1]
+spark = (
+    SparkSession.builder.master("local[2,3]")  # 2 threads, 3 task attempts
+    .config("spark.driver.memory", "1g")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+
+
+# not an Exception subclass: extract() turns those into status="error" rows
+class InjectedFault(BaseException):
+    pass
+
+
+def failing_checker(mode, marker):
+    def checker(element):
+        ctx = TaskContext.get()
+        if ctx.partitionId() == 1 and ctx.attemptNumber() == 0:
+            open(marker, "w").close()
+            if mode == "raise":
+                raise InjectedFault("attempt 0 of partition 1")
+            os._exit(1)
+        return is_probably_visible(element)
+
+    return checker
+
+
+sc = spark.sparkContext
+transcripts = synthetic_transcripts(spark, 12, seed=3)
+keys = transcripts.select("conv_id", "turn_idx")
+n = transcripts.count()
+report = {"n": n}
+for mode in ("raise", "exit"):
+    marker = os.path.join(out_dir, f"fired-{mode}")
+    sink = CheckpointedSink(os.path.join(out_dir, mode))
+    config = ExtractorConfig(visibility_checker=failing_checker(mode, marker))
+    sc.setJobGroup(mode, mode)
+    rows = sink.run(transcripts, config=config, num_partitions=4)
+    tracker = sc.statusTracker()
+    failed_tasks = sum(
+        tracker.getStageInfo(stage).numFailedTasks
+        for job in tracker.getJobIdsForGroup(mode)
+        for stage in tracker.getJobInfo(job).stageIds
+    )
+    written = sink.read(spark).select("conv_id", "turn_idx")
+    (batch,) = sink.committed_batches()
+    with open(os.path.join(batch, "_MANIFEST.json")) as f:
+        manifest = json.load(f)
+    report[mode] = {
+        "fired": os.path.exists(marker),
+        "failed_tasks": failed_tasks,
+        "rows": rows,
+        "written": written.count(),
+        "distinct": written.distinct().count(),
+        "missing": keys.join(written, ["conv_id", "turn_idx"], "left_anti").count(),
+        "manifest_rows": manifest["rows"],
+    }
+print(json.dumps(report))
+spark.stop()
+"""
+
+
+def test_task_retries_write_each_key_exactly_once(tmp_path):
+    """A task that fails on its first attempt, by raising out of the
+    worker or by killing the Python worker process, is retried, and the
+    committed batch still holds every key exactly once.  The fault comes
+    from a visibility_checker that delegates to the default and fails
+    attempt 0 of the extraction stage's partition 1, in its own session
+    on a local[2,3] master (3 attempts per task)."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    env = {**os.environ, "PYTHONPATH": str(root)}
+    run = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path)],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-4000:]
+    report = json.loads(run.stdout.strip().splitlines()[-1])
+    n = report["n"]
+    assert n > 0
+    for mode in ("raise", "exit"):
+        r = report[mode]
+        assert r["fired"], f"{mode}: the fault never fired"
+        assert r == {
+            "fired": True, "failed_tasks": 1, "rows": n, "written": n, "distinct": n,
+            "missing": 0, "manifest_rows": n,
+        }, mode

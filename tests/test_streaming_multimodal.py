@@ -1,15 +1,35 @@
 """Multimodal column plumbing tests: the media schema, the synthetic
 image-feature decode and its banded-LSH near-dup composition."""
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
 from cl_readability_spark.pipeline.multimodal import (
+    MEDIA_SCHEMA,
     decode_image_features,
-    synthetic_media,
 )
 
 pytestmark = pytest.mark.spark
+
+
+def synthetic_media(spark, n: int = 64, seed: int = 42):
+    """Deterministic opaque payloads (hash-chained bytes) with typed meta."""
+    rows = []
+    kinds = ("image", "audio", "video")
+    for i in range(n):
+        kind = kinds[i % 3]
+        payload = hashlib.sha256(f"{seed}:{i}".encode()).digest() * (4 + i % 7)
+        meta = {
+            "mime": {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
+            "width": 640 if kind != "audio" else None,
+            "height": 480 if kind != "audio" else None,
+            "sample_rate": 16000 if kind != "image" else None,
+            "duration_ms": 5000 + i * 100 if kind != "image" else None,
+        }
+        rows.append((i, kind, bytearray(payload), meta))
+    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def test_media_near_dups_decodes_each_payload_exactly_once(spark):
@@ -20,11 +40,7 @@ def test_media_near_dups_decodes_each_payload_exactly_once(spark):
     The DISK_ONLY pin must hold decode at exactly ONE evaluation, and the
     pin must release through the standard handle."""
     from cl_readability_spark.functions.pins import release_pinned
-    from cl_readability_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        media_feature_near_dups,
-        synthetic_media,
-    )
+    from cl_readability_spark.pipeline.multimodal import media_feature_near_dups
 
     acc = spark.sparkContext.accumulator(0)
     media = synthetic_media(spark, n=30)
@@ -87,10 +103,7 @@ def test_media_feature_near_dups_composition(spark):
     """Multimodal features flow into the banded-LSH dedup stack: planted
     exact copies are found at cosine 1.0; output pairs respect the
     threshold."""
-    from cl_readability_spark.pipeline.multimodal import (
-        media_feature_near_dups,
-        synthetic_media,
-    )
+    from cl_readability_spark.pipeline.multimodal import media_feature_near_dups
 
     media = synthetic_media(spark, n=45)
     pairs = media_feature_near_dups(media, threshold=0.98).collect()
