@@ -65,12 +65,17 @@ from cl_readability_spark.core.text import (
 COMMAS = re.compile("[,،﹐︐︑⹁⸴⸲，]")
 
 
+# every value ExtractResult.status takes; the resume job's batch report
+# tallies exactly these
+STATUSES = ("ok", "no_content", "too_many_elements", "error")
+
+
 @dataclass
 class ExtractResult:
     """Mirror of nparse's multiple values (readability-plump.lisp:347-358)
     plus the north-star output columns and per-row metrics."""
 
-    status: str = "ok"  # ok | no_content | too_many_elements | error
+    status: str = "ok"  # one of STATUSES
     extracted_text: str | None = None
     extracted_html: str | None = None
     content_spans: list[tuple[int, int]] = field(default_factory=list)
@@ -800,16 +805,12 @@ def fix_lazy_images(root: Element) -> None:
                     elem.append_child(img)
 
 
-def clean(e: Element, tag: str) -> None:
-    """Readability._clean (readability.lisp:382-391): drop all ``tag``
-    elements, keeping allowed video embeds."""
-    clean_many(e, (tag,))
-
-
 def clean_many(e: Element, tags: tuple[str, ...]) -> None:
-    """Fused form of adjacent _clean calls: one tree scan instead of one per
-    tag.  Identical semantics — removals of distinct tags don't interact
-    (JS _removeNodes skips already-detached nodes the same way)."""
+    """Readability._clean (readability.lisp:382-391) over several tags in
+    one tree scan: drop every ``tags`` element, keeping allowed video
+    embeds.  Fusing adjacent _clean calls keeps their semantics — removals
+    of distinct tags don't interact (JS _removeNodes skips
+    already-detached nodes the same way)."""
 
     def pred(node: Element) -> bool:
         if node.tag in ("object", "embed", "iframe") and is_video_embed(node):

@@ -149,7 +149,11 @@ def metrics_rollup(result_df: DataFrame) -> DataFrame:
     """Aggregate metrics per status (plain DataFrame agg — no UDAF needed,
     SURVEY §2.8): row counts, total/avg chars in and kept, retries.  Rows
     are unordered; sort on the driver (an ``orderBy`` here doubles a
-    collect's jobs, 4 instead of 2)."""
+    collect's jobs, 4 instead of 2).  The resume job does not call this:
+    its batch report is an Observation on the write
+    (``resume._observe_statuses``), which costs no job of its own.  This
+    is the rollup for a caller that already holds an extracted frame (the
+    ``metrics_rollup`` SQL twin is its own ``groupBy`` over documents)."""
     return result_df.groupBy("status").agg(
         F.count("*").alias("rows"),
         F.sum("chars_in").alias("total_chars_in"),

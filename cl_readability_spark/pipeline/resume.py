@@ -16,10 +16,13 @@ contract on parquet, exactly as SURVEY §7 step 4 specifies the fallback:
   half-written batch has no _SUCCESS → invisible; the anti-join re-selects
   its rows.
 
-A batch commits in one pass: ``run_resumable`` reads it back once and
-derives the metrics sidecar and the batch report (one ``metrics_rollup``)
-from that read; ``CheckpointedSink.run`` writes ``_MANIFEST.json`` from
-the report, so the sink keeps no per-run state.
+A batch commits in one pass: the extracting write carries one
+``Observation`` whose per-status counts and sums are the batch report, so
+no probe, rollup or read-back runs for it.  ``CheckpointedSink.run``
+writes ``_MANIFEST.json`` from the report, so the sink keeps no per-run
+state.  The batch is read back (with the schema it was written with, so
+no inference job runs) only to append the metrics sidecar when
+``metrics_root`` is set.
 
 Swapping in Iceberg is a sink-object change only; the job DAG upstream of
 the write is identical (asserted by the plan-identity test in
@@ -34,15 +37,19 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cl_readability_spark.core.config import DEFAULT_CONFIG, ExtractorConfig
-from cl_readability_spark.pipeline.job import (
-    extract_transcripts,
-    metrics_rollup,
-    metrics_sidecar,
-)
+from cl_readability_spark.core.extract import STATUSES
+from cl_readability_spark.pipeline.job import extract_transcripts, metrics_sidecar
 from cl_readability_spark.pipeline.sink import KEY_COLUMNS, KeyedSink
+from cl_readability_spark.pipeline.udfs import EXTRACT_OUTPUT_SCHEMA
+
+# the committed-keys read schema: no inference job over the batch files
+_KEY_SCHEMA = StructType([EXTRACT_OUTPUT_SCHEMA[c] for c in KEY_COLUMNS])
+_TALLIED = ("chars_in", "chars_kept", "retries")
 
 
 def pending_rows(transcripts: DataFrame, committed: DataFrame | None) -> DataFrame:
@@ -53,6 +60,39 @@ def pending_rows(transcripts: DataFrame, committed: DataFrame | None) -> DataFra
     if committed is None:
         return transcripts
     return transcripts.join(committed, on=KEY_COLUMNS, how="left_anti")
+
+
+def _observe_statuses(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with one Observation of its row count and, per status, its
+    rows and summed ``_TALLIED`` columns; the action that consumes ``df``
+    fills it.  The metrics are task accumulators of the action's own
+    stage, so a retried task's first attempt is not counted."""
+    exprs = ["count(1) AS rows"]
+    for s in STATUSES:
+        exprs.append(f"count_if(status = '{s}') AS {s}_rows")
+        exprs += [f"sum(if(status = '{s}', {c}, 0)) AS {s}_{c}" for c in _TALLIED]
+    obs = Observation()
+    # F.expr, not the Column API: one py4j call per aggregate
+    return df.observe(obs, *(F.expr(e) for e in exprs)), obs
+
+
+def _status_report(metrics: dict) -> dict:
+    """``{status: {"rows", "chars_in", "chars_kept", "retries"}}`` for each
+    status with rows, in sorted order, from ``_observe_statuses`` metrics;
+    raises when some rows carry a status outside ``STATUSES``."""
+    by_status = {
+        s: {"rows": metrics[f"{s}_rows"],
+            **{c: metrics[f"{s}_{c}"] or 0 for c in _TALLIED}}
+        for s in sorted(STATUSES)
+        if metrics[f"{s}_rows"]
+    }
+    left = metrics["rows"] - sum(t["rows"] for t in by_status.values())
+    if left:
+        raise ValueError(
+            f"{left} of {metrics['rows']} written rows carry a status outside "
+            f"{STATUSES}; the batch is committed but its report would drop them"
+        )
+    return by_status
 
 
 def run_resumable(
@@ -70,50 +110,46 @@ def run_resumable(
     Sink-agnostic: the same call works against parquet checkpoints here
     and an Iceberg table in production.  ``num_partitions`` pins the
     extraction stage's task count; ``None`` takes
-    ``spark.sql.shuffle.partitions`` (``job.salted_repartition``)."""
+    ``spark.sql.shuffle.partitions`` (``job.salted_repartition``).
+
+    The report comes from the extracting write itself (an Observation on
+    the written frame), so a batch costs the write's jobs plus, when
+    ``metrics_root`` is set, the read-back that appends its metrics
+    sidecar.  A fully resumed rerun runs the write over zero rows and then
+    discards the empty batch (``sink.discard_batch``)."""
     spark = transcripts.sparkSession
     sink.prepare(spark)
     committed = sink.committed_keys(spark)
-    remaining = pending_rows(transcripts, committed)
-    # fully-resumed RERUN: nothing pending → do not append an empty batch
-    # (IcebergSink.write_batch REQUIRES each append to commit a child
-    # snapshot and raises otherwise; an empty append may legitimately
-    # commit nothing).  Guarded on prior commits existing: a FIRST run
-    # over an empty source still writes its empty batch so sink.read()
-    # keeps returning an empty frame rather than raising.  take(1) stops
-    # at the first pending row, so a normal run pays at most one extra
-    # partial anti-join pass.
-    if committed is not None and not remaining.take(1):
-        return {"batch": None, "rows": 0, "write_s": 0.0, "by_status": {}}
-    result = extract_transcripts(
-        remaining,
-        config=config,
-        salt_buckets=salt_buckets,
-        num_partitions=num_partitions,
-        prefilter_readerable=prefilter_readerable,
+    result, obs = _observe_statuses(
+        extract_transcripts(
+            pending_rows(transcripts, committed),
+            config=config,
+            salt_buckets=salt_buckets,
+            num_partitions=num_partitions,
+            prefilter_readerable=prefilter_readerable,
+        )
     )
     t0 = time.time()
     handle = sink.write_batch(result)
     write_s = time.time() - t0
-    # batch-scoped read-back via the sink protocol (NOT the cumulative
-    # table): the report and the metrics sidecar must cover only the rows
-    # THIS run wrote, for every sink — parquet batch dir here, Iceberg
-    # incremental snapshot read in production
-    written = sink.read_batch(spark, handle)
+    metrics = obs.get
+    # fully-resumed RERUN: nothing was pending → drop the empty batch.  A
+    # FIRST run over an empty source keeps its empty batch so sink.read()
+    # returns an empty frame rather than raising.
+    if committed is not None and not metrics["rows"]:
+        sink.discard_batch(handle)
+        return {"batch": None, "rows": 0, "write_s": write_s, "by_status": {}}
+    by_status = _status_report(metrics)
     if metrics_root is not None:
+        # batch-scoped read-back via the sink protocol (NOT the cumulative
+        # table): the sidecar covers only the rows THIS run wrote, for
+        # every sink — parquet batch dir here, Iceberg incremental
+        # snapshot read in production
+        written = sink.read_batch(spark, handle, schema=result.schema)
         metrics_sidecar(written).write.mode("append").parquet(metrics_root)
-    by_status = {
-        r["status"]: {
-            "rows": r["rows"],
-            "chars_in": r["total_chars_in"] or 0,
-            "chars_kept": r["total_chars_kept"] or 0,
-            "retries": r["total_retries"] or 0,
-        }
-        for r in sorted(metrics_rollup(written).collect(), key=lambda r: r["status"])
-    }
     return {
         "batch": handle,
-        "rows": sum(s["rows"] for s in by_status.values()),
+        "rows": metrics["rows"],
         "write_s": write_s,
         "by_status": by_status,
     }
@@ -160,15 +196,31 @@ class CheckpointedSink:
         batches = self.committed_batches()
         if not batches:
             return None
-        return spark.read.parquet(*batches).select(*KEY_COLUMNS)
+        return spark.read.schema(_KEY_SCHEMA).parquet(*batches)
 
     def write_batch(self, df: DataFrame) -> str:
+        # committed_keys reads every batch with _KEY_SCHEMA, which fails on
+        # a parquet column of another type (a bigint turn_idx from a
+        # caller's pre-extracted frame); extraction output already fits
+        schema = df.schema
+        recast = {
+            f.name: F.col(f.name).cast(f.dataType)
+            for f in _KEY_SCHEMA
+            if schema[f.name].dataType != f.dataType
+        }
+        if recast:
+            df = df.withColumns(recast)
         batch_path = self._next_batch_path()
         df.write.mode("errorifexists").parquet(batch_path)
         return batch_path
 
-    def read_batch(self, spark: SparkSession, handle: str) -> DataFrame:
-        return spark.read.parquet(handle)
+    def discard_batch(self, handle: str) -> None:
+        shutil.rmtree(handle)
+
+    def read_batch(self, spark: SparkSession, handle: str,
+                   schema: StructType | None = None) -> DataFrame:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(handle)
 
     def read(self, spark: SparkSession) -> DataFrame:
         batches = self.committed_batches()

@@ -20,6 +20,7 @@ from __future__ import annotations
 from typing import Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 KEY_COLUMNS = ["conv_id", "turn_idx"]
 
@@ -37,14 +38,22 @@ class KeyedSink(Protocol):
         """Keys already durably written, or None when nothing is."""
 
     def write_batch(self, df: DataFrame) -> str:
-        """Atomically append one batch; returns a batch/snapshot handle."""
+        """Atomically append one batch; returns a batch/snapshot handle.
+        The resume job observes its batch report on ``df``, so the write
+        must run ``df`` in exactly one action."""
 
-    def read_batch(self, spark: SparkSession, handle: str) -> DataFrame:
+    def discard_batch(self, handle: str) -> None:
+        """Drop a just-written batch that holds no rows (a fully resumed
+        rerun still runs its empty write)."""
+
+    def read_batch(self, spark: SparkSession, handle: str,
+                   schema: StructType | None = None) -> DataFrame:
         """The rows of ONE committed batch, by the handle ``write_batch``
-        returned — never the whole table.  The resume job derives its
-        batch report and the metrics sidecar from this, so a
-        full-table implementation would re-append metrics for every
-        previously committed row on every run."""
+        returned — never the whole table.  The resume job derives the
+        metrics sidecar from this, so a full-table implementation would
+        re-append metrics for every previously committed row on every
+        run.  ``schema`` is the schema the batch was written with; a
+        sink that would otherwise infer it (a Spark job) reads with it."""
 
     def read(self, spark: SparkSession) -> DataFrame:
         """The committed table contents."""
@@ -172,7 +181,14 @@ class IcebergSink:
             )
         return f"{self.table}@{'' if prev is None else prev}..{new}"
 
-    def read_batch(self, spark: SparkSession, handle: str) -> DataFrame:
+    def discard_batch(self, handle: str) -> None:
+        """No-op: the empty append's snapshot holds no rows, so it changes
+        neither the committed keys nor ``read``; a first run over an
+        empty source appends an empty frame the same way."""
+
+    def read_batch(self, spark: SparkSession, handle: str,
+                   schema: StructType | None = None) -> DataFrame:
+        """``schema`` is unused: the table carries its own."""
         table, _, rng = handle.partition("@")
         prev_s, _, new_s = rng.partition("..")
         # validate BEFORE the catalog check: degenerate handles are a

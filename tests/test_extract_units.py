@@ -8,9 +8,9 @@ from cl_readability_spark.core.dom import (
     parse_html,
 )
 from cl_readability_spark.core.extract import (
-    clean,
     clean_classes,
     clean_conditionally,
+    clean_many,
     clean_styles,
     extract,
     fix_relative_urls,
@@ -129,7 +129,7 @@ def test_clean_removes_tag_but_keeps_video_embed():
         "<div><iframe src='https://www.youtube.com/embed/a'></iframe>"
         "<iframe src='https://ads.example.com/x'></iframe></div>"
     )
-    clean(body, "iframe")
+    clean_many(body, ("iframe",))
     iframes = get_elements_by_tag(body, "iframe")
     assert len(iframes) == 1
     assert "youtube" in iframes[0].get("src")

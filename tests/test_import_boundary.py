@@ -71,8 +71,9 @@ DEF_ALLOWLIST = {
     "make_toy_pdf": "toy PDF payload writer; tests/test_pdf_layout.py",
     "pins_outstanding": "pin-leak probe for callers; tests/test_curation.py",
     "release_all_pins": "pin-leak recovery for callers; tests/test_curation.py",
-    "clean": "Readability._clean port (production calls the fused "
-    "clean_many); tests/test_extract_units.py",
+    "metrics_rollup": "per-status rollup of an extracted frame (the resume "
+    "report observes the same tallies on its write); "
+    "tests/test_spark_pipeline.py",
 }
 
 
